@@ -40,6 +40,9 @@ object DedupScalingBench {
       * the operating point that runs at 100-TB edge counts. */
     def totalNoGate: Double =
       wall("pairs") + wall.getOrElse("cc_nogate", wall("cc")) + wall("keep")
+    /** Executor CPU over the same stages as [[total]] (cc_nogate re-runs
+      * CC on the same pairs, so summing every stage counts CC twice). */
+    def cpuTotal: Long = cpu("pairs") + cpu("cc") + cpu("keep")
   }
 
   /** Salted replicated corpus (see class doc). Built OUTSIDE the measured
@@ -175,7 +178,7 @@ object DedupScalingBench {
     val thrNg = rN.docs / rN.totalNoGate
     val thr4Ng = r4N.docs / r4N.totalNoGate
     val effNg = thr4Ng / (4 * thrNg)
-    val json = f"""{"metric":"dedup_scaling_efficiency","value":$eff%.4f,"unit":"ratio","value_nogate":$effNg%.4f,"n_cores":$n,"docs":${rN.docs},"pairs":${rN.pairs},"clusters":${rN.clusters},"survivors":${rN.survivors},"secs_localN":${rN.total}%.3f,"secs_local4N":${r4N.total}%.3f,"secs_nogate_localN":${rN.totalNoGate}%.3f,"secs_nogate_local4N":${r4N.totalNoGate}%.3f,"docs_per_sec_localN":$thrN%.1f,"docs_per_sec_local4N":$thr4N%.1f,"cpu_ns_per_doc_localN":${rN.cpu.values.sum.toDouble / rN.docs}%.1f,"cpu_ns_per_doc_local4N":${r4N.cpu.values.sum.toDouble / r4N.docs}%.1f,"stages_localN":${fmtStages(rN.wall)},"stages_local4N":${fmtStages(r4N.wall)},"stage_cpu_ns_per_doc_localN":${fmtCpu(rN.cpu, rN.docs)},"stage_cpu_ns_per_doc_local4N":${fmtCpu(r4N.cpu, r4N.docs)},"sf":"$sfDir","rep":$rep}"""
+    val json = f"""{"metric":"dedup_scaling_efficiency","value":$eff%.4f,"unit":"ratio","value_nogate":$effNg%.4f,"n_cores":$n,"docs":${rN.docs},"pairs":${rN.pairs},"clusters":${rN.clusters},"survivors":${rN.survivors},"secs_localN":${rN.total}%.3f,"secs_local4N":${r4N.total}%.3f,"secs_nogate_localN":${rN.totalNoGate}%.3f,"secs_nogate_local4N":${r4N.totalNoGate}%.3f,"docs_per_sec_localN":$thrN%.1f,"docs_per_sec_local4N":$thr4N%.1f,"cpu_ns_per_doc_localN":${rN.cpuTotal.toDouble / rN.docs}%.1f,"cpu_ns_per_doc_local4N":${r4N.cpuTotal.toDouble / r4N.docs}%.1f,"stages_localN":${fmtStages(rN.wall)},"stages_local4N":${fmtStages(r4N.wall)},"stage_cpu_ns_per_doc_localN":${fmtCpu(rN.cpu, rN.docs)},"stage_cpu_ns_per_doc_local4N":${fmtCpu(r4N.cpu, r4N.docs)},"sf":"$sfDir","rep":$rep}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_DEDUP_OUT", "dedup_scaling_out.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CollectLimited, LangPplScore, ScrubFlags, TokenStats}
+import graft.functions.{CollectLimited, QfScore}
 
 /** Session extensions registering graft's native expressions for SQL use:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
-  *   SELECT lang_ppl_score(text).avg_logprob, scrub_flags(text).scrubbed_text,
-  *          token_stats(text).n_tokens, collect_limited(x, 20) FROM t
+  *   SELECT qf_score(text).avg_logprob, qf_score(text).scrubbed_text,
+  *          qf_score(text).n_tokens, collect_limited(x, 20) FROM t
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -19,15 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("lang_ppl_score"),
-      info("lang_ppl_score", "langid stopword hits + avg unigram log-prob"),
-      (args: Seq[Expression]) => LangPplScore(args.head)))
-    e.injectFunction((FunctionIdentifier("scrub_flags"),
-      info("scrub_flags", "PII/toxicity flags + scrubbed text in one pass"),
-      (args: Seq[Expression]) => ScrubFlags(args.head)))
-    e.injectFunction((FunctionIdentifier("token_stats"),
-      info("token_stats", "token/distinct/symbol counts in one scan"),
-      (args: Seq[Expression]) => TokenStats(args.head)))
+    e.injectFunction((FunctionIdentifier("qf_score"),
+      info("qf_score", "quality-filter scores: langid hits, avg unigram " +
+        "log-prob, token/distinct/symbol counts, PII/toxicity flags + " +
+        "scrubbed text in one pass"),
+      (args: Seq[Expression]) => QfScore(args.head)))
     e.injectFunction((FunctionIdentifier("collect_limited"),
       info("collect_limited", "collect_list with a hard cap"),
       (args: Seq[Expression]) => {

@@ -2,8 +2,9 @@ package graft.core
 
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,27 +43,13 @@ final class SuiteRunner(
     batchViewName: String = "batch") {
 
   import ResultFormat.{MaxResultRecords, BooleanOnly, Basic, Summary, Complete}
-  import SuiteRunner.MaxAttempts
+  import SuiteRunner.withRetry
 
   /** Index columns: the result_format parameter wins over the constructor. */
   private val indexColumns: Seq[String] =
     if (resultFormat.unexpectedIndexColumnNames.nonEmpty)
       resultFormat.unexpectedIndexColumnNames
     else idColumns
-
-  /** ≤3 attempts per Spark job, mirroring the reference's per-metric retry
-    * (validation_graph.py MAX_METRIC_COMPUTATION_RETRIES). Retries guard
-    * against transient executor failures; deterministic errors just fail
-    * three times and surface the last exception. */
-  private def withRetry[T](f: => T): T = {
-    var attempt = 1
-    var last: Throwable = null
-    while (attempt <= MaxAttempts) {
-      try return f
-      catch { case t: Throwable => last = t; attempt += 1 }
-    }
-    throw last
-  }
 
   def run(df: DataFrame, suite: Suite): SuiteResult =
     runAll(df, Seq(suite)).head
@@ -607,6 +594,18 @@ final class SuiteRunner(
 object SuiteRunner {
   /** validation_graph.py:48 MAX_METRIC_COMPUTATION_RETRIES = 3. */
   val MaxAttempts = 3
+
+  /** ≤3 attempts per Spark job, mirroring the reference's per-metric retry
+    * (validation_graph.py MAX_METRIC_COMPUTATION_RETRIES). Only transient
+    * failures are retried: an AnalysisException (bad column, bad suite
+    * parameter) is deterministic and surfaces on the first attempt, and a
+    * fatal error (OOM, interrupt, linkage) is never caught. */
+  private[graft] def withRetry[T](f: => T, attempt: Int = 1): T =
+    try f
+    catch {
+      case e: AnalysisException => throw e
+      case NonFatal(_) if attempt < MaxAttempts => withRetry(f, attempt + 1)
+    }
 
   /** NUL-framed marker for a null unexpected value riding collect_limited
     * (which drops real nulls); mapped back to null at EVR build. */

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.regex.{Matcher, Pattern}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -9,15 +11,27 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The whole per-turn scoring pass as ONE expression: language-ID +
-  * unigram log-prob (LangPplScore), token statistics (TokenStats), and the
-  * PII/toxicity scrub (ScrubFlags) over a single UTF8String→String decode
-  * and a single character loop for the two tokenizations.
+  * unigram log-prob, token statistics, and the PII/toxicity scrub over a
+  * single UTF8String→String decode and a single character loop for the two
+  * tokenizations. It is the only scoring kernel: the batch
+  * `QualityFilter(t)` plan and the streaming filter-agreement monitor both
+  * derive every per-turn column from it.
   *
-  * Exactly equivalent to evaluating the three component expressions
-  * (spec-enforced) — the fusion exists because the pipeline is
-  * DRAM-bandwidth-bound at 32 threads: three separate expressions decode
-  * every text three times and allocate three output rows; this does one of
-  * each.
+  * Semantics (QualityFilterSpec pins them against a reference built from
+  * Spark built-ins, and the DuckDB oracle against `TranscriptOracles`):
+  *  - words: maximal ASCII letter runs, lowercased — `lower(text)` split
+  *    on `[^a-z]+`; `en_hits` counts stopwords, `avg_logprob` averages the
+  *    unigram table (an OOV word scores `OovLogProb`, as does a text with
+  *    no words);
+  *  - tokens: maximal runs of non-space characters (`split(trim(text),
+  *    " +")`), `n_distinct` exact; `n_symbols` counts codepoints outside
+  *    `[a-zA-Z0-9 ]`;
+  *  - scrub: the chained `regexp_replace` order email → ssn → phone →
+  *    tox, with the four `*_found` flags taken on the ORIGINAL text.
+  *
+  * One expression rather than three because the pass is
+  * DRAM-bandwidth-bound at 32 threads: separate expressions decode every
+  * text once each and allocate one output row each.
   *
   * Codegen: emits a direct static call to [[QfScore.evalUtf8]] on the
   * child's UTF8String — the expression stays inside WholeStageCodegen with
@@ -55,7 +69,29 @@ case class QfScore(child: Expression) extends UnaryExpression {
 }
 
 object QfScore {
-  import LangPplScore.{Oov, Words}
+  import graft.transcripts.QualityFilter
+
+  private val Oov: Double = QualityFilter.OovLogProb
+  /** Model as a zero-allocation char-range table: (log-prob, is-stopword)
+    * per vocab word; every stopword is a vocab entry by construction. */
+  private val Words: TextKernels.WordTable =
+    new TextKernels.WordTable(QualityFilter.unigramLogProb.map { case (k, v) =>
+      k -> (v, QualityFilter.enStopwords.contains(k))
+    })
+
+  /** Reusable exact distinct-token scratch (zero steady-state allocation). */
+  private val seenLocal = new ThreadLocal[TextKernels.TokenSet] {
+    override def initialValue(): TextKernels.TokenSet = new TextKernels.TokenSet
+  }
+
+  /** Scrub matchers in replacement order; ThreadLocal and reset per row,
+    * so no Matcher allocation. */
+  private val patterns: Array[Pattern] = Array(QualityFilter.EmailRe,
+    QualityFilter.SsnRe, QualityFilter.PhoneRe, QualityFilter.ToxRe)
+    .map(Pattern.compile)
+  private val matchers = new ThreadLocal[Array[Matcher]] {
+    override def initialValue(): Array[Matcher] = patterns.map(_.matcher(""))
+  }
 
   /** Static per-row kernel (called from generated code). */
   def evalUtf8(v: UTF8String): InternalRow = {
@@ -70,8 +106,8 @@ object QfScore {
     val len = text.length
 
     // one loop, two tokenizations (both zero-allocation char-range kernels):
-    //  - letter runs (lowercased) for langid/log-prob, as in LangPplScore
-    //  - space-delimited tokens + symbol chars, as in TokenStats
+    //  - letter runs (lowercased) for langid/log-prob
+    //  - space-delimited tokens + symbol chars for the token statistics
     var hits = 0
     var lp = 0.0
     var nWords = 0
@@ -81,7 +117,7 @@ object QfScore {
     var wordStart = -1
     var hasAt = false
     var hasDigit = false
-    val seen = TokenStats.seenLocal.get()
+    val seen = seenLocal.get()
     seen.reset()
     var i = 0
     while (i <= len) {
@@ -115,18 +151,21 @@ object QfScore {
       i += 1
     }
 
-    // scrub (same ThreadLocal matchers + replacement order as ScrubFlags).
-    // Each matcher runs only when its NECESSARY character class was seen in
-    // the main loop — exact gates derived from the fixed patterns (EmailRe
-    // requires '@', SsnRe/PhoneRe require a digit, ToxRe the literal
-    // "damn"), so the no-PII majority of rows pays zero regex passes.
-    val ms = ScrubFlags.sharedMatchers.get()
+    // scrub. Each matcher runs only when its NECESSARY character class was
+    // seen in the main loop — exact gates derived from the fixed patterns
+    // (EmailRe requires '@', SsnRe/PhoneRe require a digit, ToxRe the
+    // literal "damn"), so the no-PII majority of rows pays zero regex passes.
+    val ms = matchers.get()
     val email = hasAt && ms(0).reset(text).find()
     val ssn = hasDigit && ms(1).reset(text).find()
     val phone = hasDigit && ms(2).reset(text).find()
     val tox = text.contains("damn") && ms(3).reset(text).find()
     var s = text
-    // see ScrubFlags: once mutated, later patterns re-run unconditionally
+    // replacement order mirrors the chained regexp_replace formulation:
+    // email → ssn → phone → tox. Once the text has MUTATED, later patterns
+    // must re-run unconditionally — an earlier substitution can create a
+    // word boundary that enables a later match (e.g. "[EMAIL]555-…" where
+    // "…com555-…" had none), exactly as the chained form would scrub.
     if (email) s = ms(0).reset(s).replaceAll("[EMAIL]")
     if (ssn || (s ne text)) s = ms(1).reset(s).replaceAll("[SSN]")
     if (phone || (s ne text)) s = ms(2).reset(s).replaceAll("[PHONE]")

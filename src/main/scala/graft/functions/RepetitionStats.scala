@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: pure map-side, zero shuffle, zero steady-state allocation
   * (two ThreadLocal open-addressing token tables reused across rows);
-  * codegen emits a direct static call like TokenStats. */
+  * codegen emits a direct static call like QfScore. */
 case class RepetitionStats(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = StructType(Seq(

@@ -1,7 +1,8 @@
 package graft.functions
 
-/** Zero-allocation per-row text kernels shared by the native scoring
-  * expressions (QfScore / TokenStats / LangPplScore).
+/** Zero-allocation per-row text kernels used by the native text
+  * expressions (QfScore's vocab table and distinct-token set;
+  * RepetitionStats' word and 2-gram sets).
   *
   * The scoring pass was measured allocation-bound at 32 threads: one
   * String per word (StringBuilder.toString for the vocab lookup) plus one

@@ -34,7 +34,14 @@ object Lsh {
     * Jaccard threshold shares many below-knee shingles, so recall is
     * preserved (DedupSpec pins this on planted boilerplate). With no knee
     * (no boilerplate in the top-k) the default cap stands. The census is
-    * a top-k result (≤ k rows), so the collect here is bounded. */
+    * a top-k result (≤ k rows), so the collect here is bounded.
+    *
+    * Limits: only a knee INSIDE the top-k is seen — when k does not reach
+    * past the boilerplate into the organic tail, the boilerplate/organic
+    * boundary is missed and the cap lands between two boilerplate tiers
+    * or stays at the default. The cap is an Int: a knee whose lower side
+    * exceeds Int.MaxValue documents clamps to Int.MaxValue rather than
+    * wrapping (a negative cap would prune every gram). */
   def tunedMaxDf(census: org.apache.spark.sql.DataFrame,
       minKneeRatio: Double = 4.0): Int = {
     val dfs = census.select("n_docs").collect().map(_.getLong(0))
@@ -47,7 +54,8 @@ object Lsh {
       val lo = math.max(dfs(i + 1), 1L).toDouble
       if (hi / lo >= bestRatio) {
         bestRatio = hi / lo
-        cap = dfs(i + 1).toInt // prune strictly-above: df > cap drops
+        // prune strictly-above: df > cap drops
+        cap = math.min(dfs(i + 1), Int.MaxValue.toLong).toInt
       }
       i += 1
     }

@@ -130,7 +130,7 @@ object StreamingQueries {
       // proxy — the monitor that catches a proxy filter drifting away
       // from the full one
       val staged = stage(s, dir)
-      val qf = StreamingValidate.qualityFilterStream(replay(s, staged))
+      val qf = QualityFilter.withScoresFused(replay(s, staged))
       val label = col("lang_ok") && col("ppl_ok") && col("len_ok") &&
         col("symbol_ok") && col("rep_ok") && !col("tox_found")
       val pred = col("lang_ok") && col("len_ok")

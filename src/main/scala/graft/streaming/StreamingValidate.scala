@@ -18,9 +18,10 @@ import graft.transcripts.QualityFilter
   *    (role-sequence validity) runs as `flatMapGroupsWithState` keyed by
   *    conv_id, carrying (last_turn_idx, last_role) per conversation —
   *    the streaming analogue of the batch lag window.
-  *  - `qualityFilterStream`: all stateless quality-filter columns (langid,
-  *    ppl, heuristics, scrub) applied to a stream; role_seq is left to the
-  *    stateful operator.
+  *
+  * Every other quality-filter column is stateless, so a stream takes it
+  * from the batch kernel unchanged: `QualityFilter.withScoresFused(stream)`
+  * (StreamingSpec pins it row for row against the batch pipeline).
   */
 object StreamingValidate {
 
@@ -72,13 +73,6 @@ object StreamingValidate {
           prev.foreach(state.update)
           out.iterator
       }
-  }
-
-  /** Stateless quality-filter columns on a stream (no lag window). */
-  def qualityFilterStream(stream: DataFrame): DataFrame = {
-    val scored = QualityFilter.withLangPpl(stream)
-    // withRules without the role-sequence window: recompute its stateless parts
-    QualityFilter.withRulesStateless(scored)
   }
 
   /** Windowed filter-agreement monitor: confusion counts between a

@@ -1,6 +1,6 @@
 package graft.transcripts
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -10,19 +10,19 @@ import org.apache.spark.sql.types._
   * Recasts the reference's expectation-suite model (SURVEY.md §1) as one
   * Catalyst column-expression DAG over transcript turns:
   *
-  *   - language-ID + n-gram log-prob scoring: ONE `mapPartitions` pass with
-  *     two broadcast models (stopword set + unigram log-prob table). Model
-  *     log-probs are exact multiples of 0.5, so score sums are exact in IEEE
-  *     double regardless of summation order — bit-reproducible across
-  *     engines and partitionings.
-  *   - Gopher/C4-style heuristics (token count, symbol ratio, repetition) as
-  *     pure codegen'd `functions._` columns.
   *   - role-sequence validity via `Window.partitionBy(conv_id)
   *     .orderBy(turn_idx)` (same primitive as the reference's
   *     column_values_increasing, column_values_increasing.py:96-99, but
   *     conversation-partitioned and therefore shuffle-parallel).
-  *   - compiled-regex PII/toxicity scrub emitting `scrubbed_text` plus
-  *     per-rule flags and the final `keep` label.
+  *   - every other rule from ONE native expression per turn
+  *     (graft.functions.QfScore): language-ID + unigram log-prob over two
+  *     code-defined models (stopword set + log-prob table), Gopher/C4-style
+  *     heuristics (token count, symbol ratio, repetition), and the
+  *     compiled-regex PII/toxicity scrub emitting `scrubbed_text` plus
+  *     per-rule flags; the final `keep` label combines them. Model
+  *     log-probs are exact multiples of 0.5, so score sums are exact in
+  *     IEEE double regardless of summation order — bit-reproducible across
+  *     engines and partitionings.
   *
   * Every rule is deterministic and integer/boolean-valued (or exact-double),
   * so the DuckDB oracle reproduces it bit-for-bit.
@@ -66,93 +66,7 @@ object QualityFilter {
   val ToxRe = "\\bdamn\\b"
   val AllowedRoles = Seq("system", "user", "assistant", "tool")
 
-  /** Stage 1: langid + unigram log-prob scoring. Default path is the native
-    * Catalyst expression (graft.functions.LangPplScore — single in-place
-    * pass, no object boundary); the mapPartitions-over-broadcast variant
-    * below is semantically identical (spec-enforced) and remains for
-    * workloads needing arbitrary JVM models. Adds lang_ok, ppl_ok,
-    * avg_logprob. */
-  def withLangPpl(df: DataFrame): DataFrame = {
-    val score = graft.functions.LangPplScore.lang_ppl_score(col("text"))
-    df.withColumn("__score", score)
-      .withColumn("lang_ok", col("__score.en_hits") >= lit(MinStopwordHits))
-      .withColumn("ppl_ok", col("__score.avg_logprob") >= lit(PplThreshold))
-      .withColumn("avg_logprob", col("__score.avg_logprob"))
-      .drop("__score")
-  }
-
-  /** mapPartitions formulation of stage 1 (hash lookups against broadcast
-    * models, batched per partition — the shape a KenLM-style trie scorer
-    * would use). Kept equivalent to `withLangPpl` by QualityFilterSpec. */
-  def withLangPplMapPartitions(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val bcVocab = spark.sparkContext.broadcast(unigramLogProb)
-    val bcStop = spark.sparkContext.broadcast(enStopwords)
-    val outSchema = df.schema
-      .add("lang_ok", BooleanType, nullable = false)
-      .add("ppl_ok", BooleanType, nullable = false)
-      .add("avg_logprob", DoubleType, nullable = false)
-    val textIdx = df.schema.fieldIndex("text")
-    df.mapPartitions { it =>
-      val vocab = bcVocab.value
-      val stop = bcStop.value
-      it.map { r =>
-        val text = if (r.isNullAt(textIdx)) "" else r.getString(textIdx)
-        val tokens = text.toLowerCase(java.util.Locale.ROOT)
-          .split("[^a-z]+").filter(_.nonEmpty)
-        var hits = 0
-        var lp = 0.0
-        var i = 0
-        while (i < tokens.length) {
-          val w = tokens(i)
-          if (stop.contains(w)) hits += 1
-          lp += vocab.getOrElse(w, OovLogProb)
-          i += 1
-        }
-        val avg = if (tokens.isEmpty) OovLogProb else lp / tokens.length
-        Row.fromSeq(r.toSeq ++ Seq(hits >= MinStopwordHits, avg >= PplThreshold, avg))
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Stage 2a: all stateless rule columns (heuristics, PII/toxicity flags,
-    * scrub) — usable unchanged on a streaming DataFrame. */
-  def withRulesStateless(df: DataFrame): DataFrame = {
-    // Single-pass native expressions: TokenStats replaces split +
-    // array_distinct + regexp_replace-based symbol counting; ScrubFlags
-    // replaces rlike×4 + regexp_replace×4. The column-chained formulation
-    // allocates several intermediate copies of every text, which made the
-    // pipeline DRAM-bandwidth-bound (0.5 scaling efficiency at 8→32
-    // threads). Derived flags reference the struct COLUMNS so the expensive
-    // expressions evaluate exactly once per row (CollapseProject keeps
-    // multi-referenced non-cheap aliases materialized).
-    import graft.functions.ScrubFlags.scrub_flags
-    import graft.functions.TokenStats.token_stats
-    val withStructs = df
-      .withColumn("__ts", token_stats(col("text")))
-      .withColumn("__scrub", scrub_flags(col("text")))
-    val nTok = col("__ts.n_tokens")
-    val textLen = length(col("text"))
-    val symRatio = when(textLen === 0, lit(1.0)).otherwise(
-      col("__ts.n_symbols").cast(DoubleType) / textLen.cast(DoubleType))
-    val distinctRatio = when(nTok === 0, lit(0.0)).otherwise(
-      col("__ts.n_distinct").cast(DoubleType) / nTok.cast(DoubleType))
-    withStructs
-      .withColumn("n_tokens", nTok)
-      .withColumn("len_ok", nTok.between(3, 64) && textLen <= lit(500))
-      .withColumn("symbol_ok", symRatio <= lit(0.25))
-      .withColumn("rep_ok", nTok < lit(8) || distinctRatio >= lit(0.5))
-      .withColumn("email_found", col("__scrub.email_found"))
-      .withColumn("phone_found", col("__scrub.phone_found"))
-      .withColumn("ssn_found", col("__scrub.ssn_found"))
-      .withColumn("tox_found", col("__scrub.tox_found"))
-      .withColumn("scrubbed_text", col("__scrub.scrubbed_text"))
-      .withColumn("pii_found",
-        col("email_found") || col("phone_found") || col("ssn_found"))
-      .drop("__ts", "__scrub")
-  }
-
-  /** Stage 2b: role-sequence validity via the conv_id window (batch only —
+  /** Role-sequence validity via the conv_id window (batch only —
     * the lag window needs the whole conversation; streams use
     * graft.streaming.StreamingValidate.roleSeqStateful instead). */
   def withRoleSeq(df: DataFrame): DataFrame = {
@@ -173,17 +87,14 @@ object QualityFilter {
       col("lang_ok") && col("ppl_ok") && col("len_ok") && col("symbol_ok") &&
         col("rep_ok") && col("role_seq_ok") && !col("tox_found"))
 
-  private[graft] def withKeepForTest(df: DataFrame): DataFrame = withKeep(df)
-
-  /** Stage 2: stateless rules + role-sequence window + final keep label. */
-  def withRules(df: DataFrame): DataFrame =
-    withKeep(withRulesStateless(withRoleSeq(df)))
-
-  /** All scoring columns from ONE fused expression (graft.functions.
-    * QfScore): langid + log-prob + token stats + scrub over a single text
-    * decode and character loop. Column set identical to
-    * withLangPpl ∘ withRulesStateless (spec-enforced); the staged variants
-    * remain for streaming and for swapping individual models. */
+  /** All stateless scoring columns from ONE fused expression
+    * (graft.functions.QfScore): langid + log-prob + token stats + scrub
+    * over a single text decode and character loop. Adds lang_ok, ppl_ok,
+    * avg_logprob, n_tokens, len_ok, symbol_ok, rep_ok, the four *_found
+    * flags, scrubbed_text and pii_found. No window or state, so it runs
+    * unchanged on a streaming DataFrame. Derived flags reference the
+    * struct COLUMN so the kernel evaluates exactly once per row
+    * (CollapseProject keeps multi-referenced non-cheap aliases). */
   def withScoresFused(df: DataFrame): DataFrame = {
     import graft.functions.QfScore.qf_score
     val withQ = df.withColumn("__qf", qf_score(col("text")))

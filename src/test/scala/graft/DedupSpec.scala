@@ -577,6 +577,18 @@ class DedupSpec extends AnyFunSuite {
     assert(Lsh.tunedMaxDf(flat) == Lsh.DefaultMaxDf)
   }
 
+  test("tunedMaxDf: a knee above Int.MaxValue documents clamps, never wraps") {
+    import graft.operators.Lsh
+    // 3e9 as an Int wraps to -1294967296, which would prune every gram
+    val census = Seq(("a b c", 30000000000L), ("b c d", 3000000000L),
+      ("c d e", 2900000000L)).toDF("gram", "n_docs")
+    assert(Lsh.tunedMaxDf(census) == Int.MaxValue)
+    // a lower knee still wins over the clamped one
+    val lower = Seq(("a b c", 30000000000L), ("b c d", 3000000000L),
+      ("c d e", 7L)).toDF("gram", "n_docs")
+    assert(Lsh.tunedMaxDf(lower) == 7)
+  }
+
   test("ngram census: document frequency, deterministic ties, heap top-k") {
     val d = Seq(
       // "a b c" appears in docs 1,2,3 (TWICE in doc 1 — must count once),

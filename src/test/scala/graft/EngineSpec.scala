@@ -557,6 +557,22 @@ class EngineSpec extends AnyFunSuite {
       ExpectColumnValuesToBeBetween("fx", Some(1), Some(10))))).results.head
     assert(!r2.success && r2.exception.isDefined)
     EngineSpec.failuresLeft.set(0)
+    // attempts, counted on the retry wrapper itself
+    var n = 0
+    assert(SuiteRunner.withRetry { n += 1; if (n < 3) sys.error("transient"); n } == 3)
+    n = 0
+    intercept[RuntimeException](SuiteRunner.withRetry[Unit] { n += 1; sys.error("stuck") })
+    assert(n == SuiteRunner.MaxAttempts)
+    // an analysis error is deterministic: one attempt
+    n = 0
+    intercept[org.apache.spark.sql.AnalysisException](
+      SuiteRunner.withRetry { n += 1; df.select("no_such_column").head() })
+    assert(n == 1)
+    // a fatal error is never caught
+    n = 0
+    intercept[OutOfMemoryError](
+      SuiteRunner.withRetry[Unit] { n += 1; throw new OutOfMemoryError("injected") })
+    assert(n == 1)
   }
 
   test("fused pass is sums-only: codegen'd HashAggregate, no ObjectHashAggregate") {

@@ -18,10 +18,10 @@ class ExtensionsSpec extends AnyFunSuite {
       .createOrReplaceTempView("t")
     val r = spark.sql(
       """SELECT id,
-        |  lang_ppl_score(text).avg_logprob AS lp,
-        |  scrub_flags(text).scrubbed_text AS scrubbed,
-        |  scrub_flags(text).phone_found AS phone,
-        |  token_stats(text).n_tokens AS nt
+        |  qf_score(text).avg_logprob AS lp,
+        |  qf_score(text).scrubbed_text AS scrubbed,
+        |  qf_score(text).phone_found AS phone,
+        |  qf_score(text).n_tokens AS nt
         |FROM t ORDER BY id""".stripMargin).collect()
     assert(r(0).getAs[Double]("lp") == -11.0 / 5)
     assert(r(1).getAs[Double]("lp") == -7.0)
@@ -39,9 +39,9 @@ class ExtensionsSpec extends AnyFunSuite {
     // hash table (4× the aux arrays), overflowing at token 257
     val big = (0 until 5000).map(i => s"tok$i").mkString(" ")
     val r = Seq(big, "small text").toDF("text")
-      .selectExpr("token_stats(text).n_tokens AS nt",
-        "token_stats(text).n_distinct AS nd",
-        "lang_ppl_score(text).avg_logprob AS lp")
+      .selectExpr("qf_score(text).n_tokens AS nt",
+        "qf_score(text).n_distinct AS nd",
+        "qf_score(text).avg_logprob AS lp")
       .collect()
     assert(r(0).getAs[Int]("nt") == 5000)
     assert(r(0).getAs[Int]("nd") == 5000)

@@ -104,25 +104,98 @@ class QualityFilterSpec extends AnyFunSuite {
     assert(r.getAs[Double]("avg_logprob") == -11.0 / 5)
   }
 
-  test("expression scorer ≡ mapPartitions scorer (lang_ok, ppl_ok, avg_logprob)") {
-    val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val cols = Seq("conv_id", "turn_idx", "lang_ok", "ppl_ok", "avg_logprob")
-    val a = QualityFilter.withLangPpl(t).select(cols.head, cols.tail: _*)
-    val b = QualityFilter.withLangPplMapPartitions(t).select(cols.head, cols.tail: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  /** Independent reference for every QualityFilter column plus the
+    * kernel's raw counts (en_hits, n_distinct, n_symbols), written with
+    * Spark built-ins only (split, array_distinct, regexp_replace, rlike,
+    * aggregate over a literal vocab map) — the formulation the DuckDB
+    * oracle (TranscriptOracles.qfTurnsSql) uses, sharing none of the
+    * QfScore kernel's loops. */
+  private def referenceFilter(t: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import QualityFilter._
+    val text = col("text")
+    val words = filter(split(lower(text), "[^a-z]+"), w => w =!= "")
+    val tokens = split(trim(text), " +")
+    val nTok = when(trim(text) === "", 0).otherwise(size(tokens))
+    val nDistinct = when(trim(text) === "", 0).otherwise(size(array_distinct(tokens)))
+    val vocab = typedLit(unigramLogProb)
+    val stop = typedLit(enStopwords.toSeq)
+    val lpSum = aggregate(words, lit(0.0),
+      (acc, w) => acc + coalesce(try_element_at(vocab, w), lit(OovLogProb)))
+    val avg = when(size(words) === 0, lit(OovLogProb)).otherwise(lpSum / size(words))
+    val nSym = length(regexp_replace(text, "[a-zA-Z0-9 ]", ""))
+    val symRatio = when(length(text) === 0, lit(1.0))
+      .otherwise(nSym.cast("double") / length(text).cast("double"))
+    val distinctRatio = when(nTok === 0, lit(0.0))
+      .otherwise(nDistinct.cast("double") / nTok.cast("double"))
+    val prev = lag(col("role"), 1).over(
+      Window.partitionBy(col("conv_id")).orderBy(col("turn_idx")))
+    val scrubbed = Seq(EmailRe -> "[EMAIL]", SsnRe -> "[SSN]",
+      PhoneRe -> "[PHONE]", ToxRe -> "[REDACTED]")
+      .foldLeft(text) { case (c, (re, rep)) => regexp_replace(c, re, rep) }
+    t.withColumn("en_hits", size(filter(words, w => array_contains(stop, w))))
+      .withColumn("n_distinct", nDistinct)
+      .withColumn("n_symbols", nSym)
+      .withColumn("role_seq_ok", col("role").isin(AllowedRoles: _*) &&
+        (col("turn_idx") =!= 0 || col("role") === "system") &&
+        (prev.isNull || col("role") =!= prev || col("role") === "tool"))
+      .withColumn("lang_ok", col("en_hits") >= MinStopwordHits)
+      .withColumn("avg_logprob", avg)
+      .withColumn("ppl_ok", avg >= PplThreshold)
+      .withColumn("n_tokens", nTok)
+      .withColumn("len_ok", nTok.between(3, 64) && length(text) <= 500)
+      .withColumn("symbol_ok", symRatio <= 0.25)
+      .withColumn("rep_ok", nTok < 8 || distinctRatio >= 0.5)
+      .withColumn("email_found", text.rlike(EmailRe))
+      .withColumn("phone_found", text.rlike(PhoneRe))
+      .withColumn("ssn_found", text.rlike(SsnRe))
+      .withColumn("tox_found", text.rlike(ToxRe))
+      .withColumn("pii_found",
+        col("email_found") || col("phone_found") || col("ssn_found"))
+      .withColumn("scrubbed_text", scrubbed)
+      .withColumn("keep", col("lang_ok") && col("ppl_ok") && col("len_ok") &&
+        col("symbol_ok") && col("rep_ok") && col("role_seq_ok") && !col("tox_found"))
   }
 
-  test("fused QfScore pipeline ≡ staged expressions on every column") {
+  test("QualityFilter ≡ built-in reference on every column") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    // the synthesized corpus plants every rule; the hand rows add the
+    // edges: blank text, case, runs of spaces, supplementary-plane and
+    // non-ASCII symbols, and PII made adjacent by an earlier substitution
+    val edges = Seq(
+      "", "   ", "The  QUICK brown   Fox and the dog",
+      "we \uD83D\uDE00 discussed caf\u00e9 the plan with the team",
+      "reach me a@b.com555-123-4567 and the dog",
+      "a@b.co 219-09-9999 x 555-123-4567 damn the damned plan",
+      "damn damn damn", "__ -- the and __ ~~ ~~")
+      .zipWithIndex.map { case (txt, i) => Turn("edge", i, "system", txt, null, ts(i)) }
+      .toDF()
     val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val staged = QualityFilter.withKeepForTest(
-      QualityFilter.withRulesStateless(
-        QualityFilter.withLangPpl(QualityFilter.withRoleSeq(t))))
-    val fused = QualityFilter(t)
-    assert(staged.columns.sorted.toSeq == fused.columns.sorted.toSeq)
-    val cols = fused.columns.sorted.toSeq
-    val a = fused.select(cols.head, cols.tail: _*)
-    val b = staged.select(cols.head, cols.tail: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+      .unionByName(edges)
+    // the raw counts reach the output only through thresholds, so they are
+    // pinned too: an off-by-one symbol count must not hide below 0.25
+    val got = QualityFilter(t)
+      .withColumn("__qf", graft.functions.QfScore.qf_score(col("text")))
+      .withColumn("en_hits", col("__qf.en_hits"))
+      .withColumn("n_distinct", col("__qf.n_distinct"))
+      .withColumn("n_symbols", col("__qf.n_symbols"))
+      .drop("__qf")
+    val want = referenceFilter(t)
+    assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq)
+    val cols = got.columns.sorted.toSeq
+    val a = got.select(cols.head, cols.tail: _*)
+    val b = want.select(cols.head, cols.tail: _*)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      a.exceptAll(b).limit(5).collect().mkString("\n"))
+    // the compare covers every rule outcome, not only the common one
+    val flags = Seq("lang_ok", "ppl_ok", "len_ok", "symbol_ok", "rep_ok",
+      "email_found", "phone_found", "ssn_found", "tox_found", "keep")
+    val r = got.agg(count(lit(1)), flags.map(f => sum(col(f).cast("int"))): _*).head()
+    flags.zipWithIndex.foreach { case (f, i) =>
+      val n = r.getLong(i + 1)
+      assert(n > 0 && n < r.getLong(0), s"$f is constant over the fixture")
+    }
   }
 
   test("adjacent PII: earlier substitution enables later pattern, as chained") {
@@ -131,14 +204,10 @@ class QualityFilterSpec extends AnyFunSuite {
     // substitution creates one — the chained regexp_replace (and the DuckDB
     // oracle) scrub the phone, so the engine must too
     val d = Seq((1L, "reach me a@b.com555-123-4567")).toDF("id", "text")
-    val r = d.select(graft.functions.ScrubFlags.scrub_flags(col("text")).as("s"))
-      .select(col("s.scrubbed_text"), col("s.phone_found")).head()
-    assert(r.getString(0) == "reach me [EMAIL][PHONE]", r.getString(0))
-    assert(!r.getBoolean(1)) // flag reflects the ORIGINAL text (no \b there)
-    // fused expression behaves identically
     val q = d.select(graft.functions.QfScore.qf_score(col("text")).as("s"))
-      .select(col("s.scrubbed_text")).head()
-    assert(q.getString(0) == "reach me [EMAIL][PHONE]")
+      .select(col("s.scrubbed_text"), col("s.phone_found")).head()
+    assert(q.getString(0) == "reach me [EMAIL][PHONE]", q.getString(0))
+    assert(!q.getBoolean(1)) // flag reflects the ORIGINAL text (no \b there)
   }
 
   test("replicated user_ids keep distinct conversations (no lpad truncation)") {

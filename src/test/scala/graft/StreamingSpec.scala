@@ -88,16 +88,27 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateless quality-filter columns run on a stream") {
+    // the stream takes every stateless column from the batch kernel; it
+    // must match the batch pipeline row for row on each of them (role_seq_ok
+    // is the stateful operator's, and keep depends on it)
     val batch = spark.read.parquet(stagingDir)
-    val stream = spark.readStream.schema(batch.schema).parquet(stagingDir)
-    val q = StreamingValidate.qualityFilterStream(stream)
+    val stream = spark.readStream.schema(batch.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stagingDir)
+    val q = QualityFilter.withScoresFused(stream)
       .writeStream.outputMode("append").format("memory").queryName("qf")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    val got = spark.sql("SELECT count(*), sum(CASE WHEN pii_found THEN 1 ELSE 0 END) FROM qf").head()
     val want = QualityFilter(batch)
-    assert(got.getLong(0) == want.count())
-    assert(got.getLong(1) == want.filter("pii_found").count())
+    val cols = want.columns.filterNot(Set("role_seq_ok", "keep"))
+    val got = spark.table("qf")
+    assert(got.columns.toSeq == cols.toSeq)
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) -> r)
+    val g = byKey(got)
+    val w = byKey(want.select(cols.head, cols.tail: _*)).toMap
+    assert(g.length == w.size && g.toMap.size == g.length)
+    val diff = g.collect { case (k, r) if !w.get(k).contains(r) => (k, r, w.get(k)) }
+    assert(diff.isEmpty, diff.take(3).mkString("\n"))
   }
 
   test("categorical drift monitor: matching window clean, drifted window flags") {

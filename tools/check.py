@@ -2,7 +2,11 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB against the sfDir parquet tables and compare (rows, schema, values)
 with the engine's Verify output parquet. Columns are sorted by name before
-comparison, mirroring the driver."""
+comparison.
+
+Every oracle in oracle_sql.json must have an output directory: Verify deletes
+the directory of a query that failed, so a missing one is a FAIL, never a
+silent pass."""
 import json, math, sys, glob, os
 import duckdb
 
@@ -16,10 +20,11 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
 
 oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails, passes, skips = [], [], []
-for name in sorted(os.listdir(out_dir)):
+outputs = {n for n in os.listdir(out_dir) if os.path.isdir(f"{out_dir}/{n}")}
+for name in sorted(set(oracles) - outputs):
+    fails.append(f"{name}: MISSING (no output; the query failed or did not run)")
+for name in sorted(outputs):
     d = f"{out_dir}/{name}"
-    if not os.path.isdir(d):
-        continue
     got = con.sql(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
     got = got.reindex(sorted(got.columns), axis=1)
     if name not in oracles:
