@@ -1,21 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
+import graft.metrics.{Meter, Metered}
 import graft.transcripts.{QualityFilter, Transcripts}
 
 /** Benchmark entry point. Runs headline queries on SPARK_GRAFT_SF_DIR at
-  * local[SPARK_GRAFT_CPUS] and prints ONE JSON line.
-  *
-  * The flagship measurement is the full quality-filter pipeline over a
-  * transcript table replicated REPLICATION× from events.parquet (so sf0.1's
-  * 100k events become 2M turns) — replication multiplies conversations, not
-  * turns-per-conversation, preserving the window-partition shape. All
-  * actions sink to the `noop` format so every output column (regex scrub
-  * included) is actually computed — `count()` would let Catalyst prune the
-  * work away.
-  */
+  * local[SPARK_GRAFT_CPUS] and prints ONE JSON line. The flagship is the
+  * full quality filter over transcripts replicated 50× from events.parquet
+  * (more conversations, same turns per conversation, so the window shape
+  * holds). Actions sink to `noop` so every output column is computed —
+  * `count()` would let Catalyst prune the work away. SPARK_GRAFT_PLAN_DIR,
+  * when set, receives each headline query's formatted plan. */
 object Bench {
 
   def session(cpus: String): SparkSession = {
@@ -69,20 +69,36 @@ object Bench {
   def consume(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
+  def write(path: Path, text: String): Unit =
+    Files.write(Files.createDirectories(path.toAbsolutePath.getParent)
+      .resolve(path.getFileName), text.getBytes("UTF-8"))
 
-  /** min of `n` runs — the sandbox host is shared, so single-shot wall
-    * times carry neighbor noise; min is the standard robust estimator. */
-  def timedMin(n: Int)(f: => Unit): Double =
-    (1 to n).map(_ => timed(f)).min
+  /** Min-wall of `n` runs: single runs on a shared host carry neighbor noise. */
+  def minOf(meter: Meter, n: Int)(f: => Unit): Metered[Unit] =
+    (1 to n).map(_ => meter.measure(f)).minBy(_.wallS)
+
+  /** The original 8 headline queries plus the round-4 pipeline operators,
+    * so the heavy training-data path gets the same regression tracking. */
+  val Headline = Seq("q01_suite_lineitem", "q05_q1_agg", "q03_qf_turns", "q15_dedup_minhash",
+    "q19_sim_topk", "q21_text_stats", "q49_dedup_embedding_10x", "q73_decontaminate",
+    "q76_keepfirst_turns", "q85_chunk_words", "q86_pack_sequences", "q90_dedup_canonical")
+
+  def jsonObj[V](kvs: Seq[(String, V)])(f: V => String): String =
+    kvs.map { case (k, v) => s""""$k":${f(v)}""" }.mkString("{", ",", "}")
+
+  /** The protocol line. `meter` (last key) holds each query's counters from
+    * its min-wall run; every key before it keeps the protocol's format. */
+  def json(results: Seq[(String, Metered[Unit])], sfDir: String, turns: Long,
+      cpus: String): String = {
+    val turnsPerSec = turns / results.find(_._1 == "qf_pipeline").get._2.wallS
+    s"""{"metric":"total","value":${results.map(_._2.wallS).sum},"unit":"sec","queries":${jsonObj(results)(_.wallS.toString)},"sf":"$sfDir","turns":$turns,"turns_per_sec":$turnsPerSec,"cpus":"$cpus","meter":${jsonObj(results)(_.counters.toJson)}}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -93,38 +109,30 @@ object Bench {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val turns = transcripts.count()
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val meter = Meter(spark)
     // flagship number: min-of-5 (shared host; single runs vary ±2×)
-    results("qf_pipeline") = timedMin(5)(consume(QualityFilter(transcripts)))
-    // original 8 headline queries + the round-4 pipeline operators
-    // (decontaminate / keep-first / chunk / pack / full dedup composition)
-    // so the heavy training-data path gets the same regression tracking
-    val headline = Seq("q01_suite_lineitem", "q05_q1_agg", "q03_qf_turns",
-      "q15_dedup_minhash", "q19_sim_topk", "q21_text_stats",
-      "q49_dedup_embedding_10x",
-      "q73_decontaminate", "q76_keepfirst_turns", "q85_chunk_words",
-      "q86_pack_sequences", "q90_dedup_canonical")
+    val qf = "qf_pipeline" -> minOf(meter, 5)(consume(QualityFilter(transcripts)))
     val warmDir = "/root/testdata/sf0.001"
-    headline.foreach { name =>
+    val results = qf +: Headline.map { name =>
       // Steady-state measurement: each query is first run once at sf0.001
       // to populate the driver-side plan/codegen caches (a size-independent
       // one-time cost — q01-class suites carry ~8 s of Janino compilation
       // that a deployment pays once per process, not per batch), then timed
       // min-of-2 at the target scale factor.
-      consume(SparkEntry.queries(name)(spark, warmDir))
-      results(name) = timedMin(2)(consume(SparkEntry.queries(name)(spark, sfDir)))
+      val q = SparkEntry.queries(name)
+      consume(q(spark, warmDir))
+      planDir.foreach(dir => write(Paths.get(dir, s"$name.txt"),
+        q(spark, sfDir).queryExecution.explainString(FormattedMode)))
+      name -> minOf(meter, 2)(consume(q(spark, sfDir)))
     }
+    meter.close()
     transcripts.unpersist()
 
-    val total = results.values.sum
-    val turnsPerSec = turns / results("qf_pipeline")
-    val qs = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","turns":$turns,"turns_per_sec":$turnsPerSec,"cpus":"$cpus"}"""
+    val json = this.json(results, sfDir, turns, cpus)
     // structured artifact: the JSON line also lands in a file so the bench
     // record never depends on scraping interleaved build/log output
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes("UTF-8"))
+    write(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
+      json + "\n")
     spark.stop()
     // after stop(): nothing else writes to stdout, so the protocol line is
     // the last thing the forked process emits (unwrapped via StdoutOutput)

@@ -1,49 +1,28 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.metrics.Metered
 import graft.operators.Dedup
 
-/** North-rule scaling evidence for the full near-dup dedup COMPOSITION
-  * (MinHash-LSH pair generation → connected components → canonical
-  * keep-min-id — q90's production shape), complementing ScalingBench's
-  * quality-filter measurement: the identical job on the identical input at
-  * local[N] vs local[4N], reporting per-stage wall + executor-CPU
-  * attribution and scaling efficiency = thr(4N) / (4 · thr(N)).
+/** N→4N scaling workload for the full near-dup dedup composition
+  * (MinHash-LSH pairs → connected components → canonical keep-min-id,
+  * q90's production shape), run by [[ScalingBench.run]] with per-stage
+  * wall and executor CPU.
   *
   * Corpus: documents.parquet replicated `rep`× into INDEPENDENT copies of
-  * the corpus's near-dup structure — every word gets a replica-unique
-  * suffix, so no shingle (hence no MinHash band key) ever collides across
-  * replicas, while within-replica relations are isomorphic to the
-  * original; every 50th doc also gets a planted near-dup copy (3-word
-  * tail) so pair generation, CC and canonical keep all have real work.
-  * This is the honest way to scale a dedup benchmark: naive replication
-  * would create rep-sized artificial clusters whose candidate joins are
-  * quadratic in rep — a skew artifact, not a workload.
+  * its near-dup structure — every word gets a replica-unique suffix, so no
+  * shingle (hence no band key) collides across replicas — plus a planted
+  * near-dup of every 50th doc, so pairs, CC and keep all have real work.
+  * Naive replication would instead build rep-sized clusters whose
+  * candidate joins are quadratic in rep: a skew artifact, not a workload.
   *
   * Run: SPARK_GRAFT_DOC_REP=2000 SPARK_DRIVER_MEM=64g \
   *   sbt "runMain graft.DedupScalingBench [sfDir]"   (≥10M docs at sf0.1)
   */
 object DedupScalingBench {
-
-  final case class StageTimes(wall: Map[String, Double], cpu: Map[String, Long],
-    docs: Long, pairs: Long, clusters: Long, survivors: Long) {
-    /** Composition wall with the DEFAULT (size-gated) CC operating point. */
-    def total: Double =
-      wall("pairs") + wall("cc") + wall("keep")
-    /** Composition wall with the fully distributed CC (driverEdgeLimit=0) —
-      * the operating point that runs at 100-TB edge counts. */
-    def totalNoGate: Double =
-      wall("pairs") + wall.getOrElse("cc_nogate", wall("cc")) + wall("keep")
-    /** Executor CPU over the same stages as [[total]] (cc_nogate re-runs
-      * CC on the same pairs, so summing every stage counts CC twice). */
-    def cpuTotal: Long = cpu("pairs") + cpu("cc") + cpu("keep")
-  }
 
   /** Salted replicated corpus (see class doc). Built OUTSIDE the measured
     * region, like the table write a deployment pays once. */
@@ -68,99 +47,66 @@ object DedupScalingBench {
           concat(lit("$1r"), col("rep").cast("string"))).as("text"))
   }
 
-  /** One full composition pass with per-stage wall + CPU attribution.
-    * Each stage is materialized (persist + count) so its cost cannot leak
-    * into the next stage's measurement; the listener-bus drain sleeps
-    * bracket every stage because task-metric delivery is async. */
-  def runOnce(docs: DataFrame, nDocs: Long, cpuNs: AtomicLong): StageTimes = {
-    def drain(): Unit = Thread.sleep(1500)
-    def stage[A](f: => (A, Long)): (A, Double, Long) = {
-      drain(); val c0 = cpuNs.get()
-      val t0 = System.nanoTime()
-      val (a, _) = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      drain()
-      (a, wall, cpuNs.get() - c0)
-    }
+  /** The composition at `rep`×; `counted` is the default (size-gated) CC
+    * operating point. Each stage is materialized (persist + count) so its
+    * cost cannot leak into the next stage's measurement. */
+  def workload(sfDir: String, rep: Int): ScalingBench.Workload =
+    ScalingBench.Workload(Seq("pairs", "cc", "keep"), spark => {
+      // warmup: JIT + codegen caches on the unreplicated corpus
+      Dedup.minhashLshPairs(
+        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text").count()
+      corpus(spark, sfDir, rep).persist(StorageLevel.MEMORY_AND_DISK_SER)
+    }, pass)
+
+  private def pass(docs: DataFrame, stage: ScalingBench.Stage): Map[String, Long] = {
     // stage 1: banded-LSH candidate generation + exact Jaccard verification
-    val (pairsDf, wPairs, cPairs) = stage {
-      val p = Dedup.minhashLshPairs(docs, "doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (p, p.count())
+    val pairsDf = stage("pairs") {
+      val p = Dedup.minhashLshPairs(docs, "doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
+      p.count(); p
     }
     val nPairs = pairsDf.count()
-    // stage 2: connected components over the verified pair list — BOTH
-    // operating points in one pass (round-5 verdict: the artifact carried
-    // only the driver-gated number; at 100-TB edge counts the gate
-    // auto-disables and the distributed figure is the one that matters)
-    val (ccDf, wCc, cCc) = stage {
-      val c = Dedup.connectedComponents(pairsDf, "doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (c, c.count())
+    // stage 2: connected components over the verified pair list, with the
+    // default size-gated CC; stage 2b: the fully distributed path
+    // (driverEdgeLimit = 0, what runs at 100-TB edge counts) on the same pairs
+    val ccDf = stage("cc") {
+      val c = Dedup.connectedComponents(pairsDf, "doc_a", "doc_b").persist(StorageLevel.MEMORY_AND_DISK)
+      c.count(); c
     }
-    // stage 2b: the fully distributed path (driverEdgeLimit = 0) over the
-    // SAME persisted pair list; spec-identical labeling, timed separately
-    val (_, wCcNoGate, cCcNoGate) = stage {
-      val n = Dedup.connectedComponents(pairsDf, "doc_a", "doc_b",
-        driverEdgeLimit = 0).count()
-      (n, n)
-    }
+    stage("cc_nogate")(Dedup.connectedComponents(pairsDf, "doc_a", "doc_b",
+      driverEdgeLimit = 0).count())
     val nClusters = ccDf.select("cluster").distinct().count()
     // stage 3: canonical keep — min id survives per cluster, unpaired docs
     // pass through (the q90 contract, with CC precomputed above so the
     // stage measures only the id join + filter)
-    val (nSurv, wKeep, cKeep) = stage {
+    val nSurv = stage("keep") {
       val clusters = ccDf.select(col("id").as("__cc_id"),
         col("cluster").as("__cc_cluster"))
-      val surv = docs.select("doc_id")
+      docs.select("doc_id")
         .join(clusters, col("doc_id") === col("__cc_id"), "left")
         .filter(col("__cc_cluster").isNull || col("__cc_cluster") === col("doc_id"))
         .count()
-      (surv, surv)
     }
     pairsDf.unpersist(); ccDf.unpersist()
-    StageTimes(
-      wall = Map("pairs" -> wPairs, "cc" -> wCc, "cc_nogate" -> wCcNoGate,
-        "keep" -> wKeep),
-      cpu = Map("pairs" -> cPairs, "cc" -> cCc, "cc_nogate" -> cCcNoGate,
-        "keep" -> cKeep),
-      docs = nDocs, pairs = nPairs, clusters = nClusters, survivors = nSurv)
+    Map("pairs" -> nPairs, "clusters" -> nClusters, "survivors" -> nSurv)
   }
 
-  def run(cpus: Int, sfDir: String, rep: Int, runs: Int): StageTimes = {
-    val spark = Bench.session(cpus.toString)
-    spark.conf.set("spark.sql.shuffle.partitions", (cpus * 3).toString)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      // warmup: JIT + codegen caches on the unreplicated corpus
-      Dedup.minhashLshPairs(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
-        .count()
-      val docs = corpus(spark, sfDir, rep).persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val nDocs = docs.count()
-      val cpuNs = new AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      // min-of-runs by TOTAL wall (shared host): report the best run's
-      // per-stage breakdown so stages are from one coherent pass
-      val best = (1 to runs).map(_ => runOnce(docs, nDocs, cpuNs))
-        .minBy(_.total)
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(listener)
-      docs.unpersist()
-      best
-    } finally spark.stop()
-  }
+  /** Composition wall with the fully distributed CC (driverEdgeLimit=0) —
+    * the operating point that runs at 100-TB edge counts. */
+  def totalNoGate(r: ScalingBench.Run): Double =
+    r.wall("pairs") + r.wall("cc_nogate") + r.wall("keep")
 
-  private def fmtStages(wall: Map[String, Double]): String =
-    wall.toSeq.sortBy(_._1).map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-  private def fmtCpu(cpu: Map[String, Long], docs: Long): String =
-    cpu.toSeq.sortBy(_._1).map { case (k, v) =>
-      f""""$k":${v.toDouble / docs}%.1f""" }.mkString("{", ",", "}")
+  private def stages(r: ScalingBench.Run)(f: Metered[Any] => String): String =
+    Bench.jsonObj(r.stages.toSeq.sortBy(_._1))(f)
+
+  def json(n: Int, sfDir: String, rep: Int, rN: ScalingBench.Run,
+      r4N: ScalingBench.Run): String = {
+    val (thrN, thr4N) = (rN.throughput, r4N.throughput)
+    val eff = ScalingBench.efficiency(rN, r4N)
+    // the fully distributed operating point (driverEdgeLimit = 0), from
+    // the same invocation — the number that matters at 100-TB edge counts
+    val effNg = (r4N.units / totalNoGate(r4N)) / (4 * (rN.units / totalNoGate(rN)))
+    f"""{"metric":"dedup_scaling_efficiency","value":$eff%.4f,"unit":"ratio","value_nogate":$effNg%.4f,"n_cores":$n,"docs":${rN.units},"pairs":${rN.counts("pairs")},"clusters":${rN.counts("clusters")},"survivors":${rN.counts("survivors")},"secs_localN":${rN.total}%.3f,"secs_local4N":${r4N.total}%.3f,"secs_nogate_localN":${totalNoGate(rN)}%.3f,"secs_nogate_local4N":${totalNoGate(r4N)}%.3f,"docs_per_sec_localN":$thrN%.1f,"docs_per_sec_local4N":$thr4N%.1f,"cpu_ns_per_doc_localN":${rN.cpuTotal.toDouble / rN.units}%.1f,"cpu_ns_per_doc_local4N":${r4N.cpuTotal.toDouble / r4N.units}%.1f,"stages_localN":${stages(rN)(m => f"${m.wallS}%.3f")},"stages_local4N":${stages(r4N)(m => f"${m.wallS}%.3f")},"stage_cpu_ns_per_doc_localN":${stages(rN)(m => f"${m.counters.cpuNs.toDouble / rN.units}%.1f")},"stage_cpu_ns_per_doc_local4N":${stages(r4N)(m => f"${m.counters.cpuNs.toDouble / r4N.units}%.1f")},"sf":"$sfDir","rep":$rep}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
@@ -168,20 +114,10 @@ object DedupScalingBench {
     val rep = sys.env.getOrElse("SPARK_GRAFT_DOC_REP", "2000").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_N", "8").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_DEDUP_RUNS", "2").toInt
-    val rN = run(n, sfDir, rep, runs)
-    val r4N = run(n * 4, sfDir, rep, runs)
-    val thrN = rN.docs / rN.total
-    val thr4N = r4N.docs / r4N.total
-    val eff = thr4N / (4 * thrN)
-    // the fully distributed operating point (driverEdgeLimit = 0), from
-    // the same invocation — the number that matters at 100-TB edge counts
-    val thrNg = rN.docs / rN.totalNoGate
-    val thr4Ng = r4N.docs / r4N.totalNoGate
-    val effNg = thr4Ng / (4 * thrNg)
-    val json = f"""{"metric":"dedup_scaling_efficiency","value":$eff%.4f,"unit":"ratio","value_nogate":$effNg%.4f,"n_cores":$n,"docs":${rN.docs},"pairs":${rN.pairs},"clusters":${rN.clusters},"survivors":${rN.survivors},"secs_localN":${rN.total}%.3f,"secs_local4N":${r4N.total}%.3f,"secs_nogate_localN":${rN.totalNoGate}%.3f,"secs_nogate_local4N":${r4N.totalNoGate}%.3f,"docs_per_sec_localN":$thrN%.1f,"docs_per_sec_local4N":$thr4N%.1f,"cpu_ns_per_doc_localN":${rN.cpuTotal.toDouble / rN.docs}%.1f,"cpu_ns_per_doc_local4N":${r4N.cpuTotal.toDouble / r4N.docs}%.1f,"stages_localN":${fmtStages(rN.wall)},"stages_local4N":${fmtStages(r4N.wall)},"stage_cpu_ns_per_doc_localN":${fmtCpu(rN.cpu, rN.docs)},"stage_cpu_ns_per_doc_local4N":${fmtCpu(r4N.cpu, r4N.docs)},"sf":"$sfDir","rep":$rep}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_DEDUP_OUT", "dedup_scaling_out.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes("UTF-8"))
+    val json = this.json(n, sfDir, rep, ScalingBench.run(workload(sfDir, rep), n, runs),
+      ScalingBench.run(workload(sfDir, rep), n * 4, runs))
+    Bench.write(java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_DEDUP_OUT", "dedup_scaling_out.json")), json + "\n")
     println(json)
   }
 }

@@ -1,8 +1,8 @@
 package org.apache.spark
 
-/** Bench-only bridge: `SparkContext.listenerBus` is private[spark]; the
-  * diagnostic meter (graft.BenchExtra) needs to drain the async listener
-  * bus before reading task-metric counters. No Spark-internal logic. */
+/** `SparkContext.listenerBus` is private[spark]; `graft.metrics.Meter`
+  * drains the asynchronous listener bus before it reads its counters.
+  * No Spark-internal logic. */
 object GraftSparkShim {
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

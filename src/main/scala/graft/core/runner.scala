@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -125,7 +126,8 @@ final class SuiteRunner(
 
     // value jobs are leaves (one Spark action each) → permit-bounded;
     // domain jobs are parents (they submit their own leaf batch)
-    SuiteRunner.awaitAll(domainJobs ++ valueJobs.map(SuiteRunner.leafJob))
+    SuiteRunner.awaitAll(df.sparkSession.sparkContext,
+      domainJobs ++ valueJobs.map(SuiteRunner.leafJob))
     valueExps.foreach { case (e, i) => record(i, valueMemo.get(e)) }
 
     // -- query expectations (memoized like value expectations) ----------------
@@ -315,7 +317,7 @@ final class SuiteRunner(
             runMapAggBatch(domainDf, Seq((e, i)), Nil, unexpectedCond, record)
         }
       }
-    SuiteRunner.awaitAll(jobs.map(SuiteRunner.leafJob))
+    SuiteRunner.awaitAll(domainDf.sparkSession.sparkContext, jobs.map(SuiteRunner.leafJob))
   }
 
   /** Uniqueness via groupBy(keys).count: semantically identical to the
@@ -645,15 +647,27 @@ object SuiteRunner {
     try f() finally jobPermits.release()
   }
 
+  /** Job properties the submitting thread hands to each pooled job. Spark
+    * keeps them in inheritable thread-locals, so a cached pool thread would
+    * otherwise carry the job group of whichever thread created it. */
+  private val JobProperties = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
   /** Run the thunks concurrently, wait for all, rethrow the first failure
     * (after every job has finished — matching the serial form's guarantee
-    * that record() callbacks for completed jobs are never lost). */
-  private[core] def awaitAll(jobs: Seq[() => Unit]): Unit = {
+    * that record() callbacks for completed jobs are never lost). Each job
+    * runs under the caller's job group, description and tags. */
+  private[core] def awaitAll(sc: SparkContext, jobs: Seq[() => Unit]): Unit = {
     if (jobs.isEmpty) return
     if (jobs.size == 1) { jobs.head(); return }
+    val caller = JobProperties.map(k => k -> sc.getLocalProperty(k))
     val futures = jobs.map(j =>
       jobPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = j()
+        def call(): Unit = {
+          val saved = JobProperties.map(k => k -> sc.getLocalProperty(k))
+          caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          try j() finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        }
       }))
     var firstFailure: Throwable = null
     futures.foreach { f =>

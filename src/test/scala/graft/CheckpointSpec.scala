@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.metrics.Meter
 import graft.transcripts.{Checkpoint, QualityFilter, Transcripts}
 
 class CheckpointSpec extends AnyFunSuite {
@@ -39,19 +40,11 @@ class CheckpointSpec extends AnyFunSuite {
   test("fresh run is one pass: a single Spark job, full per-bucket lineage") {
     val dir = freshDir()
     transcripts.count() // materialize any lazy setup outside the window
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = Checkpoint.runResumable(transcripts, dir, buckets = 8,
-        inputPath = "sf0.001")
-      Thread.sleep(500)
-      assert(r.processed == (0 until 8))
-      assert(jobs <= 3, s"fresh run must not scan per bucket (saw $jobs jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val m = Meter.measure(spark)(Checkpoint.runResumable(transcripts, dir,
+      buckets = 8, inputPath = "sf0.001"))
+    val (r, jobs) = (m.result, m.counters.jobs)
+    assert(r.processed == (0 until 8))
+    assert(jobs <= 3, s"fresh run must not scan per bucket (saw $jobs jobs)")
     val lineage = Checkpoint.committedBuckets(dir)
     assert(lineage.size == 8)
     assert(lineage.values.map(_.rowsIn).sum == transcripts.count())

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftSparkShim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -363,7 +364,8 @@ class EngineSpec extends AnyFunSuite {
         ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x")), // global window
         ExpectColumnValuesToBeUnique("alpha"))))
       assert(sr.success)
-      Thread.sleep(1500) // QueryExecutionListener delivery is async
+      // QueryExecutionListener events ride the listener bus: drain it
+      GraftSparkShim.drainListeners(spark.sparkContext)
       val snap = plans.synchronized(plans.toList)
       val fused = snap.filter(_.contains("__uc1")) // ≥2 fused map exps
       assert(fused.nonEmpty, "expected a fused multi-expectation job")
@@ -372,6 +374,39 @@ class EngineSpec extends AnyFunSuite {
       assert(snap.exists(_.contains("Window")),
         "window expectations should still run (in their own jobs)")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("pooled suite jobs carry the caller's job group, not a stale one") {
+    // two window rules + a value expectation: the fused pass, both window
+    // jobs and the median job all run on SuiteRunner's cached pool threads
+    val suite = Suite("groups", Seq(
+      ExpectColumnValuesToNotBeNull("alpha"),
+      ExpectColumnValuesToBeUnique("alpha"),
+      ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x")),
+      ExpectColumnMedianToBeBetween("x", Some(0.0), Some(99.0))))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    try {
+      sc.setJobGroup("a", "first run")
+      assert(Graft.validate(df, suite).success)
+      GraftSparkShim.drainListeners(sc)
+      sc.addSparkListener(listener)
+      sc.setJobGroup("b", "second run")
+      assert(Graft.validate(df, suite).success)
+      GraftSparkShim.drainListeners(sc)
+      import scala.jdk.CollectionConverters._
+      val seen = groups.asScala.toList
+      assert(seen.size >= 4, s"expected the suite's jobs, saw $seen")
+      assert(seen.forall(_ == "b"), s"jobs with a stale group: $seen")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
   }
 
   test("identical aggregates are deduped in the fused plan") {
@@ -619,7 +654,8 @@ class EngineSpec extends AnyFunSuite {
       assert(r.results(1).results(0).success && !r.results(1).results(1).success)
       assert(r.results(0).results(1).result("observed_value") ==
         r.results(1).results(1).result("observed_value"))
-      Thread.sleep(1500) // QueryExecutionListener delivery is async
+      // QueryExecutionListener events ride the listener bus: drain it
+      GraftSparkShim.drainListeners(spark.sparkContext)
       val snap = plans.synchronized(plans.toList)
       // both suites' map+agg expectations over the same (unconditioned)
       // domain of the same batch must plan as ONE fused aggregate job
@@ -677,7 +713,8 @@ class EngineSpec extends AnyFunSuite {
       assert(r.result("observed_value") == "500 unexpected rows")
       assert(r.result("details").asInstanceOf[Map[String, Any]]("unexpected_rows")
         .asInstanceOf[Seq[_]].size == 20)
-      Thread.sleep(1500)
+      // QueryExecutionListener events ride the listener bus: drain it
+      GraftSparkShim.drainListeners(spark.sparkContext)
       // "command" entries are the temp-view create/drop, not data jobs.
       // Listener delivery is async, so the pre-registration big.count()
       // event can land AFTER registration — keep only plans carrying this
