@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.core.Json
@@ -22,13 +24,14 @@ import graft.core.Json
   *
   * A FRESH run is ONE Spark job: the pipeline output is hash-bucketed by
   * conv_id and written with `partitionBy("bucket")`, per-bucket lineage
-  * metrics riding the same job via one `Observation` — a single input
-  * scan, then one snapshot committing every bucket. A RESUME (some buckets
-  * already committed) processes only the missing buckets, one job per
-  * bucket, committing one snapshot each — so a crash mid-resume loses at
-  * most the in-flight bucket and a re-run is idempotent. The manifest
-  * records the bucket count; resuming with a different `buckets` value
-  * fails fast instead of silently mixing two partitionings.
+  * riding the same job as ONE tally aggregate in one `Observation` — a
+  * single input scan, then one snapshot committing every bucket. A RESUME
+  * (some buckets already committed) processes only the missing buckets,
+  * one job per bucket, committing one snapshot each — so a crash
+  * mid-resume loses at most the in-flight bucket and a re-run is
+  * idempotent. The manifest records the bucket count; resuming with a
+  * different `buckets` value fails fast instead of silently mixing two
+  * partitionings.
   */
 object Checkpoint {
 
@@ -137,30 +140,48 @@ object Checkpoint {
         committed)
   }
 
+  /** Per-bucket lineage counts as ONE aggregate over (bucket, keep,
+    * pii_found): the buffer is [in_0..in_{B-1}, kept_0.., pii_0..], one
+    * array update per row. (B×3 conditional sums cost 3B buffer updates per
+    * row in the CollectMetrics operator, outside whole-stage codegen.) */
+  private final class BucketTally(buckets: Int)
+      extends Aggregator[(Int, Boolean, Boolean), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](3 * buckets)
+    def reduce(t: Array[Long], r: (Int, Boolean, Boolean)): Array[Long] = {
+      t(r._1) += 1
+      if (r._2) t(buckets + r._1) += 1
+      if (r._3) t(2 * buckets + r._1) += 1
+      t
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(t: Array[Long]): Array[Long] = t
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
   /** Fresh run: ONE job — bucket, write partitionBy(bucket), per-bucket
-    * lineage from a single Observation (no second pass, no per-bucket
-    * re-scan of the input). */
+    * lineage from one tally aggregate in a single Observation (no second
+    * pass, no per-bucket re-scan of the input). A null keep or pii_found
+    * (null text or role) counts as false. */
   private def runFresh(transcripts: DataFrame, outDir: String, buckets: Int,
       inputPath: String): RunReport = {
     val t0 = System.nanoTime()
     val out = QualityFilter(transcripts)
       .withColumn("bucket", bucketCol(buckets))
     val obs = new Observation("fresh_run")
-    val aggs = (0 until buckets).flatMap { b =>
-      val inB = col("bucket") === b
-      Seq(
-        sum(when(inB, 1L).otherwise(0L)).as(s"in_$b"),
-        sum(when(inB && col("keep"), 1L).otherwise(0L)).as(s"kept_$b"),
-        sum(when(inB && col("pii_found"), 1L).otherwise(0L)).as(s"pii_$b"))
-    }
-    out.observe(obs, aggs.head, aggs.tail: _*)
+    val tally = udaf(new BucketTally(buckets)).apply(col("bucket"),
+      coalesce(col("keep"), lit(false)), coalesce(col("pii_found"), lit(false)))
+    out.observe(obs, tally.as("tally"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/data")
-    val m = obs.get
+    val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
     val wall = (System.nanoTime() - t0) / 1e9
     val now = System.currentTimeMillis()
-    def g(k: String): Long = m.getOrElse(k, 0L).asInstanceOf[Long]
     val lineage = (0 until buckets).map(b => b -> BucketLineage(b,
-      g(s"in_$b"), g(s"kept_$b"), g(s"pii_$b"), wall, inputPath, now)).toMap
+      t(b), t(buckets + b), t(2 * buckets + b), wall, inputPath, now)).toMap
     commitSnapshot(outDir, buckets, lineage)
     RunReport((0 until buckets), Nil, lineage.values.toSeq.sortBy(_.bucket))
   }

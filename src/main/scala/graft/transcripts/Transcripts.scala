@@ -21,13 +21,21 @@ final case class Turn(
   * empty/short turns (%23), symbol noise (%19), n-gram repetition (%17),
   * non-English spans (%13), profanity (%29), PII e-mails (%37), phone
   * numbers (%41), SSN-likes (%43), invalid roles (%97).
+  *
+  * `conv_id` is the conversation key: it is computed from `user_id` BEFORE
+  * the turn-numbering window, and that window partitions by `conv_id`. So
+  * `(conv_id, turn_idx)` is unique even where two `user_id`s render the same
+  * `conv_id` (`lpad` truncates ids of 10^12 and up to 12 characters; they
+  * form one conversation), and the output is hash-partitioned by `conv_id`:
+  * QualityFilter's role-seq window reuses this one exchange and adds only a
+  * local sort.
   */
 object Transcripts {
 
   /** References a relation named `events`; valid Spark SQL *and* DuckDB. */
   val transcriptSql: String = """
 SELECT
-  'conv-' || lpad(CAST(user_id AS VARCHAR(12)), 12, '0') AS conv_id,
+  conv_id,
   CAST(rn AS INT) AS turn_idx,
   CASE WHEN event_id % 97 = 0 THEN 'operator'
        WHEN rn = 0 THEN 'system'
@@ -77,9 +85,13 @@ SELECT
   CASE WHEN event_id % 97 <> 0 AND rn > 0 AND event_type = 'purchase' THEN 'checkout' ELSE NULL END AS tool,
   ts
 FROM (
-  SELECT event_id, user_id, ts, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS rn
-  FROM events
+  SELECT conv_id, event_id, user_id, ts, event_type,
+         row_number() OVER (PARTITION BY conv_id ORDER BY ts, event_id) - 1 AS rn
+  FROM (
+    SELECT 'conv-' || lpad(CAST(user_id AS VARCHAR(12)), 12, '0') AS conv_id,
+           event_id, user_id, ts, event_type
+    FROM events
+  ) keyed
 ) numbered
 """
 

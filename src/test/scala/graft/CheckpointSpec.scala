@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.Meter
-import graft.transcripts.{Checkpoint, QualityFilter, Transcripts}
+import graft.transcripts.{Checkpoint, QualityFilter, Transcripts, Turn}
 
 class CheckpointSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -50,6 +50,55 @@ class CheckpointSpec extends AnyFunSuite {
     assert(lineage.values.map(_.rowsIn).sum == transcripts.count())
     assert(Checkpoint.readCommitted(spark, dir).count() ==
       QualityFilter(transcripts).count())
+  }
+
+  test("per-bucket lineage: each bucket equals a groupBy of its written rows; " +
+      "fresh run ≡ crash + resume") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+    import spark.implicits._
+    val t0 = new java.sql.Timestamp(1700000000000L)
+    val good = "we discussed the project plan with many more details today"
+    // null text and null role: read in, never kept
+    val input = transcripts.unionByName(Seq(
+      Turn("conv-null-text", 0, "system", null, null, t0),
+      Turn("conv-null-role", 0, null, good, null, t0)).toDF())
+    val buckets = 64
+    def counts(l: Checkpoint.BucketLineage) = (l.rowsIn, l.rowsKept, l.piiRows)
+
+    val dir = freshDir()
+    Checkpoint.runResumable(input, dir, buckets = buckets, inputPath = "sf0.001")
+    val fresh = Checkpoint.committedBuckets(dir)
+    assert(fresh.keySet == (0 until buckets).toSet)
+    val written = spark.read.parquet(s"$dir/data")
+    val byBucket = written.groupBy("bucket").agg(count(lit(1)),
+        sum(when(col("keep"), 1L).otherwise(0L)),
+        sum(when(col("pii_found"), 1L).otherwise(0L)))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    (0 until buckets).foreach { b =>
+      assert(counts(fresh(b)) == byBucket.getOrElse(b, (0L, 0L, 0L)), s"bucket $b")
+    }
+    // 17 conversations over 64 buckets: some bucket is empty and reads 0
+    assert(fresh.values.exists(l => counts(l) == ((0L, 0L, 0L))))
+    assert(fresh.values.map(_.rowsIn).sum == input.count())
+    assert(fresh.values.exists(_.piiRows > 0))
+    val nullRows = written.filter(col("conv_id").startsWith("conv-null"))
+      .select("bucket", "keep").collect()
+    assert(nullRows.length == 2)
+    nullRows.foreach { r =>
+      assert(r.isNullAt(1) || !r.getBoolean(1), s"null text/role kept: $r")
+    }
+
+    val resumedDir = freshDir()
+    intercept[RuntimeException] {
+      Checkpoint.runResumable(input, resumedDir, buckets = buckets,
+        inputPath = "sf0.001", failAfterBuckets = 5)
+    }
+    Checkpoint.runResumable(input, resumedDir, buckets = buckets, inputPath = "sf0.001")
+    val resumed = Checkpoint.committedBuckets(resumedDir)
+    (0 until buckets).foreach { b =>
+      assert(counts(resumed(b)) == counts(fresh(b)), s"bucket $b")
+    }
   }
 
   test("resume with mismatched bucket count fails fast") {

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.transcripts.{QualityFilter, Transcripts, Turn}
+import graft.transcripts.{Checkpoint, QualityFilter, Transcripts, Turn}
 
 /** Hand-labeled keep/drop + scrub cases for the quality-filter pipeline
   * (FIXTURES.md §3). */
@@ -264,6 +264,64 @@ class QualityFilterSpec extends AnyFunSuite {
           l.trim.startsWith("+- Sort") || l.trim.startsWith("Sort ")),
         s"unexpected Sort in the quality-filter plan:\n$plan")
     } finally { t.unpersist(); () }
+  }
+
+  test("qf plan from events: ONE conv_id exchange serves both windows; " +
+      "the fresh-run write observes one metric") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new AdaptiveSparkPlanHelper {}
+    val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
+    val q = QualityFilter(t)
+    q.collect()
+    // the final AQE plan, query stages included
+    val plan = q.queryExecution.executedPlan
+    val shuffles = plans.collect(plan) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1,
+      s"expected one exchange, got ${shuffles.map(_.outputPartitioning)}")
+    shuffles.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: AttributeReference), _) =>
+        assert(a.name == "conv_id", s"exchange keyed on ${a.name}")
+      case p => fail(s"exchange is not hash(conv_id): $p")
+    }
+
+    val metrics = collection.mutable.ArrayBuffer.empty[Int]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, d: Long): Unit =
+        metrics.synchronized {
+          metrics ++= plans.collect(qe.executedPlan) {
+            case c: CollectMetricsExec => c.metricExpressions.size }
+        }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Checkpoint.runResumable(t,
+        java.nio.file.Files.createTempDirectory("graft_qf_plan").toString,
+        buckets = 64)
+      org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
+      assert(metrics.synchronized(metrics.toList) == List(1),
+        "fresh-run write: one CollectMetrics with one metric")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("conv_id is the conversation key: user_ids that lpad truncates to one " +
+      "conv_id form ONE conversation with unique turn_idx") {
+    // lpad(…, 12, '0') keeps the first 12 characters, so both ids render
+    // 'conv-100000000000'; numbering per user_id would repeat turn_idx 0..2
+    val dir = java.nio.file.Files.createTempDirectory("graft_conv_key").toString
+    Seq(1000000000000L, 1000000000001L).zipWithIndex.flatMap { case (u, i) =>
+      (0 until 3).map(k => (100L * i + k, ts(10L * k + i), u, "view"))
+    }.toDF("event_id", "ts", "user_id", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    val t = Transcripts.fromEvents(spark, dir)
+    val rows = t.select("conv_id", "turn_idx").orderBy("turn_idx").collect()
+    assert(rows.map(_.getString(0)).toSet == Set("conv-100000000000"))
+    assert(rows.map(_.getInt(1)).toSeq == (0 until 6))
   }
 
   test("repetition_stats: counts, top word, 2-gram dups, growth, null") {
