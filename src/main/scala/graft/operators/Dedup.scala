@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -577,20 +578,18 @@ object Dedup {
     * order are caller-chosen (e.g. key = md5 of normalized turn text,
     * order = (conv_id, turn_idx)).
     *
-    * Scale shape: group-by on the key digest with a map-side partial min,
-    * then one hash join back on the digest — shuffle rows carry the
-    * 32-byte key + the order tuple, never the text. Deterministic for
-    * total `ordCols` orderings (ties keep every tied row). */
+    * Scale shape: ONE read of the input — `min(struct(ordCols)) OVER
+    * (PARTITION BY key)` then a filter, so one exchange of the input rows
+    * on the key and no join-back (a group-then-join form consumes its
+    * input twice and re-runs whatever computed it). A null key forms its
+    * own group like any other value (window partitioning groups nulls).
+    * Deterministic for total `ordCols` orderings (ties keep every tied
+    * row). */
   def keepFirst(df: DataFrame, keyCol: Column, ordCols: Seq[Column]): DataFrame = {
-    val keyed = df.withColumn("__kf_key", keyCol)
-    val firsts = keyed.groupBy(col("__kf_key"))
-      .agg(min(struct(ordCols: _*)).as("__kf_min"))
-      .withColumnRenamed("__kf_key", "__kf_fkey")
-    // null-SAFE join: a null key forms its own group like any other value
-    // (an equi-join would silently drop every null-key row)
-    keyed.join(firsts, col("__kf_key") <=> col("__kf_fkey"))
-      .filter(struct(ordCols: _*) === col("__kf_min"))
-      .drop("__kf_key", "__kf_fkey", "__kf_min")
+    val ord = struct(ordCols: _*)
+    df.withColumn("__kf_min", min(ord).over(Window.partitionBy(keyCol)))
+      .filter(ord === col("__kf_min"))
+      .drop("__kf_min")
   }
 
   /** Benchmark decontamination: flag corpus documents that share at least

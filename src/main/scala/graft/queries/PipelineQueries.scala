@@ -249,19 +249,13 @@ GROUP BY 1"""
     * this prunes most of the corpus. */
   private def q76(s: SparkSession, dir: String): DataFrame = {
     // hash once as a named column so keepFirst's key and the output column
-    // reference the same expression (not two md5+regexp evaluations).
-    // The projection is slimmed to the three output columns BEFORE
-    // keepFirst and pinned with an eager localCheckpoint: keepFirst's
-    // group-then-join-back shape consumes its input twice, and without the
-    // pin each side re-runs the whole transcript synthesis (window +
-    // the giant text CASE) + normalize + md5 over every turn — measured
-    // ~2× the query's CPU. The pinned slice is (conv_id, turn_idx,
-    // 32-char hash) ≈ 50 B/turn.
+    // reference the same expression (not two md5+regexp evaluations), and
+    // slim the projection to the three output columns BEFORE keepFirst, so
+    // its one exchange carries (conv_id, turn_idx, 32-char hash) ≈ 50 B/turn
     val t = graft.transcripts.Transcripts.fromEvents(s, dir)
       .withColumn("text_hash",
         md5(graft.functions.TextFunctions.normText(col("text"))))
       .select("conv_id", "turn_idx", "text_hash")
-      .localCheckpoint()
     Dedup.keepFirst(t, col("text_hash"),
         Seq(col("conv_id"), col("turn_idx")))
       .select("conv_id", "turn_idx", "text_hash")

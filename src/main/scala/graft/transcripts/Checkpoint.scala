@@ -2,8 +2,11 @@ package graft.transcripts
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import scala.util.Try
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Encoder, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -17,21 +20,39 @@ import graft.core.Json
   * swap mirroring Iceberg's commit protocol).
   *
   * Layout under `outDir`:
-  *   data/bucket=<b>/…parquet     one directory per hash bucket of conv_id
-  *   _manifests/manifest-<n>.json  immutable snapshot: bucket count +
-  *                                 committed buckets + per-bucket lineage
+  *   data/snapshot=<n>/…parquet    the files written for snapshot n;
+  *                                 every file carries the `bucket`
+  *                                 column (a hash bucket of conv_id)
+  *   _manifests/manifest-<n>.json  immutable snapshot, version 2: bucket
+  *                                 count, the data files of each write
+  *                                 (`file_sets`), committed buckets with
+  *                                 per-bucket lineage and the file set
+  *                                 each one lives in
   *   _manifests/HEAD               current snapshot number (atomic rename)
   *
-  * A FRESH run is ONE Spark job: the pipeline output is hash-bucketed by
-  * conv_id and written with `partitionBy("bucket")`, per-bucket lineage
-  * riding the same job as ONE tally aggregate in one `Observation` — a
-  * single input scan, then one snapshot committing every bucket. A RESUME
-  * (some buckets already committed) processes only the missing buckets,
-  * one job per bucket, committing one snapshot each — so a crash
-  * mid-resume loses at most the in-flight bucket and a re-run is
-  * idempotent. The manifest records the bucket count; resuming with a
-  * different `buckets` value fails fast instead of silently mixing two
-  * partitionings.
+  * The bucket is the unit of commit and resume but not of files: like
+  * Iceberg's data-file entries, the manifest names the files that hold
+  * each bucket. A FRESH run is ONE Spark job: the pipeline output keeps
+  * its `bucket` column, is sorted by it within each partition and written
+  * as one plain parquet write (one file per write task), per-bucket
+  * lineage riding the same job as ONE tally aggregate in one
+  * `Observation`; then the written files are listed and one snapshot is
+  * committed in which every bucket refers to them. A RESUME (some buckets
+  * already committed) processes only the missing buckets, one job per
+  * bucket, each into its own directory, committing one snapshot each — so
+  * a crash mid-resume loses at most the in-flight bucket and a re-run is
+  * idempotent. `readCommitted` reads only the files HEAD lists for
+  * committed buckets, so a write that crashed before its commit is never
+  * read and a re-run bucket never counts twice; a run deletes such
+  * orphan directories before it writes. The manifest records the bucket
+  * count; resuming with a different `buckets` value fails fast instead of
+  * silently mixing two partitionings.
+  *
+  * Version-1 checkpoints (a `partitionBy("bucket")` write into
+  * `data/bucket=<b>/`, manifests without a `version` field) still read
+  * back and resume: a committed bucket without a file set is read from
+  * its `bucket=<b>` directory. Every run's jobs carry the Spark job
+  * description `qf:fresh_write` or `qf:bucket_<b>`.
   */
 object Checkpoint {
 
@@ -41,6 +62,14 @@ object Checkpoint {
 
   final case class RunReport(
       processed: Seq[Int], skipped: Seq[Int], lineage: Seq[BucketLineage])
+
+  /** One snapshot: bucket count, committed lineage and the data files of
+    * each committed bucket (paths relative to outDir). A committed bucket
+    * without files is a version-1 entry stored in `data/bucket=<b>/`. */
+  private final case class Manifest(bucketCount: Option[Int],
+      lineage: Map[Int, BucketLineage], files: Map[Int, Seq[String]])
+
+  private val mapper = new ObjectMapper()
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifests")
 
@@ -52,64 +81,53 @@ object Checkpoint {
 
   /** Buckets committed as of the current HEAD snapshot. */
   def committedBuckets(outDir: String): Map[Int, BucketLineage] =
-    readManifest(outDir)._2
+    readManifest(outDir).lineage
 
   /** Bucket count recorded in the current HEAD snapshot (None pre-first-commit). */
-  def committedBucketCount(outDir: String): Option[Int] = readManifest(outDir)._1
+  def committedBucketCount(outDir: String): Option[Int] = readManifest(outDir).bucketCount
 
-  private def readManifest(outDir: String): (Option[Int], Map[Int, BucketLineage]) =
+  private def readManifest(outDir: String): Manifest =
     headSnapshot(outDir).map { n =>
-      val f = manifestDir(outDir).resolve(s"manifest-$n.json")
-      parseManifest(Files.readString(f))
-    }.getOrElse((None, Map.empty))
+      parseManifest(Files.readString(manifestDir(outDir).resolve(s"manifest-$n.json")))
+    }.getOrElse(Manifest(None, Map.empty, Map.empty))
 
-  /** Minimal manifest parser (flat, engine-written JSON only). The
-    * input_path capture tolerates Json.esc escapes (\" and \\) — a path
-    * containing either would otherwise fail the match and silently drop
-    * that bucket from the committed set. */
-  private def parseManifest(s: String): (Option[Int], Map[Int, BucketLineage]) = {
-    val entry = """\{"bucket":(\d+),"rows_in":(\d+),"rows_kept":(\d+),"pii_rows":(\d+),"wall_secs":([0-9.Ee+-]+),"input_path":"((?:[^"\\]|\\.)*)","committed_at_ms":(\d+)\}""".r
-    def unesc(v: String): String = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < v.length) {
-        val c = v.charAt(i)
-        if (c == '\\' && i + 1 < v.length) {
-          v.charAt(i + 1) match {
-            case 'n' => b.append('\n')
-            case 'r' => b.append('\r')
-            case 't' => b.append('\t')
-            case 'u' =>
-              b.append(Integer.parseInt(v.substring(i + 2, i + 6), 16).toChar)
-              i += 4
-            case other => b.append(other)
-          }
-          i += 2
-        } else { b.append(c); i += 1 }
-      }
-      b.toString
-    }
-    val lineage = entry.findAllMatchIn(s).map { m =>
-      m.group(1).toInt -> BucketLineage(m.group(1).toInt, m.group(2).toLong,
-        m.group(3).toLong, m.group(4).toLong, m.group(5).toDouble,
-        unesc(m.group(6)), m.group(7).toLong)
+  /** Version 2 adds `version`, `file_sets` (lists of data files) and a
+    * `file_set` index per bucket; a manifest without `version` is
+    * version 1, whose buckets have no files. */
+  private def parseManifest(s: String): Manifest = {
+    val root = mapper.readTree(s)
+    val version = Option(root.get("version")).fold(1)(_.asInt)
+    require(version <= 2, s"unsupported checkpoint manifest version $version")
+    val fileSets = Option(root.get("file_sets")).toSeq.flatMap(_.elements().asScala)
+      .map(_.elements().asScala.map(_.asText).toSeq).toIndexedSeq
+    val entries = Option(root.get("buckets")).toSeq.flatMap(_.elements().asScala)
+    val lineage = entries.map { e =>
+      val b = e.get("bucket").asInt
+      b -> BucketLineage(b, e.get("rows_in").asLong, e.get("rows_kept").asLong,
+        e.get("pii_rows").asLong, e.get("wall_secs").asDouble,
+        e.get("input_path").asText, e.get("committed_at_ms").asLong)
     }.toMap
-    val count = """"bucket_count":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    (count, lineage)
+    val files = entries.flatMap(e => Option(e.get("file_set"))
+      .map(i => e.get("bucket").asInt -> fileSets(i.asInt))).toMap
+    Manifest(Option(root.get("bucket_count")).map(_.asInt), lineage, files)
   }
 
-  private def lineageJson(l: BucketLineage): String =
-    s"""{"bucket":${l.bucket},"rows_in":${l.rowsIn},"rows_kept":${l.rowsKept},"pii_rows":${l.piiRows},"wall_secs":${l.wallSecs},"input_path":${Json.esc(l.inputPath)},"committed_at_ms":${l.committedAtMs}}"""
-
-  /** Atomically commit a new snapshot = full lineage as of now. */
-  private def commitSnapshot(outDir: String, bucketCount: Int,
-      all: Map[Int, BucketLineage]): Int = {
+  /** Atomically commit a new snapshot = full lineage and files as of now. */
+  private def commitSnapshot(outDir: String, m: Manifest): Int = {
     val dir = manifestDir(outDir)
     Files.createDirectories(dir)
-    val next = headSnapshot(outDir).getOrElse(-1) + 1
-    val body = all.values.toSeq.sortBy(_.bucket).map(lineageJson)
-      .mkString(s"""{"snapshot":$next,"bucket_count":$bucketCount,"buckets":[""",
-        ",", "]}")
+    val next = nextSnapshot(outDir)
+    val sets = m.files.toSeq.sortBy(_._1).map(_._2).distinct
+    val setOf = sets.zipWithIndex.toMap
+    val buckets = m.lineage.values.toSeq.sortBy(_.bucket).map { l =>
+      ListMap[String, Any]("bucket" -> l.bucket, "rows_in" -> l.rowsIn,
+        "rows_kept" -> l.rowsKept, "pii_rows" -> l.piiRows,
+        "wall_secs" -> l.wallSecs, "input_path" -> l.inputPath,
+        "committed_at_ms" -> l.committedAtMs) ++
+        m.files.get(l.bucket).map(f => "file_set" -> setOf(f))
+    }
+    val body = Json.write(ListMap("version" -> 2, "snapshot" -> next,
+      "bucket_count" -> m.bucketCount, "file_sets" -> sets, "buckets" -> buckets))
     Files.writeString(dir.resolve(s"manifest-$next.json"), body,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     val tmp = dir.resolve(s"HEAD.tmp-$next")
@@ -119,25 +137,69 @@ object Checkpoint {
     next
   }
 
+  private def listDir(p: Path): List[Path] =
+    Using.resource(Files.list(p))(_.iterator().asScala.toList)
+
+  /** Deletes what HEAD does not reference under data/: the directories of
+    * writes that crashed before their commit (for a version-1 checkpoint,
+    * the `bucket=<b>` directories of uncommitted buckets). */
+  private def dropOrphans(outDir: String, head: Manifest): Unit = {
+    val data = Paths.get(outDir, "data")
+    if (Files.isDirectory(data)) {
+      val keep = head.files.values.flatten
+        .map(f => Paths.get(f).getParent.getFileName.toString).toSet ++
+        (head.lineage.keySet -- head.files.keySet).map(b => s"bucket=$b")
+      listDir(data).filterNot(p => keep(p.getFileName.toString)).foreach { p =>
+        Using.resource(Files.walk(p))(_.iterator().asScala.toList).reverse
+          .foreach(Files.delete)
+      }
+    }
+  }
+
+  private def nextSnapshot(outDir: String): Int = headSnapshot(outDir).getOrElse(-1) + 1
+
+  /** Writes `df` as one plain parquet write into the directory of the
+    * next snapshot and returns its data files, relative to outDir. The
+    * `snapshot=<n>` name keeps a raw `spark.read.parquet` of data/ working
+    * (it reads as a partition column). */
+  private def writeFiles(df: DataFrame, outDir: String): Seq[String] = {
+    val rel = s"data/snapshot=${nextSnapshot(outDir)}"
+    df.write.parquet(s"$outDir/$rel")
+    listDir(Paths.get(outDir, rel)).map(_.getFileName.toString)
+      .filter(f => f.endsWith(".parquet") && !f.startsWith("."))
+      .sorted.map(f => s"$rel/$f")
+  }
+
+  /** Runs `f` with Spark job description `label`, then restores the
+    * caller's description. */
+  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try f finally sc.setLocalProperty("spark.job.description", caller)
+  }
+
   private def bucketCol(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
 
   /** Run the quality-filter pipeline over `transcripts`, checkpointed by
-    * conv_id hash bucket. `failAfterBuckets` injects a crash for tests
-    * (forces the per-bucket path, since the one-pass path has no
-    * per-bucket boundary to crash on). */
+    * conv_id hash bucket. `failAfterBuckets` injects a crash for tests: it
+    * forces the per-bucket path (the one-pass path has no per-bucket
+    * boundary to crash on), and after that many commits the next bucket
+    * is written and the run fails before committing it, leaving an
+    * orphan write. */
   def runResumable(transcripts: DataFrame, outDir: String, buckets: Int = 8,
       inputPath: String = "", failAfterBuckets: Int = Int.MaxValue): RunReport = {
-    val (countOpt, committed) = readManifest(outDir)
-    countOpt.foreach { c =>
+    val head = readManifest(outDir)
+    head.bucketCount.foreach { c =>
       require(c == buckets,
         s"resume with buckets=$buckets but checkpoint was written with " +
           s"bucket_count=$c — rerun with buckets=$c or start a fresh outDir")
     }
-    if (committed.isEmpty && failAfterBuckets == Int.MaxValue)
+    dropOrphans(outDir, head)
+    if (head.lineage.isEmpty && failAfterBuckets == Int.MaxValue)
       runFresh(transcripts, outDir, buckets, inputPath)
     else
-      runBucketLoop(transcripts, outDir, buckets, inputPath, failAfterBuckets,
-        committed)
+      runBucketLoop(transcripts, outDir, buckets, inputPath, failAfterBuckets, head)
   }
 
   /** Per-bucket lineage counts as ONE aggregate over (bucket, keep,
@@ -163,10 +225,11 @@ object Checkpoint {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  /** Fresh run: ONE job — bucket, write partitionBy(bucket), per-bucket
-    * lineage from one tally aggregate in a single Observation (no second
-    * pass, no per-bucket re-scan of the input). A null keep or pii_found
-    * (null text or role) counts as false. */
+  /** Fresh run: ONE job — bucket, sort within partitions by bucket, one
+    * plain write (one file per task), per-bucket lineage from one tally
+    * aggregate in a single Observation (no second pass, no per-bucket
+    * re-scan of the input). A null keep or pii_found (null text or role)
+    * counts as false. */
   private def runFresh(transcripts: DataFrame, outDir: String, buckets: Int,
       inputPath: String): RunReport = {
     val t0 = System.nanoTime()
@@ -175,59 +238,69 @@ object Checkpoint {
     val obs = new Observation("fresh_run")
     val tally = udaf(new BucketTally(buckets)).apply(col("bucket"),
       coalesce(col("keep"), lit(false)), coalesce(col("pii_found"), lit(false)))
-    out.observe(obs, tally.as("tally"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/data")
+    val files = labelled(transcripts.sparkSession, "qf:fresh_write") {
+      writeFiles(out.observe(obs, tally.as("tally")).sortWithinPartitions("bucket"), outDir)
+    }
     val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
     val wall = (System.nanoTime() - t0) / 1e9
     val now = System.currentTimeMillis()
     val lineage = (0 until buckets).map(b => b -> BucketLineage(b,
       t(b), t(buckets + b), t(2 * buckets + b), wall, inputPath, now)).toMap
-    commitSnapshot(outDir, buckets, lineage)
+    commitSnapshot(outDir, Manifest(Some(buckets), lineage, lineage.map(_._1 -> files)))
     RunReport((0 until buckets), Nil, lineage.values.toSeq.sortBy(_.bucket))
   }
 
-  /** Resume path: one job per missing bucket, one snapshot per commit. */
+  /** Resume path: one job per missing bucket, each written with its
+    * `bucket` column into its own directory, one snapshot per commit. */
   private def runBucketLoop(transcripts: DataFrame, outDir: String,
       buckets: Int, inputPath: String, failAfterBuckets: Int,
-      committed: Map[Int, BucketLineage]): RunReport = {
-    val todo = (0 until buckets).filterNot(committed.contains)
+      committed: Manifest): RunReport = {
+    val todo = (0 until buckets).filterNot(committed.lineage.contains)
     val done = scala.collection.mutable.ArrayBuffer.empty[BucketLineage]
-    var lineage = committed
-    var processedCount = 0
+    var head = committed.copy(bucketCount = Some(buckets))
     todo.foreach { b =>
-      if (processedCount >= failAfterBuckets)
-        throw new RuntimeException(s"injected failure before bucket $b")
       val t0 = System.nanoTime()
       val slice = transcripts.filter(bucketCol(buckets) === b)
       val obs = new Observation(s"bucket_$b")
-      val out = QualityFilter(slice).observe(obs,
+      val out = QualityFilter(slice).withColumn("bucket", lit(b)).observe(obs,
         count(lit(1)).as("rows_in"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("rows_kept"),
         sum(when(col("pii_found"), 1L).otherwise(0L)).as("pii_rows"))
-      out.write.mode("overwrite").parquet(s"$outDir/data/bucket=$b")
+      val files = labelled(transcripts.sparkSession, s"qf:bucket_$b") {
+        writeFiles(out, outDir)
+      }
+      if (done.size >= failAfterBuckets)
+        throw new RuntimeException(s"injected failure after writing bucket $b, before its commit")
       val m = obs.get
       val l = BucketLineage(b,
         m.getOrElse("rows_in", 0L).asInstanceOf[Long],
         m.getOrElse("rows_kept", 0L).asInstanceOf[Long],
         m.getOrElse("pii_rows", 0L).asInstanceOf[Long],
         (System.nanoTime() - t0) / 1e9, inputPath, System.currentTimeMillis())
-      lineage = lineage + (b -> l)
-      commitSnapshot(outDir, buckets, lineage)
+      head = head.copy(lineage = head.lineage + (b -> l), files = head.files + (b -> files))
+      commitSnapshot(outDir, head)
       done += l
-      processedCount += 1
     }
-    RunReport(done.map(_.bucket).toSeq, committed.keys.toSeq.sorted, done.toSeq)
+    RunReport(done.map(_.bucket).toSeq, committed.lineage.keys.toSeq.sorted, done.toSeq)
   }
 
-  /** Read back the committed output as one DataFrame. Partition discovery
-    * over the data root + an isin filter on the bucket partition column:
-    * only committed bucket directories are scanned (partition pruning), an
-    * orphan directory from a crash between write and commit is excluded,
-    * and empty committed buckets (which produce no directory) don't error. */
+  /** Read back the committed output as one DataFrame: only the files HEAD
+    * lists for committed buckets, filtered on `bucket`, plus the
+    * `bucket=<b>` directories of committed version-1 buckets (an empty
+    * version-1 bucket has no directory). An orphan write from a crash
+    * between write and commit is never listed, so never read. */
   def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val committed = committedBuckets(outDir).keys.toSeq.sorted
-    spark.read.parquet(s"$outDir/data")
-      .filter(col("bucket").isin(committed: _*))
+    val head = readManifest(outDir)
+    val files = head.files.values.flatten.toSeq.distinct.sorted
+    val tracked = Option.when(files.nonEmpty)(
+      spark.read.parquet(files.map(f => s"$outDir/$f"): _*)
+        .filter(col("bucket").isin(head.files.keys.toSeq.sorted: _*)))
+    val v1Dirs = (head.lineage.keySet -- head.files.keySet).toSeq.sorted
+      .map(b => s"$outDir/data/bucket=$b").filter(d => Files.isDirectory(Paths.get(d)))
+    val v1 = Option.when(v1Dirs.nonEmpty)(
+      spark.read.option("basePath", s"$outDir/data").parquet(v1Dirs: _*))
+    (tracked ++ v1).reduceOption(_ unionByName _)
+      .getOrElse(throw new IllegalStateException(s"no committed data files under $outDir"))
       .drop("bucket")
   }
 }

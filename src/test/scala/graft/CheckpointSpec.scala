@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.Meter
@@ -122,6 +126,147 @@ class CheckpointSpec extends AnyFunSuite {
     val kept = QualityFilter(transcripts).filter("keep").count()
     assert(lineage.values.map(_.rowsKept).sum == kept)
     assert(lineage.values.forall(_.inputPath == "sf0.001"))
+  }
+
+  def parquetFiles(dir: String): Seq[java.nio.file.Path] =
+    Files.walk(Paths.get(dir, "data")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
+  /** Same rows, as multisets, over the columns the pipeline writes. */
+  def assertSameRows(a: DataFrame, b: DataFrame, clue: String): Unit = {
+    val cols = Seq("conv_id", "turn_idx", "keep", "pii_found", "scrubbed_text")
+    assert(a.count() == b.count(), clue)
+    assert(a.select(cols.map(col): _*).exceptAll(b.select(cols.map(col): _*)).isEmpty, clue)
+    assert(b.select(cols.map(col): _*).exceptAll(a.select(cols.map(col): _*)).isEmpty, clue)
+  }
+
+  def bucketOf(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
+
+  test("fresh run at 64 buckets writes fewer parquet files than buckets; " +
+      "the manifest is version 2") {
+    val dir = freshDir()
+    Checkpoint.runResumable(transcripts, dir, buckets = 64, inputPath = "sf0.001")
+    val files = parquetFiles(dir)
+    assert(files.nonEmpty && files.size < 64, s"${files.size} files for 64 buckets")
+    val head = Files.readString(Paths.get(dir, "_manifests", "HEAD")).trim
+    assert(Files.readString(Paths.get(dir, "_manifests", s"manifest-$head.json"))
+      .startsWith("""{"version":2,"""))
+    assert(Checkpoint.committedBuckets(dir).keySet == (0 until 64).toSet)
+    assertSameRows(Checkpoint.readCommitted(spark, dir), QualityFilter(transcripts),
+      "fresh run")
+  }
+
+  test("a write that crashed before its commit is never read; resume equals " +
+      "an uncrashed run, rows and per-bucket lineage") {
+    import spark.implicits._
+    val buckets = 8
+    val clean = freshDir()
+    Checkpoint.runResumable(transcripts, clean, buckets = buckets, inputPath = "sf0.001")
+    // crash after writing the first non-empty bucket b > 0, before its commit
+    val b = transcripts.select(bucketOf(buckets)).distinct().as[Int].collect()
+      .filter(_ > 0).min
+    val dir = freshDir()
+    intercept[RuntimeException] {
+      Checkpoint.runResumable(transcripts, dir, buckets = buckets,
+        inputPath = "sf0.001", failAfterBuckets = b)
+    }
+    assert(Checkpoint.committedBuckets(dir).keySet == (0 until b).toSet)
+    val written = spark.read.parquet(s"$dir/data")
+    assert(written.filter(col("bucket") === b).count() > 0, "no orphan rows on disk")
+    val committed = QualityFilter(transcripts).filter(bucketOf(buckets) < b)
+    assertSameRows(Checkpoint.readCommitted(spark, dir), committed, "after crash")
+
+    val report = Checkpoint.runResumable(transcripts, dir, buckets = buckets,
+      inputPath = "sf0.001")
+    assert(report.processed == (b until buckets))
+    assertSameRows(Checkpoint.readCommitted(spark, dir),
+      Checkpoint.readCommitted(spark, clean), "resumed")
+    // the orphan directory is gone: the raw data root holds each row once
+    assert(spark.read.parquet(s"$dir/data").count() == transcripts.count())
+    val (resumed, fresh) = (Checkpoint.committedBuckets(dir), Checkpoint.committedBuckets(clean))
+    (0 until buckets).foreach { k =>
+      assert((resumed(k).rowsIn, resumed(k).rowsKept, resumed(k).piiRows) ==
+        ((fresh(k).rowsIn, fresh(k).rowsKept, fresh(k).piiRows)), s"bucket $k")
+    }
+  }
+
+  test("a version-1 checkpoint (partitionBy directories, unversioned manifest) " +
+      "reads back identically and resumes") {
+    val buckets = 8
+    val dir = freshDir()
+    val out = QualityFilter(transcripts).withColumn("bucket", bucketOf(buckets))
+    out.write.partitionBy("bucket").parquet(s"$dir/data")
+    val counts = out.groupBy("bucket").agg(count(lit(1)),
+        sum(when(col("keep"), 1L).otherwise(0L)),
+        sum(when(col("pii_found"), 1L).otherwise(0L)))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    // buckets 0-3 committed, 4-7 written but not: the v1 writer's format
+    val path = "in\"put\\v1"
+    val entries = (0 until 4).map { b =>
+      val (in, kept, pii) = counts.getOrElse(b, (0L, 0L, 0L))
+      s"""{"bucket":$b,"rows_in":$in,"rows_kept":$kept,"pii_rows":$pii,""" +
+        s""""wall_secs":0.25,"input_path":${graft.core.Json.esc(path)},""" +
+        s""""committed_at_ms":1700000000000}"""
+    }
+    Files.createDirectories(Paths.get(dir, "_manifests"))
+    Files.writeString(Paths.get(dir, "_manifests", "manifest-0.json"),
+      entries.mkString("""{"snapshot":0,"bucket_count":8,"buckets":[""", ",", "]}"))
+    Files.writeString(Paths.get(dir, "_manifests", "HEAD"), "0")
+
+    val v1 = Checkpoint.committedBuckets(dir)
+    assert(v1.keySet == (0 until 4).toSet)
+    assert(v1.values.forall(l => l.inputPath == path && l.wallSecs == 0.25))
+    assert(Checkpoint.committedBucketCount(dir).contains(8))
+    assertSameRows(Checkpoint.readCommitted(spark, dir),
+      out.filter(col("bucket") < 4), "v1 read back")
+
+    val report = Checkpoint.runResumable(transcripts, dir, buckets = buckets,
+      inputPath = "sf0.001")
+    assert(report.skipped == (0 until 4) && report.processed == (4 until 8))
+    assertSameRows(Checkpoint.readCommitted(spark, dir), QualityFilter(transcripts),
+      "v1 resumed")
+    val lineage = Checkpoint.committedBuckets(dir)
+    (0 until buckets).foreach { b =>
+      assert((lineage(b).rowsIn, lineage(b).rowsKept, lineage(b).piiRows) ==
+        counts.getOrElse(b, (0L, 0L, 0L)), s"bucket $b")
+    }
+    assert(lineage(0).inputPath == path && lineage(4).inputPath == "sf0.001")
+  }
+
+  test("every job a run starts carries a qf: description; the caller's " +
+      "description is restored") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = collection.mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        seen += Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+      }
+    }
+    transcripts.count() // lazy setup outside the window
+    sc.setJobDescription("caller")
+    org.apache.spark.GraftSparkShim.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      Checkpoint.runResumable(transcripts, freshDir(), buckets = 8, inputPath = "x")
+      val dir = freshDir()
+      intercept[RuntimeException] {
+        Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x",
+          failAfterBuckets = 2)
+      }
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x")
+      org.apache.spark.GraftSparkShim.drainListeners(sc)
+      val descs = seen.synchronized(seen.toList)
+      assert(descs.contains("qf:fresh_write"), descs)
+      assert((0 until 8).forall(b => descs.contains(s"qf:bucket_$b")), descs)
+      assert(descs.forall(d => d != null && d.startsWith("qf:")), descs)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
   }
 
   test("results round-trip through the in-memory and JDBC store actions") {

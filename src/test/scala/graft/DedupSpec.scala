@@ -466,6 +466,44 @@ class DedupSpec extends AnyFunSuite {
     assert(kept == Set("a", "b"))
   }
 
+  test("keepFirst one-read window form ≡ the group-then-join form, row for row " +
+      "(sf0.001 turns, tied order keys, null keys)") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    // the previous formulation: group by key, join back null-safely
+    def joinForm(df: DataFrame, keyCol: Column, ordCols: Seq[Column]): DataFrame = {
+      val keyed = df.withColumn("__kf_key", keyCol)
+      val firsts = keyed.groupBy(col("__kf_key"))
+        .agg(min(struct(ordCols: _*)).as("__kf_min"))
+        .withColumnRenamed("__kf_key", "__kf_fkey")
+      keyed.join(firsts, col("__kf_key") <=> col("__kf_fkey"))
+        .filter(struct(ordCols: _*) === col("__kf_min"))
+        .drop("__kf_key", "__kf_fkey", "__kf_min")
+    }
+    val t = graft.transcripts.Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
+      .select("conv_id", "turn_idx", "role", "text")
+    // every 7th turn has a null key: the nulls form ONE group
+    val key = when(col("turn_idx") % 7 =!= 0,
+      md5(TextFunctions.normText(col("text"))))
+    val orders = Seq(
+      "total" -> Seq(col("conv_id"), col("turn_idx")),
+      "tied" -> Seq(col("role")))
+    orders.foreach { case (name, ord) =>
+      val a = Dedup.keepFirst(t, key, ord)
+      val b = joinForm(t, key, ord)
+      assert(a.count() == b.count(), name)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, name)
+      assert(a.filter(col("turn_idx") % 7 === 0).count() >= 1, name)
+    }
+    // ties: a key group keeps every row tied on the minimum order value
+    val tied = Dedup.keepFirst(t, key, Seq(col("role")))
+      .groupBy(key.as("k")).count()
+    assert(tied.filter(col("count") > 1).count() > 0, "no tied key group kept > 1 row")
+    // nulls: one group, so only null-key rows of its minimum role survive
+    val nullRoles = Dedup.keepFirst(t, key, Seq(col("role")))
+      .filter(col("turn_idx") % 7 === 0).select("role").distinct().count()
+    assert(nullRoles == 1)
+  }
+
   test("decontaminate plan: broadcast left-semi join, scan pruned to id+text") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val plan = Dedup.decontaminate(
