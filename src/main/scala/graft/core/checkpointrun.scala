@@ -131,8 +131,9 @@ object SuiteCheckpoint {
     * Cross-suite metric cache: validations over the SAME batch (reference
     * identity — one Dataset per loaded batch, like the reference's batch
     * id) plan together through SuiteRunner.runAll, so suites sharing a
-    * fused compute domain cost ONE Spark job and identical value/query
-    * metrics resolve once (execution_engine.py:152-159,557-559). */
+    * fused compute domain share ONE aggregate, all domains cost ONE Spark
+    * action, and identical value/query metrics resolve once
+    * (execution_engine.py:152-159,557-559). */
   def run(name: String, validations: Seq[(DataFrame, Suite)],
       actions: Seq[ValidationAction] = Nil,
       resultFormat: ResultFormatSpec = ResultFormatSpec.default,

@@ -4,12 +4,13 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.CollectLimited.collect_limited
+import graft.metrics.JobLabel
 
 final case class Suite(name: String, expectations: Seq[Expectation])
 
@@ -17,26 +18,34 @@ final case class Suite(name: String, expectations: Seq[Expectation])
   *
   * Physical strategy (SURVEY.md §4): where the reference resolves each metric
   * with its own backend round-trip (sparkdf_execution_engine.py:843-915 fuses
-  * only AGGREGATE_FN partials), we fuse the ENTIRE suite per compute domain:
+  * only AGGREGATE_FN partials), we fuse the ENTIRE suite per compute domain
+  * and collect every domain with ONE Spark action:
   *
-  *   1. optional tiny pre-agg job for z-score mean/stddev dependencies;
-  *   2. ONE projection evaluating every window-free map expectation's
-  *      unexpected/missing boolean followed by ONE `df.agg` that bundles
-  *      row_count, per-expectation unexpected/missing counts, capped
-  *      unexpected-value samples (graft.functions.CollectLimited), and all
-  *      aggregate expectations' aggregates (identical aggregates deduped);
-  *   3. one job per WINDOW-shaped map expectation (unique / compound-unique
-  *      / monotonic): its window would otherwise drag the whole fused
+  *   1. optional tiny pre-agg job per domain for z-score mean/stddev
+  *      dependencies;
+  *   2. per domain, ONE projection evaluating every window-free map
+  *      expectation's unexpected/missing boolean followed by ONE `df.agg`
+  *      that bundles row_count, per-expectation unexpected/missing counts
+  *      and all aggregate expectations' aggregates (identical aggregates
+  *      deduped);
+  *   3. one branch per WINDOW-shaped map expectation (unique / compound-
+  *      unique / monotonic): its window would otherwise drag the whole fused
   *      projection through its shuffle — or a single-partition sort for
-  *      unpartitioned monotonic checks — so each runs isolated, like the
-  *      reference's per-metric jobs (map_condition_auxilliary_methods.py:
-  *      600-625);
-  *   4. individual small jobs only for VALUE-type expectations (median,
-  *      quantiles, distinct sets, KL) and SQL passthroughs.
+  *      unpartitioned monotonic checks — so each gets its own aggregate,
+  *      like the reference's per-metric jobs (map_condition_auxilliary_
+  *      methods.py:600-625);
+  *   4. the single-row results of (2) and (3), over every domain, are the
+  *      branches of ONE union collected by ONE action; AQE submits the
+  *      branches' shuffle stages together, so the DAG scheduler overlaps
+  *      them. Capped unexpected-value samples (graft.functions.
+  *      CollectLimited) follow in a deferred pass, only for expectations
+  *      whose counts came back non-zero;
+  *   5. one job each, one after another, for VALUE-type expectations
+  *      (median, quantiles, distinct sets, KL) and SQL passthroughs.
   *
-  * So a suite of N row-rules costs ~1 scan + 1 scan per window rule instead
-  * of ~N. Transient job failures are retried up to MaxAttempts times
-  * (validation_graph.py:48,263-271).
+  * So a suite of N row-rules costs one action instead of ~N. Transient job
+  * failures are retried up to MaxAttempts times (validation_graph.py:48,
+  * 263-271). Every job carries the description `suite:<names>/<part>`.
   */
 final class SuiteRunner(
     resultFormat: ResultFormatSpec = ResultFormatSpec.default,
@@ -44,7 +53,7 @@ final class SuiteRunner(
     batchViewName: String = "batch") {
 
   import ResultFormat.{MaxResultRecords, BooleanOnly, Basic, Summary, Complete}
-  import SuiteRunner.withRetry
+  import SuiteRunner.{Branch, withRetry}
 
   /** Index columns: the result_format parameter wins over the constructor. */
   private val indexColumns: Seq[String] =
@@ -58,10 +67,11 @@ final class SuiteRunner(
   /** Validate SEVERAL suites against one batch in a single planning unit —
     * the cross-suite metric cache (reference: execution_engine.py:152-159
     * keys resolved metrics by (metric, domainId, valueId) for a whole
-    * session). Map+agg expectations from every suite fuse into ONE job per
-    * compute domain (identical aggregates dedup via the canonical-
-    * expression key), and identical VALUE/query expectations (same case
-    * class, same row_condition) resolve once and share their Evr. */
+    * session). Map+agg expectations from every suite fuse into ONE
+    * aggregate per compute domain (identical aggregates dedup via the
+    * canonical-expression key), every domain is collected by ONE action,
+    * and identical VALUE/query expectations (same case class, same
+    * row_condition) resolve once and share their Evr. */
   def runAll(df: DataFrame, suitesIn: Seq[Suite]): Seq[SuiteResult] = {
     // resolve any still-unresolved $PARAMETER refs (built-ins like now();
     // undefined refs → isolated exception EVRs). Graft.validate resolves
@@ -70,17 +80,15 @@ final class SuiteRunner(
     val evrs = mutable.HashMap.empty[Int, Evr]
     val exps = suites.flatMap(_.expectations).toIndexedSeq
     val bounds = suites.map(_.expectations.size).scanLeft(0)(_ + _)
+    val tag = s"suite:${suites.map(_.name).mkString(",")}"
 
-    // metric jobs run CONCURRENTLY (SuiteRunner.jobEc), so results land in
-    // a lock-guarded map; suite order is restored from the index at the end
-    def record(i: Int, t: Try[Evr]): Unit = evrs.synchronized {
-      evrs(i) = t match {
-        case Success(e) => e
-        case Failure(ex) =>
-          val e = exps(i)
-          Evr(e.expectationType, e.kwargs, success = false, Map.empty,
-            exception = Some(s"${ex.getClass.getSimpleName}: ${ex.getMessage}"))
-      }
+    // suite order is restored from the index at the end
+    def record(i: Int, t: Try[Evr]): Unit = evrs(i) = t match {
+      case Success(e) => e
+      case Failure(ex) =>
+        val e = exps(i)
+        Evr(e.expectationType, e.kwargs, success = false, Map.empty,
+          exception = Some(s"${ex.getClass.getSimpleName}: ${ex.getMessage}"))
     }
 
     // -- schema expectations: pure driver-side --------------------------------
@@ -91,89 +99,38 @@ final class SuiteRunner(
       case _ =>
     }
 
-    // -- group map+agg expectations by compute domain (row_condition) ---------
+    // -- map+agg expectations: every compute domain (row_condition) compiles
+    // into branches of one plan, collected by ONE action ----------------------
     val fuseable = exps.zipWithIndex.collect {
       case (e: MapExpectation, i) => (e: Expectation, i)
       case (e: AggExpectation, i) => (e: Expectation, i)
     }
-    // Independent Spark jobs — one per compute domain, plus one per VALUE
-    // expectation — are SUBMITTED CONCURRENTLY: on a 32-core local box or a
-    // 1000-executor cluster the scheduler interleaves their tasks, so a
-    // suite's wall-clock is ~max(job) instead of Σ(job). The reference runs
-    // its metric graph serially; nothing in the semantics requires that.
-    val domainJobs = fuseable.groupBy(_._1.rowCondition).toSeq.map {
-      case (cond, group) => () =>
+    val branches = fuseable.groupBy(_._1.rowCondition).toSeq.flatMap {
+      case (cond, group) =>
         // an unparseable row_condition (bad SQL, unresolved $param) fails
-        // only ITS domain group, not the whole run
+        // only ITS domain group: filter(String) is analysed eagerly
         Try(cond.map(df.filter).getOrElse(df)) match {
-          case Success(domainDf) => runFusedDomain(domainDf, group, record)
-          case Failure(ex) => group.foreach { case (_, i) => record(i, Failure(ex)) }
+          case Success(domainDf) => domainBranches(domainDf, group, record, tag)
+          case Failure(ex) =>
+            group.foreach { case (_, i) => record(i, Failure(ex)) }
+            Nil
         }
     }
+    runBranches(branches, record, tag)
 
-    // VALUE expectations: one small job each; identical expectations
-    // (case-class equality covers type, kwargs AND row_condition) resolve
-    // once across the planning unit and share the Evr
-    val valueExps = exps.zipWithIndex.collect {
-      case (e: ValueExpectation, i) => (e, i)
-    }
-    val valueMemo = new java.util.concurrent.ConcurrentHashMap[
-      Expectation, Try[Evr]]()
-    val valueJobs = valueExps.map(_._1).distinct.map { e => () =>
-      valueMemo.put(e, Try(withRetry(
-        e.run(e.rowCondition.map(df.filter).getOrElse(df))))): Unit
-    }
-
-    // value jobs are leaves (one Spark action each) → permit-bounded;
-    // domain jobs are parents (they submit their own leaf batch)
-    SuiteRunner.awaitAll(df.sparkSession.sparkContext,
-      domainJobs ++ valueJobs.map(SuiteRunner.leafJob))
-    valueExps.foreach { case (e, i) => record(i, valueMemo.get(e)) }
-
-    // -- query expectations (memoized like value expectations) ----------------
-    val queryMemo = mutable.Map.empty[Expectation, Try[Evr]]
+    // -- VALUE and query expectations: arbitrary multi-action code, one after
+    // another; identical expectations (case-class equality covers type,
+    // kwargs AND row_condition) resolve once across the planning unit and
+    // share the Evr
+    val memo = mutable.Map.empty[Expectation, Try[Evr]]
     exps.zipWithIndex.foreach {
+      case (e: ValueExpectation, i) =>
+        record(i, memo.getOrElseUpdate(e, Try(JobLabel(df.sparkSession,
+          s"$tag/value:${e.expectationType}")(withRetry(
+            e.run(e.rowCondition.map(df.filter).getOrElse(df)))))))
       case (e: UnexpectedRowsExpectation, i) =>
-        record(i, queryMemo.getOrElseUpdate(e, Try(withRetry {
-          // unique per-evaluation view: a fixed name would clobber a user's
-          // session view and race across concurrent validations
-          val view = s"${batchViewName}_${java.util.UUID.randomUUID()
-            .toString.replace("-", "")}"
-          df.createOrReplaceTempView(view)
-          try {
-            val sql = e.unexpectedRowsQuery.replace("{batch}", view)
-            val resDf0 = df.sparkSession.sql(sql)
-            // positional rename: a query may emit duplicate or dotted
-            // output names (SELECT a.x, b.x ...), which col(name) cannot
-            // address unambiguously
-            val resDf = resDf0.toDF(
-              resDf0.columns.indices.map(i => s"__c$i"): _*)
-            // ONE job: the TRUE unexpected-row count and the capped row
-            // sample come from a single fused aggregate (the old shape
-            // re-ran the whole query for the count when the sample cap
-            // was hit). observed_value stays the true count
-            // (unexpected_rows_expectation.py:96). The sample is an
-            // arbitrary capped subset (a query-level ORDER BY does not
-            // survive the aggregate) — the count is exact.
-            val rowStr = concat(lit("["), concat_ws(",",
-              resDf.columns.map(c =>
-                coalesce(col(c).cast(StringType), lit("null"))): _*), lit("]"))
-            val r = resDf.agg(count(lit(1)).as("__n"),
-              collect_limited(rowStr, MaxResultRecords).as("__rows")).head()
-            val total = r.getLong(0)
-            val rows = r.getAs[scala.collection.Seq[String]](1)
-            // reference shape (unexpected_rows_expectation.py:142-152):
-            // observed_value is the human-formatted count string, rows live
-            // under details.unexpected_rows; the raw count rides
-            // unexpected_count for programmatic/oracle use
-            Evr(e.expectationType, e.kwargs, total == 0L, Map(
-              "observed_value" ->
-                s"$total unexpected ${if (total == 1L) "row" else "rows"}",
-              "unexpected_count" -> total,
-              "details" -> Map("unexpected_rows" ->
-                rows.take(resultFormat.partialUnexpectedCount).toSeq)))
-          } finally df.sparkSession.catalog.dropTempView(view)
-        })))
+        record(i, memo.getOrElseUpdate(e, Try(JobLabel(df.sparkSession,
+          s"$tag/query")(withRetry(unexpectedRows(df, e))))))
       case _ =>
     }
 
@@ -185,11 +142,54 @@ final class SuiteRunner(
     }
   }
 
-  /** Pre-resolve z-score dependencies, split window-shaped conditions into
-    * their own jobs, then run the single fused projection+aggregate job for
-    * one compute domain. */
-  private def runFusedDomain(domainDf: DataFrame,
-      group: Seq[(Expectation, Int)], record: (Int, Try[Evr]) => Unit): Unit = {
+  /** Runs an unexpected-rows query against `df` (exposed as a unique
+    * per-evaluation view named after `batchViewName`). */
+  private def unexpectedRows(df: DataFrame, e: UnexpectedRowsExpectation): Evr = {
+    // unique per-evaluation view: a fixed name would clobber a user's
+    // session view and race across concurrent validations
+    val view = s"${batchViewName}_${java.util.UUID.randomUUID()
+      .toString.replace("-", "")}"
+    df.createOrReplaceTempView(view)
+    try {
+      val sql = e.unexpectedRowsQuery.replace("{batch}", view)
+      val resDf0 = df.sparkSession.sql(sql)
+      // positional rename: a query may emit duplicate or dotted
+      // output names (SELECT a.x, b.x ...), which col(name) cannot
+      // address unambiguously
+      val resDf = resDf0.toDF(
+        resDf0.columns.indices.map(i => s"__c$i"): _*)
+      // ONE job: the TRUE unexpected-row count and the capped row
+      // sample come from a single fused aggregate (the old shape
+      // re-ran the whole query for the count when the sample cap
+      // was hit). observed_value stays the true count
+      // (unexpected_rows_expectation.py:96). The sample is an
+      // arbitrary capped subset (a query-level ORDER BY does not
+      // survive the aggregate) — the count is exact.
+      val rowStr = concat(lit("["), concat_ws(",",
+        resDf.columns.map(c =>
+          coalesce(col(c).cast(StringType), lit("null"))): _*), lit("]"))
+      val r = resDf.agg(count(lit(1)).as("__n"),
+        collect_limited(rowStr, MaxResultRecords).as("__rows")).head()
+      val total = r.getLong(0)
+      val rows = r.getAs[scala.collection.Seq[String]](1)
+      // reference shape (unexpected_rows_expectation.py:142-152):
+      // observed_value is the human-formatted count string, rows live
+      // under details.unexpected_rows; the raw count rides
+      // unexpected_count for programmatic/oracle use
+      Evr(e.expectationType, e.kwargs, total == 0L, Map(
+        "observed_value" ->
+          s"$total unexpected ${if (total == 1L) "row" else "rows"}",
+        "unexpected_count" -> total,
+        "details" -> Map("unexpected_rows" ->
+          rows.take(resultFormat.partialUnexpectedCount).toSeq)))
+    } finally df.sparkSession.catalog.dropTempView(view)
+  }
+
+  /** Pre-resolve z-score dependencies, then compile one compute domain into
+    * its branches: the fused projection+aggregate, and one per window-shaped
+    * condition. */
+  private def domainBranches(domainDf: DataFrame, group: Seq[(Expectation, Int)],
+      record: (Int, Try[Evr]) => Unit, tag: String): Seq[Branch] = {
 
     // Per-expectation failure isolation (validation_graph.py:48,263-271 /
     // validator.py:782-805): an expectation referencing a missing column —
@@ -241,7 +241,7 @@ final class SuiteRunner(
     val ok = probed.collect { case (e, i, None) => (e, i) }
     val mapExps = ok.collect { case (e: MapExpectation, i) => (e, i) }
     val aggExps = ok.collect { case (e: AggExpectation, i) => (e, i) }
-    if (mapExps.isEmpty && aggExps.isEmpty) return
+    if (mapExps.isEmpty && aggExps.isEmpty) return Nil
 
     // phase 0: z-score mean/std (one fused pre-agg if any are present).
     // Extraction is per-column Try: an all-null / single-row / zero-stddev
@@ -255,7 +255,7 @@ final class SuiteRunner(
     val zKeys = zExps.map(z => (z._1.column, z._1.exactMoments)).distinct
     val zStats: Map[(String, Boolean), Try[(Double, Double)]] =
       if (zKeys.isEmpty) Map.empty
-      else Try(withRetry {
+      else Try(JobLabel(domainDf.sparkSession, s"$tag/zscore")(withRetry {
         val aggsZ = zKeys.zipWithIndex.flatMap { case ((c, exact), k) =>
           if (exact) Seq(Moments.meanExact(col(c)).as(s"__zm_$k"),
             Moments.stddevExact(col(c)).as(s"__zs_$k"))
@@ -263,7 +263,7 @@ final class SuiteRunner(
             stddev_samp(col(c)).as(s"__zs_$k"))
         }
         domainDf.agg(aggsZ.head, aggsZ.tail: _*).head()
-      }) match {
+      })) match {
         case Failure(ex) => zKeys.map(kk => kk -> Failure[(Double, Double)](ex)).toMap
         case Success(r) => zKeys.zipWithIndex.map { case (kk @ (c, _), k) =>
           kk -> Try {
@@ -291,33 +291,77 @@ final class SuiteRunner(
       case other => other.unexpectedCondition
     }
 
-    // Window-shaped conditions run isolated; everything else fuses.
+    // Window-shaped conditions get branches of their own; everything else
+    // fuses.
     val live = mapExps.filterNot { case (_, i) => zFailedIdx.contains(i) }
     val (windowExps, plainExps) = live.partition(_._1.usesWindow)
-
-    // the fused batch and each window-shaped job are independent Spark
-    // jobs over the same scan — submit them concurrently (see runAll)
     val collectIndexes =
       indexColumns.nonEmpty && resultFormat.rank >= Summary.rank
-    val jobs = (() => runMapAggBatch(
-      domainDf, plainExps, aggExps, unexpectedCond, record)) +:
-      windowExps.map { case (e, i) => () =>
-        e match {
-          // uniqueness = a group count, not a window: groupBy gets map-side
-          // combine and shuffles only (distinct key, count) — the full-row
-          // window shuffle is needed only when per-row INDEXES are requested
-          case (_: ExpectColumnValuesToBeUnique |
-                _: ExpectCompoundColumnsToBeUnique) if !collectIndexes =>
-            runGroupedUnique(domainDf, e, i, record)
-          case _ =>
-            if (e.usesGlobalWindow)
-              SuiteRunner.log.warn(s"${e.expectationType}: unpartitioned " +
-                "window — evaluating on a single partition (reference " +
-                "semantics; pass partitionBy for a shuffle-parallel check)")
-            runMapAggBatch(domainDf, Seq((e, i)), Nil, unexpectedCond, record)
+
+    // a construction error fails only the branch's own expectations
+    def branch(members: Seq[Int])(build: => (DataFrame, Row => Unit)): Option[Branch] =
+      Try(build) match {
+        case Success((frame, decode)) => Some(Branch(frame, members, decode))
+        case Failure(ex) => members.foreach(record(_, Failure(ex))); None
+      }
+    val fused =
+      if (plainExps.isEmpty && aggExps.isEmpty) None
+      else branch((plainExps ++ aggExps).map(_._2))(
+        mapAggBranch(domainDf, plainExps, aggExps, unexpectedCond, record, tag))
+    fused.toSeq ++ windowExps.flatMap { case (e, i) =>
+      branch(Seq(i))(e match {
+        // uniqueness = a group count, not a window: groupBy gets map-side
+        // combine and shuffles only (distinct key, count) — the full-row
+        // window shuffle is needed only when per-row INDEXES are requested
+        case (_: ExpectColumnValuesToBeUnique |
+              _: ExpectCompoundColumnsToBeUnique) if !collectIndexes =>
+          uniqueBranch(domainDf, e, i, record)
+        case _ =>
+          if (e.usesGlobalWindow)
+            SuiteRunner.log.warn(s"${e.expectationType}: unpartitioned " +
+              "window — evaluating on a single partition (reference " +
+              "semantics; pass partitionBy for a shuffle-parallel check)")
+          mapAggBranch(domainDf, Seq((e, i)), Nil, unexpectedCond, record, tag)
+      })
+    }
+  }
+
+  /** Collects every branch with ONE action: branch k's columns are renamed
+    * `__b<k>_<name>` and its rows tagged `__branch` = k, the branches are
+    * combined by `unionByName` (each row leaves the others' columns null),
+    * and the tag routes each row back to its branch's decoder.
+    * AQE submits the branches' shuffle stages together, so the DAG
+    * scheduler overlaps them. When the combined action fails, the branches
+    * re-run one at a time, so a runtime error (a pattern that throws at
+    * evaluation) fails only its own branch's expectations. */
+  private def runBranches(branches: Seq[Branch],
+      record: (Int, Try[Evr]) => Unit, tag: String): Unit = {
+    if (branches.isEmpty) return
+    // a fresh Dataset per attempt: a failed adaptive plan is not re-run
+    def collect(df: DataFrame): Array[Row] =
+      JobLabel(df.sparkSession, s"$tag/domains")(withRetry(df.select("*").collect()))
+    def fail(b: Branch, ex: Throwable): Unit = b.members.foreach(record(_, Failure(ex)))
+    Try {
+      val union = branches.zipWithIndex.map { case (b, k) =>
+        b.frame.select(lit(k).as("__branch") +:
+          b.frame.columns.map(c => col(c).as(s"__b${k}_$c")).toSeq: _*)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      collect(union).map { r =>
+        val k = r.getInt(0)
+        val frame = branches(k).frame
+        k -> (new GenericRowWithSchema(
+          frame.columns.map(c => r.get(r.fieldIndex(s"__b${k}_$c"))), frame.schema): Row)
+      }.toMap
+    } match {
+      case Success(rows) => branches.zipWithIndex.foreach { case (b, k) => b.decode(rows(k)) }
+      case Failure(ex) if branches.size == 1 => fail(branches.head, ex)
+      case Failure(_) => branches.foreach { b =>
+        Try(collect(b.frame).head) match {
+          case Success(row) => b.decode(row)
+          case Failure(ex) => fail(b, ex)
         }
       }
-    SuiteRunner.awaitAll(domainDf.sparkSession.sparkContext, jobs.map(SuiteRunner.leafJob))
+    }
   }
 
   /** Uniqueness via groupBy(keys).count: semantically identical to the
@@ -326,30 +370,29 @@ final class SuiteRunner(
     * keys + counts instead of every row. The unexpected-value sample is
     * rebuilt with row multiplicity (value repeated count times) to match
     * the reference's per-row partial_unexpected_list. */
-  private def runGroupedUnique(domainDf: DataFrame, e: MapExpectation,
-      idx: Int, record: (Int, Try[Evr]) => Unit): Unit = {
+  private def uniqueBranch(domainDf: DataFrame, e: MapExpectation,
+      idx: Int, record: (Int, Try[Evr]) => Unit): (DataFrame, Row => Unit) = {
     val collectValues =
       resultFormat.rank >= Basic.rank && !resultFormat.excludeUnexpectedValues
     val cap =
       if (resultFormat.rank >= Complete.rank) MaxResultRecords
       else resultFormat.partialUnexpectedCount
-    record(idx, Try {
-      val keyCols = e.domainColumns.map(col)
-      val g = domainDf.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
-      val missing = e.missingCondition
-      val dup = !missing && col("__cnt") > 1
-      val aggCols = mutable.ArrayBuffer[Column](
-        sum(col("__cnt")).as("__n"),
-        sum(when(missing, col("__cnt")).otherwise(0L)).as("__mc"),
-        sum(when(dup, col("__cnt")).otherwise(0L)).as("__uc"))
-      if (collectValues) {
-        // value + its count collected in lockstep (same row order within
-        // one aggregation buffer), expanded to row multiplicity below
-        aggCols += collect_limited(when(dup, e.unexpectedValue), cap).as("__uv")
-        aggCols += collect_limited(when(dup, col("__cnt").cast(StringType)), cap)
-          .as("__un")
-      }
-      val row = withRetry(g.agg(aggCols.head, aggCols.tail.toSeq: _*).head())
+    val keyCols = e.domainColumns.map(col)
+    val g = domainDf.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
+    val missing = e.missingCondition
+    val dup = !missing && col("__cnt") > 1
+    val aggCols = mutable.ArrayBuffer[Column](
+      sum(col("__cnt")).as("__n"),
+      sum(when(missing, col("__cnt")).otherwise(0L)).as("__mc"),
+      sum(when(dup, col("__cnt")).otherwise(0L)).as("__uc"))
+    if (collectValues) {
+      // value + its count collected in lockstep (same row order within
+      // one aggregation buffer), expanded to row multiplicity below
+      aggCols += collect_limited(when(dup, e.unexpectedValue), cap).as("__uv")
+      aggCols += collect_limited(when(dup, col("__cnt").cast(StringType)), cap)
+        .as("__un")
+    }
+    (g.agg(aggCols.head, aggCols.tail.toSeq: _*), row => record(idx, Try {
       val n = Option(row.getAs[Any]("__n")).fold(0L)(_.asInstanceOf[Long])
       val mc = Option(row.getAs[Any]("__mc")).fold(0L)(_.asInstanceOf[Long])
       val uc = Option(row.getAs[Any]("__uc")).fold(0L)(_.asInstanceOf[Long])
@@ -366,7 +409,7 @@ final class SuiteRunner(
             .take(cap).toSeq
         }
       buildMapEvr(e, n, mc, uc, vals, Nil)
-    })
+    }))
   }
 
   /** One projection + one SUMS-ONLY aggregate over `domainDf` for the given
@@ -422,8 +465,11 @@ final class SuiteRunner(
 
   /** Deferred sample pass: collect_limited value/index samples for ONLY the
     * expectations whose fused counts showed unexpected rows. The projection
-    * selects just the referenced columns (parquet-pruned), and the
-    * ObjectHashAggregate this forces exists only on the failure path.
+    * selects just the referenced columns (parquet-pruned) and keeps only
+    * rows that fail at least one sampled condition — a narrow filter, so
+    * partitions and the row order within them, hence the samples, are
+    * those of the unfiltered pass. The ObjectHashAggregate this forces
+    * exists only on the failure path.
     *
     * Consistency note: counts come from the fused scan, samples from this
     * second scan — on a nondeterministic source (unstable sampling, a view
@@ -451,6 +497,7 @@ final class SuiteRunner(
         projCols += to_json(struct(indexColumns.map(col): _*)).as(s"__ix$j")
     }
     val proj = domainDf.select(projCols.toSeq: _*)
+      .filter(toSample.indices.map(j => col(s"__u$j")).reduce(_ || _))
     val aggCols = mutable.ArrayBuffer.empty[Column]
     toSample.indices.foreach { j =>
       if (collectValues)
@@ -461,75 +508,68 @@ final class SuiteRunner(
     withRetry(proj.agg(aggCols.head, aggCols.tail.toSeq: _*).head())
   }
 
-  private def runMapAggBatch(domainDf: DataFrame,
+  /** The fused aggregate as a branch; its decoder runs the deferred sample
+    * pass when a count comes back non-zero. */
+  private def mapAggBranch(domainDf: DataFrame,
       mapExps: Seq[(MapExpectation, Int)],
       aggExps: Seq[(AggExpectation, Int)],
       unexpectedCond: MapExpectation => Column,
-      record: (Int, Try[Evr]) => Unit): Unit = {
-    if (mapExps.isEmpty && aggExps.isEmpty) return
+      record: (Int, Try[Evr]) => Unit, tag: String): (DataFrame, Row => Unit) = {
     val collectValues =
       resultFormat.rank >= Basic.rank && !resultFormat.excludeUnexpectedValues
     val collectIndexes = indexColumns.nonEmpty && resultFormat.rank >= Summary.rank
-
-    val rowT = Try {
-      val (fused, resolveAlias) =
-        fusedFrame(domainDf, mapExps, aggExps, unexpectedCond)
-      (withRetry(fused.head()), resolveAlias)
-    }
-    rowT match {
-      case Failure(ex) =>
-        (mapExps ++ aggExps).foreach { case (_, i) => record(i, Failure(ex)) }
-      case Success((row, resolveAlias)) =>
-        val n = row.getAs[Long]("__n")
-        // deferred samples: only for expectations with unexpected rows
-        val toSample: Seq[Int] =
-          if (!collectValues && !collectIndexes) Nil
-          else mapExps.indices.filter(k => row.getAs[Long](s"__uc$k") > 0L)
-        val samplePos: Map[Int, Int] = toSample.zipWithIndex.toMap
-        lazy val sampleT: Try[Row] = Try(sampleRow(domainDf,
-          toSample.map(k => mapExps(k)._1), unexpectedCond,
-          collectValues, collectIndexes))
-        mapExps.zipWithIndex.foreach { case ((e, i), k) =>
-          record(i, Try {
-            val uc = row.getAs[Long](s"__uc$k")
-            val mc = row.getAs[Long](s"__mc$k")
-            val (vals, ixs) = samplePos.get(k) match {
-              case None => (Nil, Nil)
-              case Some(j) =>
-                val s = sampleT.get // a sample failure fails only samplers
-                (if (collectValues)
-                  s.getAs[scala.collection.Seq[String]](s"__uv$j").toSeq
-                    .map(v => if (v == SuiteRunner.NullSentinel) null else v)
-                 else Nil,
-                 if (collectIndexes)
-                  s.getAs[scala.collection.Seq[String]](s"__uix$j").toSeq else Nil)
-            }
-            buildMapEvr(e, n, mc, uc, vals, ixs)
-          })
-        }
-        aggExps.foreach { case (e, i) =>
-          record(i, Try {
-            val resolved = e.aggs.map { case (name, _) =>
-              name -> row.getAs[Any](resolveAlias((i, name)))
-            }.toMap
-            val (ok, obs) = e.validate(resolved)
-            // column-aggregate EVRs carry element/missing counts like the
-            // reference's (expectation.py aggregate result shape); the counts
-            // ride the fused pass via the dedup'd __ec/__nn aggregates
-            val extra = (resolved.get("__ec"), resolved.get("__nn")) match {
-              case (Some(ec: Long), Some(nn: Long))
-                  if resultFormat.rank >= Basic.rank =>
-                Map[String, Any]("element_count" -> ec,
-                  "missing_count" -> (ec - nn),
-                  "missing_percent" ->
-                    (if (ec == 0L) null else (ec - nn).toDouble / ec * 100.0))
-              case _ => Map.empty[String, Any]
-            }
-            Evr(e.expectationType, e.kwargs, ok,
-              Map("observed_value" -> obs) ++ extra)
-          })
-        }
-    }
+    val (fused, resolveAlias) = fusedFrame(domainDf, mapExps, aggExps, unexpectedCond)
+    (fused, row => {
+      val n = row.getAs[Long]("__n")
+      // deferred samples: only for expectations with unexpected rows
+      val toSample: Seq[Int] =
+        if (!collectValues && !collectIndexes) Nil
+        else mapExps.indices.filter(k => row.getAs[Long](s"__uc$k") > 0L)
+      val samplePos: Map[Int, Int] = toSample.zipWithIndex.toMap
+      lazy val sampleT: Try[Row] = Try(JobLabel(domainDf.sparkSession,
+        s"$tag/samples")(sampleRow(domainDf, toSample.map(k => mapExps(k)._1),
+          unexpectedCond, collectValues, collectIndexes)))
+      mapExps.zipWithIndex.foreach { case ((e, i), k) =>
+        record(i, Try {
+          val uc = row.getAs[Long](s"__uc$k")
+          val mc = row.getAs[Long](s"__mc$k")
+          val (vals, ixs) = samplePos.get(k) match {
+            case None => (Nil, Nil)
+            case Some(j) =>
+              val s = sampleT.get // a sample failure fails only samplers
+              (if (collectValues)
+                s.getAs[scala.collection.Seq[String]](s"__uv$j").toSeq
+                  .map(v => if (v == SuiteRunner.NullSentinel) null else v)
+               else Nil,
+               if (collectIndexes)
+                s.getAs[scala.collection.Seq[String]](s"__uix$j").toSeq else Nil)
+          }
+          buildMapEvr(e, n, mc, uc, vals, ixs)
+        })
+      }
+      aggExps.foreach { case (e, i) =>
+        record(i, Try {
+          val resolved = e.aggs.map { case (name, _) =>
+            name -> row.getAs[Any](resolveAlias((i, name)))
+          }.toMap
+          val (ok, obs) = e.validate(resolved)
+          // column-aggregate EVRs carry element/missing counts like the
+          // reference's (expectation.py aggregate result shape); the counts
+          // ride the fused pass via the dedup'd __ec/__nn aggregates
+          val extra = (resolved.get("__ec"), resolved.get("__nn")) match {
+            case (Some(ec: Long), Some(nn: Long))
+                if resultFormat.rank >= Basic.rank =>
+              Map[String, Any]("element_count" -> ec,
+                "missing_count" -> (ec - nn),
+                "missing_percent" ->
+                  (if (ec == 0L) null else (ec - nn).toDouble / ec * 100.0))
+            case _ => Map.empty[String, Any]
+          }
+          Evr(e.expectationType, e.kwargs, ok,
+            Map("observed_value" -> obs) ++ extra)
+        })
+      }
+    })
   }
 
   /** _format_map_output port (expectations/expectation.py:2605-2752). */
@@ -614,71 +654,11 @@ object SuiteRunner {
   private[core] val NullSentinel = "\u0000\u0000graft:null\u0000\u0000"
   private[core] val log = org.slf4j.LoggerFactory.getLogger(classOf[SuiteRunner])
 
-  /** Shared daemon pool for concurrent metric-job SUBMISSION. Threads here
-    * only drive Spark actions (the work itself runs on executors), so a
-    * cached pool is safe; jobs nest (runAll → runFusedDomain), hence no
-    * fixed THREAD bound that could deadlock a parent waiting on its
-    * children. Backpressure comes from [[jobPermits]] instead: LEAF jobs
-    * (the ones that actually run Spark actions) acquire a permit, parent
-    * jobs never hold one — a checkpoint batching hundreds of suites queues
-    * beyond `maxConcurrentJobs` in-flight actions instead of flooding the
-    * scheduler and driver with unbounded simultaneous jobs. */
-  private[core] lazy val jobPool =
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
-      val t = new Thread(r, "graft-metric-job")
-      t.setDaemon(true)
-      t
-    })
-
-  /** Cap on concurrently-RUNNING leaf metric jobs (override with
-    * -Dgraft.maxConcurrentJobs=N). Default: 2× cores, floor 8 — enough to
-    * keep a local[32] scheduler saturated, bounded for a 1000-suite batch. */
-  private[core] val maxConcurrentJobs: Int =
-    sys.props.get("graft.maxConcurrentJobs").flatMap(_.toIntOption)
-      .getOrElse(math.max(8, 2 * Runtime.getRuntime.availableProcessors()))
-  private val jobPermits =
-    new java.util.concurrent.Semaphore(maxConcurrentJobs)
-
-  /** Wrap a leaf thunk with permit backpressure. Only leaves acquire, so
-    * the nested-submission pattern (domain job → window jobs) cannot
-    * deadlock on exhausted permits. */
-  private[core] def leafJob(f: () => Unit): () => Unit = () => {
-    jobPermits.acquire()
-    try f() finally jobPermits.release()
-  }
-
-  /** Job properties the submitting thread hands to each pooled job. Spark
-    * keeps them in inheritable thread-locals, so a cached pool thread would
-    * otherwise carry the job group of whichever thread created it. */
-  private val JobProperties = Seq("spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.job.tags")
-
-  /** Run the thunks concurrently, wait for all, rethrow the first failure
-    * (after every job has finished — matching the serial form's guarantee
-    * that record() callbacks for completed jobs are never lost). Each job
-    * runs under the caller's job group, description and tags. */
-  private[core] def awaitAll(sc: SparkContext, jobs: Seq[() => Unit]): Unit = {
-    if (jobs.isEmpty) return
-    if (jobs.size == 1) { jobs.head(); return }
-    val caller = JobProperties.map(k => k -> sc.getLocalProperty(k))
-    val futures = jobs.map(j =>
-      jobPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = {
-          val saved = JobProperties.map(k => k -> sc.getLocalProperty(k))
-          caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-          try j() finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        }
-      }))
-    var firstFailure: Throwable = null
-    futures.foreach { f =>
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          if (firstFailure == null) firstFailure = e.getCause
-      }
-    }
-    if (firstFailure != null) throw firstFailure
-  }
+  /** One single-row frame of a suite's combined plan, the expectation
+    * indexes it decides, and the decoder that records their EVRs from its
+    * row. */
+  private final case class Branch(frame: DataFrame, members: Seq[Int],
+      decode: Row => Unit)
 }
 
 object Graft {

@@ -135,10 +135,10 @@ object CoreQueries {
       // counts/sums are exact and the observed means are integer-valued
       // exact sums (oracle float-parity rules).
       // (measured: pinning this with localCheckpoint to share one shuffle
-      // across the suite's concurrent jobs cost MORE than the per-job
-      // re-shuffle — the block-store write serializes 600k rows while the
-      // three 1.7 MB-input jobs overlap fine — so each job keeps its own
-      // scan+spread)
+      // across the suite's branches cost MORE than a re-shuffle per branch
+      // — the block-store write serializes 600k rows while the branches'
+      // 1.7 MB-input stages overlap fine within the suite's one action — so
+      // each branch keeps its own scan+spread)
       val li = t(dir, "lineitem")
         .select("l_quantity", "l_returnflag", "l_linestatus", "l_orderkey",
           "l_extendedprice", "l_discount", "l_partkey", "l_suppkey")

@@ -13,6 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.core.Json
+import graft.metrics.JobLabel
 
 /** Resumable, lineage-tracked pipeline runs with Iceberg-style snapshot
   * semantics (SURVEY.md §7.4: no Iceberg jar ships with this Spark build,
@@ -170,15 +171,6 @@ object Checkpoint {
       .sorted.map(f => s"$rel/$f")
   }
 
-  /** Runs `f` with Spark job description `label`, then restores the
-    * caller's description. */
-  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try f finally sc.setLocalProperty("spark.job.description", caller)
-  }
-
   private def bucketCol(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
 
   /** Run the quality-filter pipeline over `transcripts`, checkpointed by
@@ -238,7 +230,7 @@ object Checkpoint {
     val obs = new Observation("fresh_run")
     val tally = udaf(new BucketTally(buckets)).apply(col("bucket"),
       coalesce(col("keep"), lit(false)), coalesce(col("pii_found"), lit(false)))
-    val files = labelled(transcripts.sparkSession, "qf:fresh_write") {
+    val files = JobLabel(transcripts.sparkSession, "qf:fresh_write") {
       writeFiles(out.observe(obs, tally.as("tally")).sortWithinPartitions("bucket"), outDir)
     }
     val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
@@ -266,7 +258,7 @@ object Checkpoint {
         count(lit(1)).as("rows_in"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("rows_kept"),
         sum(when(col("pii_found"), 1L).otherwise(0L)).as("pii_rows"))
-      val files = labelled(transcripts.sparkSession, s"qf:bucket_$b") {
+      val files = JobLabel(transcripts.sparkSession, s"qf:bucket_$b") {
         writeFiles(out, outDir)
       }
       if (done.size >= failAfterBuckets)

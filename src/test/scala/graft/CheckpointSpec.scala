@@ -236,37 +236,25 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("every job a run starts carries a qf: description; the caller's " +
       "description is restored") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val seen = collection.mutable.ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += Option(e.properties).map(_.getProperty("spark.job.description")).orNull
-      }
-    }
     transcripts.count() // lazy setup outside the window
     sc.setJobDescription("caller")
-    org.apache.spark.GraftSparkShim.drainListeners(sc)
-    sc.addSparkListener(listener)
     try {
-      Checkpoint.runResumable(transcripts, freshDir(), buckets = 8, inputPath = "x")
-      val dir = freshDir()
-      intercept[RuntimeException] {
-        Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x",
-          failAfterBuckets = 2)
-      }
-      assert(sc.getLocalProperty("spark.job.description") == "caller")
-      Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x")
-      org.apache.spark.GraftSparkShim.drainListeners(sc)
-      val descs = seen.synchronized(seen.toList)
+      val descs = JobCapture(sc) {
+        Checkpoint.runResumable(transcripts, freshDir(), buckets = 8, inputPath = "x")
+        val dir = freshDir()
+        intercept[RuntimeException] {
+          Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x",
+            failAfterBuckets = 2)
+        }
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x")
+      }.map(_.description)
       assert(descs.contains("qf:fresh_write"), descs)
       assert((0 until 8).forall(b => descs.contains(s"qf:bucket_$b")), descs)
       assert(descs.forall(d => d != null && d.startsWith("qf:")), descs)
       assert(sc.getLocalProperty("spark.job.description") == "caller")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.setJobDescription(null)
-    }
+    } finally sc.setJobDescription(null)
   }
 
   test("results round-trip through the in-memory and JDBC store actions") {

@@ -348,11 +348,16 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("mixed suite: fused pass is window-free, window exps run isolated") {
-    val plans = collection.mutable.ArrayBuffer.empty[String]
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val plans = collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
+        plans.synchronized { plans += qe.executedPlan }
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -367,46 +372,149 @@ class EngineSpec extends AnyFunSuite {
       // QueryExecutionListener events ride the listener bus: drain it
       GraftSparkShim.drainListeners(spark.sparkContext)
       val snap = plans.synchronized(plans.toList)
-      val fused = snap.filter(_.contains("__uc1")) // ≥2 fused map exps
+      // the walk descends through the final AQE plan's query stages
+      object Aqe extends AdaptiveSparkPlanHelper
+      // the fused aggregate is the one that computes __uc1 (≥2 fused map
+      // exps); the union pads the other branches with a null __uc1
+      def fusedAgg(p: SparkPlan) = p match {
+        case a: BaseAggregateExec => a.resultExpressions.exists {
+          case Alias(_: Literal, _) => false
+          case n => n.name.endsWith("__uc1")
+        }
+        case _ => false
+      }
+      def has(p: SparkPlan)(f: SparkPlan => Boolean) = Aqe.find(p)(f).isDefined
+      val isWindow = (p: SparkPlan) => p.isInstanceOf[WindowExec]
+      val fused = snap.filter(has(_)(fusedAgg))
       assert(fused.nonEmpty, "expected a fused multi-expectation job")
-      assert(fused.forall(!_.contains("Window")),
-        "fused pass must not contain a Window operator")
-      assert(snap.exists(_.contains("Window")),
-        "window expectations should still run (in their own jobs)")
+      fused.foreach { plan =>
+        Aqe.collect(plan) { case a if fusedAgg(a) => a }.foreach(a =>
+          assert(!has(a)(isWindow), "fused pass must not contain a Window operator"))
+      }
+      // window expectations still run, each in a union branch of its own
+      val branches = snap.flatMap(Aqe.collect(_) { case u: UnionExec => u.children }).flatten
+      val windowed = branches.filter(has(_)(isWindow))
+      assert(windowed.size == 1,
+        s"the window expectation should run in one branch of its own: $snap")
+      assert(windowed.forall(!has(_)(fusedAgg)),
+        "the window branch must not hold the fused aggregate")
     } finally spark.listenerManager.unregister(listener)
   }
 
   test("pooled suite jobs carry the caller's job group, not a stale one") {
-    // two window rules + a value expectation: the fused pass, both window
-    // jobs and the median job all run on SuiteRunner's cached pool threads
+    // two window rules + a value expectation: the combined action's jobs
+    // (fused, uniqueness and window branches) and the median job all run
+    // under the caller's job group, including on a second run with a new
+    // group
     val suite = Suite("groups", Seq(
       ExpectColumnValuesToNotBeNull("alpha"),
       ExpectColumnValuesToBeUnique("alpha"),
       ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x")),
       ExpectColumnMedianToBeBetween("x", Some(0.0), Some(99.0))))
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
-    }
     try {
       sc.setJobGroup("a", "first run")
       assert(Graft.validate(df, suite).success)
-      GraftSparkShim.drainListeners(sc)
-      sc.addSparkListener(listener)
       sc.setJobGroup("b", "second run")
-      assert(Graft.validate(df, suite).success)
-      GraftSparkShim.drainListeners(sc)
-      import scala.jdk.CollectionConverters._
-      val seen = groups.asScala.toList
+      val seen = JobCapture(sc)(assert(Graft.validate(df, suite).success))
+        .map(j => String.valueOf(j.group))
       assert(seen.size >= 4, s"expected the suite's jobs, saw $seen")
       assert(seen.forall(_ == "b"), s"jobs with a stale group: $seen")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup()
+    } finally sc.clearJobGroup()
+  }
+
+  test("every map/agg/window branch of a runAll resolves in ONE execution") {
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        execs.add(fn)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        execs.add(fn)
     }
+    // q01-shaped (fused map rules, aggregates, one uniqueness rule) plus a
+    // window rule and a second row_condition domain; all pass, so no
+    // sample pass runs
+    val suite = Suite("one_action", Seq(
+      ExpectColumnValuesToNotBeNull("x"),
+      ExpectColumnValuesToBeBetween("x", Some(1), Some(10)),
+      ExpectColumnValuesToBeInSet("parity", Seq("even", "odd")),
+      ExpectColumnValuesToMatchRegex("alpha", "^[a-j]$"),
+      ExpectColumnValueLengthsToEqual("alpha", 1),
+      ExpectColumnValuesToBeUnique("alpha"),
+      ExpectColumnMeanToBeBetween("x", Some(5.0), Some(6.0)),
+      ExpectColumnMaxToBeBetween("x", Some(10), Some(10)),
+      ExpectColumnUniqueValueCountToBeBetween("parity", Some(2), Some(2)),
+      ExpectTableRowCountToBeBetween(Some(10), Some(10)),
+      ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x")),
+      ExpectColumnValuesToNotBeNull("z", rowCondition = Some("x <= 5"))))
+    val runner = new SuiteRunner()
+    // no earlier query's event may land after registration
+    GraftSparkShim.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      (1 to 2).foreach { n =>
+        assert(runner.run(df, suite).success)
+        GraftSparkShim.drainListeners(spark.sparkContext)
+        import scala.jdk.CollectionConverters._
+        val data = execs.asScala.toList.filter(_ != "command")
+        assert(data.size == n, s"runAll #$n: expected $n executions, saw $data")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a runtime error in the combined action fails only its own branch") {
+    // fused, uniqueness and window branches; '{' is a reserved pattern
+    // character, so the fused branch throws while it evaluates
+    val good = Seq(
+      ExpectColumnValuesToNotBeNull("x"),
+      ExpectColumnValuesToBeUnique("alpha"),
+      ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x")))
+    val bad = ExpectColumnValuesToMatchStrftimeFormat("alpha", "%Y{")
+    val clean = Graft.validate(df, Suite("t", good)).results
+    val r = Graft.validate(df, Suite("t", bad +: good)).results
+    assert(r(0).exception.isDefined && r(1).exception.isDefined,
+      "the fused branch's expectations get exception EVRs")
+    assert(r.drop(2) == clean.drop(1), "other branches are unaffected")
+    // a transient failure is still retried: the combined action's first
+    // attempt dies, the second succeeds
+    import org.apache.spark.sql.functions.{col, udf}
+    EngineSpec.failuresLeft.set(1)
+    val flaky = udf((x: Int) => {
+      if (EngineSpec.failuresLeft.getAndDecrement() > 0)
+        throw new RuntimeException("injected transient failure")
+      x
+    })
+    try {
+      val t = Graft.validate(df.withColumn("fx", flaky(col("x"))), Suite("t", Seq(
+        ExpectColumnValuesToBeBetween("fx", Some(1), Some(10)),
+        ExpectColumnValuesToBeUnique("alpha"),
+        ExpectColumnValuesToBeIncreasing("x", orderBy = Seq("x"))))).results
+      assert(t.forall(e => e.success && e.exception.isEmpty), t)
+    } finally EngineSpec.failuresLeft.set(0)
+  }
+
+  test("deferred samples: min(cap, unexpected_count) entries, each failing its condition") {
+    val d = spark.range(0, 2000, 1, 4).selectExpr("id",
+      "concat(CASE WHEN id % 7 = 0 THEN 'x' ELSE 'v' END, id % 13) AS cat",
+      "CASE WHEN id % 50 = 0 THEN 'bad' ELSE 'ok' END AS code",
+      "CASE WHEN id % 200 = 0 THEN 'long' ELSE 'ab' END AS tag")
+    val sr = Graft.validate(d, Suite("samples", Seq(
+      ExpectColumnValuesToNotBeNull("id"),
+      ExpectColumnValuesToMatchRegex("cat", "^v"),   // 286 unexpected
+      ExpectColumnValuesToBeInSet("code", Seq("ok")), // 40 unexpected
+      ExpectColumnValueLengthsToEqual("tag", 2))))    // 10 unexpected
+    val cap = ResultFormat.PartialUnexpectedCount
+    val fails: Seq[String => Boolean] = Seq(
+      v => !v.startsWith("v"), v => v != "ok", v => v.length != 2)
+    sr.results.drop(1).zip(fails).foreach { case (e, failsCondition) =>
+      val uc = e.result("unexpected_count").asInstanceOf[Long]
+      val list = e.result("partial_unexpected_list").asInstanceOf[Seq[String]]
+      assert(list.size == math.min(cap.toLong, uc), e)
+      assert(list.forall(failsCondition), e)
+    }
+    assert(sr.results.drop(1).map(_.result("unexpected_count")) == Seq(286L, 40L, 10L))
   }
 
   test("identical aggregates are deduped in the fused plan") {

@@ -1,0 +1,34 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{GraftSparkShim, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** A job's `spark.job.description` and `spark.jobGroup.id` (null if unset). */
+final case class CapturedJob(description: String, group: String)
+
+/** Records the properties of every job that starts on a context while `f`
+  * runs. The listener bus is drained before the listener attaches and
+  * after `f`, so the capture holds the jobs started during `f` and none
+  * from before it. */
+object JobCapture {
+  def apply(sc: SparkContext)(f: => Unit): List[CapturedJob] = {
+    val jobs = new ConcurrentLinkedQueue[CapturedJob]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        jobs.add(CapturedJob(prop("spark.job.description"), prop("spark.jobGroup.id")))
+      }
+    }
+    GraftSparkShim.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      f
+      GraftSparkShim.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toList
+  }
+}
