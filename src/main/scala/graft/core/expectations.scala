@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
 
+import graft.functions.RegexGuard
+
 /** Declarative expectation model.
   *
   * Mirrors the reference hierarchy (expectations/expectation.py:259,1511,
@@ -153,7 +155,7 @@ final case class ExpectColumnValuesToMatchRegex(column: String, regex: String,
     extends ColumnMapExpectation {
   val expectationType = "expect_column_values_to_match_regex"
   def kwargs = Map("column" -> column, "regex" -> regex, "mostly" -> mostly)
-  def expected(c: Column): Column = c.rlike(regex)
+  def expected(c: Column): Column = RegexGuard.rlike(c, regex)
 }
 
 final case class ExpectColumnValuesToNotMatchRegex(column: String, regex: String,
@@ -161,7 +163,7 @@ final case class ExpectColumnValuesToNotMatchRegex(column: String, regex: String
     extends ColumnMapExpectation {
   val expectationType = "expect_column_values_to_not_match_regex"
   def kwargs = Map("column" -> column, "regex" -> regex, "mostly" -> mostly)
-  def expected(c: Column): Column = !c.rlike(regex)
+  def expected(c: Column): Column = !RegexGuard.rlike(c, regex)
 }
 
 final case class ExpectColumnValuesToMatchRegexList(column: String,
@@ -171,7 +173,7 @@ final case class ExpectColumnValuesToMatchRegexList(column: String,
   def kwargs = Map("column" -> column, "regex_list" -> regexList,
     "match_on" -> matchOn, "mostly" -> mostly)
   def expected(c: Column): Column = {
-    val conds = regexList.map(c.rlike)
+    val conds = regexList.map(RegexGuard.rlike(c, _))
     if (matchOn == "all") conds.reduce(_ && _) else conds.reduce(_ || _)
   }
 }
@@ -181,7 +183,7 @@ final case class ExpectColumnValuesToNotMatchRegexList(column: String,
     override val rowCondition: Option[String] = None) extends ColumnMapExpectation {
   val expectationType = "expect_column_values_to_not_match_regex_list"
   def kwargs = Map("column" -> column, "regex_list" -> regexList, "mostly" -> mostly)
-  def expected(c: Column): Column = regexList.map(r => !c.rlike(r)).reduce(_ && _)
+  def expected(c: Column): Column = regexList.map(r => !RegexGuard.rlike(c, r)).reduce(_ && _)
 }
 
 final case class ExpectColumnValuesToMatchLikePattern(column: String,
@@ -418,7 +420,7 @@ object CustomColumnMapExpectation {
   /** RegexBasedColumnMapExpectation.register_metric analogue. */
   def regexBased(expectationType: String, column: String, regex: String,
       mostly: Double = 1.0): CustomColumnMapExpectation =
-    CustomColumnMapExpectation(expectationType, column, _.rlike(regex), mostly)
+    CustomColumnMapExpectation(expectationType, column, RegexGuard.rlike(_, regex), mostly)
   /** SetBasedColumnMapExpectation analogue
     * (set_based_column_map_expectation.py:48-139). */
   def setBased(expectationType: String, column: String, set: Seq[Any],

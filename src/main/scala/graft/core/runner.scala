@@ -730,7 +730,7 @@ object Graft {
         if (isMap) longOf("missing_count") else null,
         longOf("unexpected_count"), obs)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+    // a local relation: collecting it starts no Spark job
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 }

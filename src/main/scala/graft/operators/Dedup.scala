@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.metrics.JobLabel
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -64,63 +66,66 @@ object Dedup {
 
   def minhashLshPairsWithStats(df: DataFrame, idCol: String, textCol: String,
       k: Int = 12, bands: Int = 4, threshold: Double = 0.5,
-      maxBucket: Int = Lsh.DefaultMaxBucket): (DataFrame, LshStats) = {
-    val exploded = df.select(col(idCol).as("doc"),
-      posexplode(graft.functions.MinHashSig.minhash_bands(col(textCol), k, bands))
-        .as(Seq("band_idx", "band_key")))
-    // Single kernel evaluation under the default cap: the narrow
-    // (doc, band_idx, band_key) projection is cached for the census +
-    // candidate anti-join, candidates are pinned with an eager
-    // localCheckpoint, and the cache is released (blocking) before
-    // returning — the MinHash kernel runs once per document total.
-    val (cand, stats) = Lsh.withCappedBuckets(exploded, maxBucket, "minhashLshPairs") { capped =>
-      val a = capped.select(col("doc").as("doc_a"), col("band_idx"), col("band_key"))
-      val b = capped.select(col("doc").as("doc_b"), col("band_idx"), col("band_key"))
-      a.join(b, Seq("band_idx", "band_key"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates("doc_a", "doc_b")
+      maxBucket: Int = Lsh.DefaultMaxBucket): (DataFrame, LshStats) =
+    JobLabel(df.sparkSession, "dedup:minhash_pairs") {
+      val exploded = df.select(col(idCol).as("doc"),
+        posexplode(graft.functions.MinHashSig.minhash_bands(col(textCol), k, bands))
+          .as(Seq("band_idx", "band_key")))
+      // Single kernel evaluation under the default cap: the narrow
+      // (doc, band_idx, band_key) projection is cached for the census +
+      // candidate anti-join, candidates are pinned with an eager
+      // localCheckpoint, and the cache is released (blocking) before
+      // returning — the MinHash kernel runs once per document total. The
+      // candidate count rides that checkpoint as an observation.
+      val nCandObs = new Observation("minhash_candidates")
+      val (cand, stats) = Lsh.withCappedBuckets(exploded, maxBucket, "minhashLshPairs") { capped =>
+        val a = capped.select(col("doc").as("doc_a"), col("band_idx"), col("band_key"))
+        val b = capped.select(col("doc").as("doc_b"), col("band_idx"), col("band_key"))
+        a.join(b, Seq("band_idx", "band_key"))
+          .filter(col("doc_a") < col("doc_b"))
+          .select("doc_a", "doc_b")
+          .dropDuplicates("doc_a", "doc_b")
+          .observe(nCandObs, count(lit(1)).as("n"))
+      }
+      // Verification joins the (id, shingles) table back once per side —
+      // but ONLY for docs that appear in a candidate pair. Without the
+      // prefilter each join side shuffles the FULL corpus's shingle arrays
+      // (~text bytes × 2 sides) and evaluates the shingle kernel over every
+      // document, to verify what is typically a sub-percent candidate set;
+      // measured on a 10M-doc corpus that was 2× ~20 GB uncompressed
+      // shuffle + 2 full-corpus kernel passes. The candidate-id set is
+      // already materialized (localCheckpoint inside withCappedBuckets), so
+      // its size is known cheaply: small sets broadcast into a map-side
+      // semi-join (no shuffle of the shingle table at all); above the
+      // limit the semi-join shuffles only (id) pairs — never shingles.
+      // The filtered table is cached so the kernel runs once per candidate
+      // doc, and the verified pairs are pinned before the cache releases.
+      val candIds = cand.select(col("doc_a").as("__sid"))
+        .union(cand.select(col("doc_b").as("__sid"))).distinct()
+      // broadcast gate from the pair count observed on the checkpoint job
+      // (no job of its own; a distinct-count of the ids would pay a full
+      // exchange just to make this decision; 2·|pairs| bounds |ids| from
+      // above, so the gate stays conservative)
+      val nCand = nCandObs.get("n").asInstanceOf[Long]
+      val idsHinted =
+        if (2L * nCand <= BroadcastIdLimit) broadcast(candIds) else candIds
+      val sh = df.select(col(idCol).as("__sid"),
+          graft.functions.MinHashSig.shingles_native(col(textCol)).as("__sh"))
+        .join(idsHinted, Seq("__sid"), "left_semi")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      val verified = try {
+        cand
+          .join(sh.select(col("__sid").as("doc_a"), col("__sh").as("sh_a")), "doc_a")
+          .join(sh.select(col("__sid").as("doc_b"), col("__sh").as("sh_b")), "doc_b")
+          .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType))
+          .withColumn("jaccard",
+            col("__i") / ((size(col("sh_a")) + size(col("sh_b"))).cast(DoubleType) - col("__i")))
+          .filter(col("jaccard") >= threshold)
+          .select(col("doc_a"), col("doc_b"), col("jaccard"))
+          .localCheckpoint()
+      } finally sh.unpersist(blocking = true)
+      (verified, stats)
     }
-    // Verification joins the (id, shingles) table back once per side —
-    // but ONLY for docs that appear in a candidate pair. Without the
-    // prefilter each join side shuffles the FULL corpus's shingle arrays
-    // (~text bytes × 2 sides) and evaluates the shingle kernel over every
-    // document, to verify what is typically a sub-percent candidate set;
-    // measured on a 10M-doc corpus that was 2× ~20 GB uncompressed
-    // shuffle + 2 full-corpus kernel passes. The candidate-id set is
-    // already materialized (localCheckpoint inside withCappedBuckets), so
-    // its size is known cheaply: small sets broadcast into a map-side
-    // semi-join (no shuffle of the shingle table at all); above the
-    // limit the semi-join shuffles only (id) pairs — never shingles.
-    // The filtered table is cached so the kernel runs once per candidate
-    // doc, and the verified pairs are pinned before the cache releases.
-    val candIds = cand.select(col("doc_a").as("__sid"))
-      .union(cand.select(col("doc_b").as("__sid"))).distinct()
-    // broadcast gate from the PINNED pair count (cand is an eager
-    // localCheckpoint, so count() is a partition-count job with no
-    // recompute and no shuffle — the previous distinct-count of the ids
-    // paid a full exchange just to make this decision; 2·|pairs| bounds
-    // |ids| from above, so the gate stays conservative)
-    val nCand = cand.count()
-    val idsHinted =
-      if (2L * nCand <= BroadcastIdLimit) broadcast(candIds) else candIds
-    val sh = df.select(col(idCol).as("__sid"),
-        graft.functions.MinHashSig.shingles_native(col(textCol)).as("__sh"))
-      .join(idsHinted, Seq("__sid"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val verified = try {
-      cand
-        .join(sh.select(col("__sid").as("doc_a"), col("__sh").as("sh_a")), "doc_a")
-        .join(sh.select(col("__sid").as("doc_b"), col("__sh").as("sh_b")), "doc_b")
-        .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType))
-        .withColumn("jaccard",
-          col("__i") / ((size(col("sh_a")) + size(col("sh_b"))).cast(DoubleType) - col("__i")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .localCheckpoint()
-    } finally sh.unpersist(blocking = true)
-    (verified, stats)
-  }
 
   /** Candidate-id sets at or below this size are broadcast into the
     * verification semi-join (ids are 8-byte longs: 4M ids ≈ 32 MB plain,
@@ -241,27 +246,28 @@ object Dedup {
     simhashPairsWithStats(df, idCol, textCol, maxHamming, maxBucket)._1
 
   def simhashPairsWithStats(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 6, maxBucket: Int = Lsh.DefaultMaxBucket): (DataFrame, LshStats) = {
-    val withFp = df.select(col(idCol).as("doc"), simhash(col(textCol)).as("fp"))
-    val bandKeys = array((0 until 4).map(b =>
-      shiftright(col("fp"), b * 15).bitwiseAND(lit(32767L))): _*)
-    val exploded = withFp.select(col("doc"), col("fp"),
-      posexplode(bandKeys).as(Seq("band_idx", "band_key")))
-    // see minhashLshPairsWithStats: cache + eager checkpoint ⇒ the SimHash
-    // kernel runs once per document even when the cap census engages
-    Lsh.withCappedBuckets(exploded, maxBucket, "simhashPairs") { capped =>
-      val a = capped.select(col("doc").as("doc_a"), col("fp").as("fp_a"),
-        col("band_idx"), col("band_key"))
-      val b = capped.select(col("doc").as("doc_b"), col("fp").as("fp_b"),
-        col("band_idx"), col("band_key"))
-      a.join(b, Seq("band_idx", "band_key"))
-        .filter(col("doc_a") < col("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
-        .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast(IntegerType).as("hamming"))
+      maxHamming: Int = 6, maxBucket: Int = Lsh.DefaultMaxBucket): (DataFrame, LshStats) =
+    JobLabel(df.sparkSession, "dedup:simhash_pairs") {
+      val withFp = df.select(col(idCol).as("doc"), simhash(col(textCol)).as("fp"))
+      val bandKeys = array((0 until 4).map(b =>
+        shiftright(col("fp"), b * 15).bitwiseAND(lit(32767L))): _*)
+      val exploded = withFp.select(col("doc"), col("fp"),
+        posexplode(bandKeys).as(Seq("band_idx", "band_key")))
+      // see minhashLshPairsWithStats: cache + eager checkpoint ⇒ the SimHash
+      // kernel runs once per document even when the cap census engages
+      Lsh.withCappedBuckets(exploded, maxBucket, "simhashPairs") { capped =>
+        val a = capped.select(col("doc").as("doc_a"), col("fp").as("fp_a"),
+          col("band_idx"), col("band_key"))
+        val b = capped.select(col("doc").as("doc_b"), col("fp").as("fp_b"),
+          col("band_idx"), col("band_key"))
+        a.join(b, Seq("band_idx", "band_key"))
+          .filter(col("doc_a") < col("doc_b"))
+          .dropDuplicates("doc_a", "doc_b")
+          .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
+          .filter(col("hamming") <= maxHamming)
+          .select(col("doc_a"), col("doc_b"), col("hamming").cast(IntegerType).as("hamming"))
+      }
     }
-  }
 
   /** Connected components over a near-dup pair list → (id, cluster) with
     * cluster = min id reachable. The step every dedup pipeline needs after
@@ -311,7 +317,9 @@ object Dedup {
         // cap+1 guard: never pulls more than the gate allows; clamp so a
         // Long.MaxValue gate cannot overflow limit()'s Int argument
         val cap = math.min(driverEdgeLimit, Int.MaxValue.toLong - 1L)
-        val sample = canon.limit((cap + 1L).toInt).collect()
+        val sample = JobLabel(pairs.sparkSession, "cc:driver") {
+          canon.limit((cap + 1L).toInt).collect()
+        }
         if (sample.length <= cap)
           return ccDriver(pairs.sparkSession, canon.schema, sample)
       }
@@ -334,8 +342,10 @@ object Dedup {
       // this side's partitioning instead of re-exchanging the edge list
       .repartition(col("src")).persist()
     try {
-      var checkpointed = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")).localCheckpoint()
+      var checkpointed = JobLabel(canon.sparkSession, "cc:canon") {
+        edges.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("lbl")).localCheckpoint()
+      }
       var labels = checkpointed
       var changed = 1L
       var iter = 0
@@ -356,13 +366,16 @@ object Dedup {
           .select(edges("dst").as("id"), col("lbl"))
         val next = labels.union(msgs)
           .groupBy("id").agg(min("lbl").as("nlbl"))
-        val joined = next.join(labels.withColumnRenamed("lbl", "olbl"), "id")
-          .select(col("id"), col("nlbl").as("lbl"),
-            (col("nlbl") < col("olbl")).as("chg"))
-          .localCheckpoint() // eager: safe to release the previous round
+        val joined = JobLabel(canon.sparkSession, s"cc:min_label/round_${iter + 1}") {
+          val j = next.join(labels.withColumnRenamed("lbl", "olbl"), "id")
+            .select(col("id"), col("nlbl").as("lbl"),
+              (col("nlbl") < col("olbl")).as("chg"))
+            .localCheckpoint() // eager: safe to release the previous round
+          changed = j.filter(col("chg")).count()
+          j
+        }
         checkpointed.unpersist()
         checkpointed = joined
-        changed = joined.filter(col("chg")).count()
         labels = joined.select("id", "lbl")
         iter += 1
       }
@@ -535,8 +548,10 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
 
-    var edges = init.localCheckpoint()
-    var sig = signature(edges)
+    var (edges, sig) = JobLabel(canon.sparkSession, "cc:canon") {
+      val e = init.localCheckpoint()
+      (e, signature(e))
+    }
     var iter = 0
     var converged = false
     while (!converged) {
@@ -544,8 +559,11 @@ object Dedup {
         s"connectedComponentsStar did not converge in $maxIter rounds — " +
           "this exceeds the O(log²n) bound and indicates a logic error, " +
           "not an input property")
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nextSig = signature(next)
+      val (next, nextSig) =
+        JobLabel(canon.sparkSession, s"cc:star/round_${iter + 1}") {
+          val n = smallStar(largeStar(edges)).localCheckpoint()
+          (n, signature(n))
+        }
       edges.unpersist()
       edges = next
       converged = nextSig == sig

@@ -127,22 +127,17 @@ object CoreQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_suite_lineitem" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      // lineitem.parquet is ONE file with ONE row group → a bare scan is a
-      // single task and every fused-suite job serializes behind it. The
-      // hash spread parallelizes the fused projection+aggregate across
-      // cores, and keying it on l_orderkey means the uniqueness groupBy
-      // needs no further exchange. Results are partitioning-invariant:
-      // counts/sums are exact and the observed means are integer-valued
-      // exact sums (oracle float-parity rules).
-      // (measured: pinning this with localCheckpoint to share one shuffle
-      // across the suite's branches cost MORE than a re-shuffle per branch
-      // — the block-store write serializes 600k rows while the branches'
-      // 1.7 MB-input stages overlap fine within the suite's one action — so
-      // each branch keeps its own scan+spread)
-      val li = t(dir, "lineitem")
+      // spread by l_orderkey when the scan cannot split (ScanSpread), so the
+      // uniqueness groupBy needs no further exchange. Results are
+      // partitioning-invariant: counts/sums are exact and the observed
+      // means are integer-valued exact sums (oracle float-parity rules).
+      // (measured: pinning the spread with localCheckpoint to share one
+      // shuffle across the suite's branches cost MORE than a re-shuffle per
+      // branch, so each branch keeps its own scan+spread)
+      val li = ScanSpread(t(dir, "lineitem")
         .select("l_quantity", "l_returnflag", "l_linestatus", "l_orderkey",
-          "l_extendedprice", "l_discount", "l_partkey", "l_suppkey")
-        .repartition(s.sparkContext.defaultParallelism, col("l_orderkey"))
+          "l_extendedprice", "l_discount", "l_partkey", "l_suppkey"),
+        col("l_orderkey"))
       Graft.resultsToDF(s, Graft.validate(li, lineitemSuite))
         .orderBy("expectation_type", "domain")
     }),
@@ -158,13 +153,12 @@ object CoreQueries {
     }),
     "q05_q1_agg" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      // single-file single-row-group scan → spread before the aggregation
-      // so the decimal partial agg runs on all cores instead of one task
-      // (sums are exact decimals / integer-valued doubles — partitioning-
-      // invariant); column pruning pushes through the repartition, so the
-      // shuffle carries only the 5 referenced columns
-      t(dir, "lineitem")
-        .repartition(s.sparkContext.defaultParallelism, col("l_extendedprice"))
+      // spread before the aggregation when the scan cannot split
+      // (ScanSpread), so the decimal partial agg runs on all cores (sums are
+      // exact decimals / integer-valued doubles — partitioning-invariant);
+      // column pruning pushes through the repartition, so the shuffle
+      // carries only the 5 referenced columns
+      ScanSpread(t(dir, "lineitem"), col("l_extendedprice"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity")).as("sum_qty"),

@@ -12,19 +12,10 @@ import graft.operators.{Dedup, Similarity}
   * so the detectors have non-trivial positives to find. */
 object DedupQueries {
 
-  // the documents table is ONE small parquet file at every test SF → one
-  // scan partition, which would serialize every per-doc kernel (shingle,
-  // minhash, simhash) into a single task; the tiny hash shuffle spreads
-  // the corpus across cores. At deployment scale the table arrives
-  // already partitioned and this becomes a no-op choice.
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-  // same single-file spread as docs(): the sign-band / dot-product
-  // kernels otherwise run in one task per union branch
+    ScanSpread(s.read.parquet(s"$dir/documents.parquet"), col("doc_id"))
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
+    ScanSpread(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id"))
 
   /** Near-dup plant: every 50th doc gets a copy with a 3-word tail. */
   private def augDocs(s: SparkSession, dir: String): DataFrame = {
@@ -59,13 +50,12 @@ object DedupQueries {
     * the scale plant for the banded near-dup path (q49) — the corpus the
     * old all-pairs cartesian formulation could not finish. */
   private def embs10x(s: SparkSession, dir: String): DataFrame = {
-    // plain single-partition read: the union is re-spread ONCE below
-    // (10 × embs() would stack 10 × defaultParallelism micro-partitions)
+    // plain read: the union is spread at most ONCE (10 × embs() would
+    // stack 10 × defaultParallelism micro-partitions)
     val e = s.read.parquet(s"$dir/embeddings.parquet")
-    (0 until 10).map(j =>
+    ScanSpread((0 until 10).map(j =>
       e.withColumn("vec_id", col("vec_id") + lit(j * 1000000L)))
-      .reduce(_ unionByName _)
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
+      .reduce(_ unionByName _), col("vec_id"))
   }
   private val embs10xSql =
     (0 until 10).map(j =>

@@ -12,12 +12,9 @@ import graft.operators.Multimodal
   * the documents are ASCII. */
 object MultimodalQueries {
 
-  // single-file documents table → spread the scan so per-payload decode
-  // batches parallelize (see DedupQueries.docs)
   private def media(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mediaFromDocuments(s.read.parquet(s"$dir/documents.parquet")
-      .repartition(s.sparkContext.defaultParallelism,
-        org.apache.spark.sql.functions.col("doc_id")))
+    Multimodal.mediaFromDocuments(
+      ScanSpread(s.read.parquet(s"$dir/documents.parquet"), col("doc_id")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the feature vector is emitted as a comma-joined string: the driver's

@@ -12,11 +12,8 @@ import graft.operators.Dedup
   * same constants. */
 object PipelineQueries {
 
-  // single-file documents table → spread the scan so per-doc kernels
-  // parallelize (see DedupQueries.docs)
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    ScanSpread(s.read.parquet(s"$dir/documents.parquet"), col("doc_id"))
 
   private val normSql = graft.functions.TextFunctions.normTextSql("text")
 

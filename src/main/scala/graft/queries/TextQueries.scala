@@ -10,12 +10,8 @@ import graft.functions.TextFunctions._
   * scoring, language ID, fingerprinting), DuckDB-oracled. */
 object TextQueries {
 
-  // single-file documents table → spread the scan so per-doc kernels
-  // parallelize (see DedupQueries.docs)
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-      .repartition(s.sparkContext.defaultParallelism,
-        org.apache.spark.sql.functions.col("doc_id"))
+    ScanSpread(s.read.parquet(s"$dir/documents.parquet"), col("doc_id"))
 
   private val normSql = graft.functions.TextFunctions.normTextSql("text")
   private val nTokSql =

@@ -566,6 +566,82 @@ class DedupSpec extends AnyFunSuite {
         "the 2 candidate docs' shingle sets (semi-join prefilter + cache)")
   }
 
+  /** minhashLshPairsWithStats at its defaults as it was when the broadcast
+    * gate took the candidate count from a `count()` job of its own. */
+  private def minhashPairsCountForm(df: org.apache.spark.sql.DataFrame) = {
+    import graft.functions.MinHashSig
+    import graft.operators.Lsh
+    val exploded = df.select(col("doc_id").as("doc"),
+      posexplode(MinHashSig.minhash_bands(col("text"), 12, 4)).as(Seq("band_idx", "band_key")))
+    val (cand, _) = Lsh.withCappedBuckets(exploded, Lsh.DefaultMaxBucket) { capped =>
+      val a = capped.select(col("doc").as("doc_a"), col("band_idx"), col("band_key"))
+      val b = capped.select(col("doc").as("doc_b"), col("band_idx"), col("band_key"))
+      a.join(b, Seq("band_idx", "band_key")).filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
+    }
+    val candIds = cand.select(col("doc_a").as("__sid"))
+      .union(cand.select(col("doc_b").as("__sid"))).distinct()
+    val ids = if (2L * cand.count() <= Dedup.BroadcastIdLimit) broadcast(candIds) else candIds
+    val sh = df.select(col("doc_id").as("__sid"),
+        MinHashSig.shingles_native(col("text")).as("__sh"))
+      .join(ids, Seq("__sid"), "left_semi")
+    cand.join(sh.select(col("__sid").as("doc_a"), col("__sh").as("sh_a")), "doc_a")
+      .join(sh.select(col("__sid").as("doc_b"), col("__sh").as("sh_b")), "doc_b")
+      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
+      .withColumn("jaccard",
+        col("__i") / ((size(col("sh_a")) + size(col("sh_b"))).cast("double") - col("__i")))
+      .filter(col("jaccard") >= 0.5)
+      .select("doc_a", "doc_b", "jaccard")
+  }
+
+  private def sf0001Docs =
+    spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/documents.parquet")
+
+  /** sf0.001's documents plus a near-duplicate of every 50th one. */
+  private lazy val plantedDocs = {
+    val d = sf0001Docs
+    d.unionByName(d.filter(col("doc_id") % 50 === 0)
+      .withColumn("doc_id", col("doc_id") + 100000L)
+      .withColumn("text", concat(col("text"), lit(" extra tail words"))))
+  }
+
+  test("minhash candidate count rides the checkpoint: two jobs fewer, same pairs") {
+    val d = sf0001Docs
+    var pairs: org.apache.spark.sql.DataFrame = null
+    val jobs = JobCapture(spark.sparkContext) {
+      pairs = Dedup.minhashLshPairsWithStats(d, "doc_id", "text")._1
+    }
+    // 15 with the count() job (an AQE count stage plus its result job)
+    assert(jobs.size == 13, jobs)
+    val p = plantedDocs
+    val got = Dedup.minhashLshPairsWithStats(p, "doc_id", "text")._1
+    val want = minhashPairsCountForm(p)
+    assert(got.count() >= 10)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(pairs.exceptAll(minhashPairsCountForm(d)).isEmpty &&
+      minhashPairsCountForm(d).exceptAll(pairs).isEmpty)
+  }
+
+  test("every dedup and CC job carries a dedup: or cc: label; the caller's " +
+      "description is restored") {
+    val sc = spark.sparkContext
+    val p = plantedDocs
+    p.schema // schema inference outside the capture
+    sc.setJobDescription("caller")
+    try {
+      val jobs = JobCapture(sc) {
+        val pairs = Dedup.minhashLshPairsWithStats(p, "doc_id", "text")._1
+        Dedup.connectedComponents(pairs, "doc_a", "doc_b", driverEdgeLimit = 0)
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      }.map(_.description)
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(j => j != null && (j.startsWith("dedup:") || j.startsWith("cc:"))), jobs)
+      assert(jobs.contains("dedup:minhash_pairs"), jobs)
+      assert(jobs.contains("cc:canon") && jobs.contains("cc:min_label/round_1"), jobs)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
   test("DedupScalingBench corpus: replica salting isolates near-dup structure") {
     // 2 replicas of sf0.001's 500 docs + 10 planted near-dups each: the
     // per-word replica suffix must keep ALL near-dup pairs within a

@@ -834,6 +834,26 @@ class EngineSpec extends AnyFunSuite {
         s"count + sample must fuse into one job, saw ${snap.size}: $snap")
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("resultsToDF is a local relation: collecting it starts no job") {
+    val sr = Graft.validate(df, Suite("local", Seq(
+      ExpectColumnValuesToNotBeNull("z"),
+      ExpectColumnValuesToBeInSet("parity", Seq("even")),
+      ExpectColumnMeanToBeBetween("x", Some(5.0), Some(6.0)),
+      ExpectTableRowCountToBeBetween(Some(10), None))))
+    val out = Graft.resultsToDF(spark, sr)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = JobCapture(spark.sparkContext) { rows = out.collect() }
+    assert(jobs.isEmpty, jobs)
+    // the same rows as the parallelized form it replaced
+    val parallel = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.toSeq, 1), out.schema)
+    assert(parallel.collect().toSeq == rows.toSeq)
+    assert(rows.toSeq.map(r => (r.getString(0), r.getBoolean(2), Option(r.get(5)))) ==
+      sr.results.map(e => (e.expectationType, e.success,
+        e.result.get("unexpected_count").map(_.asInstanceOf[Number].longValue))))
+    assert(rows.count(_.getBoolean(2)) == 2)
+  }
 }
 
 object EngineSpec {
