@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -73,10 +74,9 @@ object Dedup {
           .as(Seq("band_idx", "band_key")))
       // Single kernel evaluation under the default cap: the narrow
       // (doc, band_idx, band_key) projection is cached for the census +
-      // candidate anti-join, candidates are pinned with an eager
-      // localCheckpoint, and the cache is released (blocking) before
-      // returning — the MinHash kernel runs once per document total. The
-      // candidate count rides that checkpoint as an observation.
+      // candidate anti-join until the candidates are pinned (an eager
+      // localCheckpoint that also observes their count) — the MinHash
+      // kernel runs once per document total.
       val nCandObs = new Observation("minhash_candidates")
       val (cand, stats) = Lsh.withCappedBuckets(exploded, maxBucket, "minhashLshPairs") { capped =>
         val a = capped.select(col("doc").as("doc_a"), col("band_idx"), col("band_key"))
@@ -87,19 +87,15 @@ object Dedup {
           .dropDuplicates("doc_a", "doc_b")
           .observe(nCandObs, count(lit(1)).as("n"))
       }
-      // Verification joins the (id, shingles) table back once per side —
-      // but ONLY for docs that appear in a candidate pair. Without the
-      // prefilter each join side shuffles the FULL corpus's shingle arrays
-      // (~text bytes × 2 sides) and evaluates the shingle kernel over every
-      // document, to verify what is typically a sub-percent candidate set;
-      // measured on a 10M-doc corpus that was 2× ~20 GB uncompressed
-      // shuffle + 2 full-corpus kernel passes. The candidate-id set is
-      // already materialized (localCheckpoint inside withCappedBuckets), so
-      // its size is known cheaply: small sets broadcast into a map-side
-      // semi-join (no shuffle of the shingle table at all); above the
-      // limit the semi-join shuffles only (id) pairs — never shingles.
-      // The filtered table is cached so the kernel runs once per candidate
-      // doc, and the verified pairs are pinned before the cache releases.
+      // Verification joins the (id, shingles) table back once per side,
+      // but ONLY for docs in a candidate pair: without that prefilter each
+      // side shuffles the FULL corpus's shingle arrays and runs the shingle
+      // kernel over every document (2× ~20 GB of shuffle on a 10M-doc
+      // corpus) to verify a sub-percent candidate set. Small id sets
+      // broadcast into a map-side semi-join; above the limit it shuffles
+      // ids only. The filtered table is cached so the kernel runs once per
+      // candidate doc; it and the candidates are released once the
+      // verified pairs, the one pin left, are pinned.
       val candIds = cand.select(col("doc_a").as("__sid"))
         .union(cand.select(col("doc_b").as("__sid"))).distinct()
       // broadcast gate from the pair count observed on the checkpoint job
@@ -123,7 +119,7 @@ object Dedup {
           .filter(col("jaccard") >= threshold)
           .select(col("doc_a"), col("doc_b"), col("jaccard"))
           .localCheckpoint()
-      } finally sh.unpersist(blocking = true)
+      } finally { sh.unpersist(blocking = true); release(cand) }
       (verified, stats)
     }
 
@@ -133,39 +129,30 @@ object Dedup {
     * back to a shuffled semi-join that still carries only ids. */
   val BroadcastIdLimit: Long = 4000000L
 
-  /** Exact n-gram-Jaccard near-dup pairs WITHOUT MinHash: an inverted
-    * index on shingles proposes candidates (docs sharing ≥1 shingle),
-    * exact Jaccard verifies. `maxDf` is the standard stop-shingle pruning:
-    * shingles occurring in more than maxDf docs are dropped from candidate
-    * generation (a boilerplate shingle shared by 1M docs would propose
-    * 10¹² pairs) — any pair at a meaningful Jaccard threshold shares many
-    * non-frequent shingles, so recall is preserved while the index join
-    * stays bounded. Shuffle carries (shingle-hash, doc_id) pairs only;
-    * full shingle sets join back once per verified side. */
+  /** N-gram-Jaccard near-dup pairs WITHOUT MinHash: an inverted index on
+    * shingles proposes candidates (docs sharing ≥1 shingle), the join's
+    * pair count verifies them. `maxDf` is stop-shingle pruning: the hot
+    * shingles H (in more than `maxDf` docs) leave the index, since one
+    * shared by 1M docs would propose 10¹² pairs. So the operator computes:
+    *  - at `maxDf = Int.MaxValue`, the exact Jaccard |A∩B| / |A∪B|;
+    *  - at a finite `maxDf`, |A∩B∖H| / (|A| + |B| − |A∩B∖H|): shared
+    *    shingles outside H over the FULL set sizes, a lower bound on the
+    *    Jaccard, equal to it for pairs sharing no hot shingle. Pairs
+    *    sharing only hot shingles are left out; a pair sharing some can
+    *    fall below `threshold`.
+    * The shuffle carries (shingle, doc_id, set size) postings only. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, maxDf: Int = Lsh.DefaultMaxDf): DataFrame = {
-    // Round-6 shape — verification FUSED into the index join (guide
-    // §1.2 "the distributed algorithm" / §2.3 "aggregate before you
-    // shuffle"): postings (doc, |shingles(doc)|, shingle) are
-    // hash-partitioned by shingle ONCE; the self-join reads that single
-    // exchange from both sides (ReusedExchange — the rename to
-    // doc_a/doc_b sits ABOVE the exchange, so both exchange subtrees
-    // canonicalize identically), and |A ∩ B| per (doc_a, doc_b) comes
-    // straight out of the join as a partially-aggregated count. Jaccard
-    // is then |A∩B| / (|A|+|B|-|A∩B|) with the set sizes riding the
-    // postings — the exact-integer arithmetic is bit-identical to the
-    // previous array_intersect verification and to the DuckDB oracle.
-    //
-    // What this removes, measured at sf0.1 (5.1k docs, 1.18M candidate
-    // pairs, Σdf² = 2.9M index-join rows): the per-pair shingle-ARRAY
-    // join-back + array_intersect verification stage (≈50 s of executor
-    // CPU — each of 1.18M candidate pairs intersected two ~52-element
-    // string sets), the candidate dropDuplicates exchange, the
-    // candidate-id census job, and two persist/checkpoint barriers. The
-    // shuffle carries (8B id, 4B size, ~20B gram) postings once — at
-    // 100 TB that is ~corpus-text-sized, the same order as the previous
-    // double-shuffled 16 B hash postings, and verification no longer
-    // shuffles anything corpus-shaped at all.
+    // Verification FUSED into the index join: postings (doc,
+    // |shingles(doc)|, shingle) are hash-partitioned by shingle ONCE; the
+    // self-join reads that single exchange from both sides (ReusedExchange
+    // — the rename to doc_a/doc_b sits ABOVE the exchange, so both exchange
+    // subtrees canonicalize identically), and |A ∩ B| per (doc_a, doc_b)
+    // comes straight out of the join as a partially-aggregated count, with
+    // the set sizes riding the postings: integer arithmetic bit-identical
+    // to an array_intersect verification and to the DuckDB oracle. (At
+    // sf0.1 this replaced ≈50 s of executor CPU of per-pair array
+    // intersection, a dropDuplicates exchange and two pins.)
     //
     // The shingle STRING (not a 64-bit hash) is the join key: an
     // intersection COUNT inherits hash collisions as wrong counts,
@@ -274,10 +261,12 @@ object Dedup {
     * pair generation: A≈B and B≈C must collapse to ONE cluster even though
     * (A,C) was never emitted as a pair.
     *
-    * Distributed min-label propagation: each round ships every vertex's
-    * current label one hop (edges ⋈ labels, then a min-combine groupBy) and
-    * stops when no label changed. Rounds = component diameter — for dedup
-    * graphs (cliques and short chains by construction) a handful. `maxIter`
+    * Distributed min-label propagation: labels start one hop out (the
+    * least of each vertex and its neighbours); each round ships every
+    * label one hop (edges ⋈ labels, then a min-combine groupBy that also
+    * carries the old label) and stops when no label changed. Rounds ≈
+    * component diameter — for dedup graphs (cliques and short chains by
+    * construction) a handful. `maxIter`
     * is the min-label round BUDGET, not a failure cap: a graph still
     * changing after `maxIter` rounds has a diameter the propagation shape
     * is wrong for, so the computation auto-switches to the
@@ -286,18 +275,17 @@ object Dedup {
     * converges there — a diameter-D chain costs min(D, maxIter) + O(log²n)
     * rounds instead of D. Both algorithms produce the identical
     * (id, cluster = min reachable id) labeling, so the switch is
-    * invisible in results. `localCheckpoint` truncates lineage each round
-    * so plan depth stays O(1), not O(iterations). Shuffles carry only
-    * (id, label) pairs. */
+    * invisible in results. Both run in one fixpoint loop: each round is one
+    * eager `localCheckpoint` job that also observes the stop signal (the
+    * count of changed labels), then the previous round's checkpoint is
+    * released; only the last one stays pinned, under the result. Shuffles
+    * carry only (id, label) pairs. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 10,
       driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     // The canonical (lo ≤ hi) DISTINCT edge list is built exactly ONCE
     // and shared by every path: the driver-gate probe, the distributed
-    // min-label rounds, and the star-contraction fallback (round-5
-    // VERDICT: the above-gate path used to discard the probe's distinct
-    // and recompute it from the raw pairs — one wasted shuffle exactly on
-    // the inputs big enough to overflow the gate).
+    // min-label rounds, and the star-contraction fallback.
     val canon = pairs.select(least(col(aCol), col(bCol)).as("lo"),
       greatest(col(aCol), col(bCol)).as("hi")).distinct()
       .persist()
@@ -323,14 +311,21 @@ object Dedup {
         if (sample.length <= cap)
           return ccDriver(pairs.sparkSession, canon.schema, sample)
       }
-      ccMinLabel(canon, maxIter)
+      ccMinLabel(canon, maxIter).getOrElse {
+        // diameter beyond the budget (a long chain, not the clique/short
+        // chain shape dedup produces): star contraction, same canon edges
+        log.info(s"connectedComponents: not converged in $maxIter " +
+          "min-label rounds — switching to star contraction " +
+          "(Kiveris et al., SoCC'14)")
+        ccStarFromCanon(canon)
+      }
     } finally canon.unpersist()
   }
 
   /** Distributed min-label propagation over a persisted canonical edge
-    * list, with the star-contraction auto-switch (see the scaladoc on
+    * list; `None` when it has not converged in `maxIter` rounds (see
     * [[connectedComponents]]). */
-  private def ccMinLabel(canon: DataFrame, maxIter: Int): DataFrame = {
+  private def ccMinLabel(canon: DataFrame, maxIter: Int): Option[DataFrame] = {
     // symmetrize WITHOUT another distinct: canon is already distinct on
     // (lo, hi), so the flipped copies are unique and disjoint from the
     // forward rows (strictly lo < hi there); self-loops stay single
@@ -342,46 +337,64 @@ object Dedup {
       // this side's partitioning instead of re-exchanging the edge list
       .repartition(col("src")).persist()
     try {
-      var checkpointed = JobLabel(canon.sparkSession, "cc:canon") {
-        edges.select(col("src").as("id")).distinct()
-          .select(col("id"), col("id").as("lbl")).localCheckpoint()
-      }
-      var labels = checkpointed
-      var changed = 1L
-      var iter = 0
-      while (changed > 0) {
-        if (iter >= maxIter) {
-          // diameter exceeds the propagation budget (a long-chain graph,
-          // not the clique/short-chain shape dedup produces) — switch to
-          // the O(log²n)-round star-contraction algorithm instead of
-          // spinning diameter-many more rounds. The canonical edge list
-          // is reused as-is (it is exactly starFromCanon's input shape).
-          log.info(s"connectedComponents: not converged in $maxIter " +
-            "min-label rounds — switching to star contraction " +
-            "(Kiveris et al., SoCC'14)")
-          checkpointed.unpersist()
-          return ccStarFromCanon(canon)
-        }
+      // one-hop labels; a null id (the (null, null) edge) never joins a
+      // label, so it is no vertex
+      val init = edges.filter(col("src").isNotNull).groupBy("src")
+        .agg(least(col("src"), min(col("dst"))).as("lbl"))
+        .select(col("src").as("id"), col("lbl"), (col("lbl") < col("src")).as("chg"))
+      // each round ships every label one hop and min-combines; the old
+      // label rides the same aggregate, so `chg` needs no join back
+      def round(labels: DataFrame): DataFrame = {
         val msgs = edges.join(labels, edges("src") === labels("id"))
-          .select(edges("dst").as("id"), col("lbl"))
-        val next = labels.union(msgs)
-          .groupBy("id").agg(min("lbl").as("nlbl"))
-        val joined = JobLabel(canon.sparkSession, s"cc:min_label/round_${iter + 1}") {
-          val j = next.join(labels.withColumnRenamed("lbl", "olbl"), "id")
-            .select(col("id"), col("nlbl").as("lbl"),
-              (col("nlbl") < col("olbl")).as("chg"))
-            .localCheckpoint() // eager: safe to release the previous round
-          changed = j.filter(col("chg")).count()
-          j
-        }
-        checkpointed.unpersist()
-        checkpointed = joined
-        labels = joined.select("id", "lbl")
-        iter += 1
+          .select(edges("dst").as("id"), col("lbl"), lit(false).as("own"))
+        labels.select(col("id"), col("lbl"), lit(true).as("own")).union(msgs)
+          .groupBy("id")
+          .agg(min(col("lbl")).as("lbl"), min(when(col("own"), col("lbl"))).as("olbl"))
+          .select(col("id"), col("lbl"), (col("lbl") < col("olbl")).as("chg"))
       }
-      labels.withColumnRenamed("lbl", "cluster")
+      fixpoint("min_label", init, maxIter,
+          coalesce(sum(col("chg").cast(LongType)), lit(0L)).as("changed"))(round)(
+          (_, now) => now("changed") == 0L)
+        .map(_.select(col("id"), col("lbl").as("cluster")))
     } finally edges.unpersist()
   }
+
+  /** The one loop of the distributed CC algorithms: pins `init` (job label
+    * `cc:canon`), then per round pins `step(previous)` (`cc:<algo>/round_<n>`)
+    * and releases the previous pin. A pin is ONE eager `localCheckpoint`
+    * carrying an `Observation` of `observed`, so `stop(previous, current)`
+    * costs no job. `None`, with nothing left pinned, after `maxIter` rounds
+    * without a stop. */
+  private def fixpoint(algo: String, init: DataFrame, maxIter: Int, observed: Column*)(
+      step: DataFrame => DataFrame)(
+      stop: (Map[String, Any], Map[String, Any]) => Boolean): Option[DataFrame] = {
+    def pin(df: DataFrame, label: String) = JobLabel(df.sparkSession, label) {
+      val obs = Observation()
+      val pinned = df.observe(obs, observed.head, observed.tail: _*).localCheckpoint()
+      (pinned, obs.get)
+    }
+    var (cur, seen) = pin(init, "cc:canon")
+    var round = 0
+    var done = false
+    while (!done && round < maxIter) {
+      round += 1
+      val (next, now) = pin(step(cur), s"cc:$algo/round_$round")
+      release(cur)
+      done = stop(seen, now)
+      cur = next
+      seen = now
+    }
+    if (done) Some(cur) else { release(cur); None }
+  }
+
+  /** Releases an eager `localCheckpoint`. `Dataset.unpersist` does not:
+    * it drops cache-manager entries, and a local checkpoint is none — its
+    * blocks belong to the checkpointed RDD under the `LogicalRDD` leaf. */
+  private[operators] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist()
+      case p => throw new IllegalArgumentException(s"not a checkpoint: ${p.nodeName}")
+    }
 
   /** Id types the driver union-find can order EXACTLY like the distributed
     * min aggregate: numerics, temporals, booleans (natural Comparable
@@ -490,9 +503,9 @@ object Dedup {
     *
     * At the fixpoint the edge set is a star forest rooted at each
     * component's minimum id — the same (id, cluster=min-reachable-id)
-    * contract as [[connectedComponents]]. Convergence is detected by an
-    * exact (count, xor-of-hashes) signature of the canonical edge set —
-    * order-independent and collision-checked by the count. */
+    * contract as [[connectedComponents]], in its fixpoint loop: each
+    * round's checkpoint observes an exact (count, xor-of-hashes) signature
+    * of the edge set, and the loop stops when two rounds' signatures agree. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 100): DataFrame =
     ccStarFromCanon(pairs.select(
@@ -542,34 +555,14 @@ object Dedup {
         .filter(col("lo") =!= col("hi")).distinct()
     }
 
-    def signature(ed: DataFrame): (Long, Long) = {
-      val r = ed.agg(count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(lo, hi))"), lit(0L)).as("h")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var (edges, sig) = JobLabel(canon.sparkSession, "cc:canon") {
-      val e = init.localCheckpoint()
-      (e, signature(e))
-    }
-    var iter = 0
-    var converged = false
-    while (!converged) {
-      require(iter < maxIter,
-        s"connectedComponentsStar did not converge in $maxIter rounds — " +
-          "this exceeds the O(log²n) bound and indicates a logic error, " +
-          "not an input property")
-      val (next, nextSig) =
-        JobLabel(canon.sparkSession, s"cc:star/round_${iter + 1}") {
-          val n = smallStar(largeStar(edges)).localCheckpoint()
-          (n, signature(n))
-        }
-      edges.unpersist()
-      edges = next
-      converged = nextSig == sig
-      sig = nextSig
-      iter += 1
-    }
+    val fixed = fixpoint("star", init, maxIter, count(lit(1)).as("n"),
+      coalesce(expr("bit_xor(xxhash64(lo, hi))"), lit(0L)).as("h"))(
+      ed => smallStar(largeStar(ed)))(_ == _)
+    require(fixed.isDefined,
+      s"connectedComponentsStar did not converge in $maxIter rounds — " +
+        "this exceeds the O(log²n) bound and indicates a logic error, " +
+        "not an input property")
+    val edges = fixed.get
     // star forest: (lo=root, hi=member); roots label themselves
     edges.select(col("hi").as("id"), col("lo").as("cluster"))
       .union(edges.select(col("lo").as("id"), col("lo").as("cluster")))

@@ -217,27 +217,35 @@ object Checkpoint {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
+  /** Per-bucket lineage of a qf output with a `bucket` column as ONE
+    * [[BucketTally]] aggregate (a null keep or pii_found — null text or
+    * role — counts as false); `bucketLineage` decodes its Observation. */
+  private def tally(buckets: Int) = udaf(new BucketTally(buckets)).apply(col("bucket"),
+    coalesce(col("keep"), lit(false)), coalesce(col("pii_found"), lit(false))).as("tally")
+
+  private def bucketLineage(obs: Observation, buckets: Int, b: Int, wallSecs: Double,
+      inputPath: String, at: Long): BucketLineage = {
+    val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
+    BucketLineage(b, t(b), t(buckets + b), t(2 * buckets + b), wallSecs, inputPath, at)
+  }
+
   /** Fresh run: ONE job — bucket, sort within partitions by bucket, one
     * plain write (one file per task), per-bucket lineage from one tally
     * aggregate in a single Observation (no second pass, no per-bucket
-    * re-scan of the input). A null keep or pii_found (null text or role)
-    * counts as false. */
+    * re-scan of the input). */
   private def runFresh(transcripts: DataFrame, outDir: String, buckets: Int,
       inputPath: String): RunReport = {
     val t0 = System.nanoTime()
     val out = QualityFilter(transcripts)
       .withColumn("bucket", bucketCol(buckets))
     val obs = new Observation("fresh_run")
-    val tally = udaf(new BucketTally(buckets)).apply(col("bucket"),
-      coalesce(col("keep"), lit(false)), coalesce(col("pii_found"), lit(false)))
     val files = JobLabel(transcripts.sparkSession, "qf:fresh_write") {
-      writeFiles(out.observe(obs, tally.as("tally")).sortWithinPartitions("bucket"), outDir)
+      writeFiles(out.observe(obs, tally(buckets)).sortWithinPartitions("bucket"), outDir)
     }
-    val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
     val wall = (System.nanoTime() - t0) / 1e9
     val now = System.currentTimeMillis()
-    val lineage = (0 until buckets).map(b => b -> BucketLineage(b,
-      t(b), t(buckets + b), t(2 * buckets + b), wall, inputPath, now)).toMap
+    val lineage = (0 until buckets).map(b =>
+      b -> bucketLineage(obs, buckets, b, wall, inputPath, now)).toMap
     commitSnapshot(outDir, Manifest(Some(buckets), lineage, lineage.map(_._1 -> files)))
     RunReport((0 until buckets), Nil, lineage.values.toSeq.sortBy(_.bucket))
   }
@@ -254,21 +262,14 @@ object Checkpoint {
       val t0 = System.nanoTime()
       val slice = transcripts.filter(bucketCol(buckets) === b)
       val obs = new Observation(s"bucket_$b")
-      val out = QualityFilter(slice).withColumn("bucket", lit(b)).observe(obs,
-        count(lit(1)).as("rows_in"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("rows_kept"),
-        sum(when(col("pii_found"), 1L).otherwise(0L)).as("pii_rows"))
+      val out = QualityFilter(slice).withColumn("bucket", lit(b)).observe(obs, tally(buckets))
       val files = JobLabel(transcripts.sparkSession, s"qf:bucket_$b") {
         writeFiles(out, outDir)
       }
       if (done.size >= failAfterBuckets)
         throw new RuntimeException(s"injected failure after writing bucket $b, before its commit")
-      val m = obs.get
-      val l = BucketLineage(b,
-        m.getOrElse("rows_in", 0L).asInstanceOf[Long],
-        m.getOrElse("rows_kept", 0L).asInstanceOf[Long],
-        m.getOrElse("pii_rows", 0L).asInstanceOf[Long],
-        (System.nanoTime() - t0) / 1e9, inputPath, System.currentTimeMillis())
+      val l = bucketLineage(obs, buckets, b, (System.nanoTime() - t0) / 1e9, inputPath,
+        System.currentTimeMillis())
       head = head.copy(lineage = head.lineage + (b -> l), files = head.files + (b -> files))
       commitSnapshot(outDir, head)
       done += l

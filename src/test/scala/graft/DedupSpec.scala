@@ -689,6 +689,56 @@ class DedupSpec extends AnyFunSuite {
     assert(Lsh.tunedMaxDf(flat) == Lsh.DefaultMaxDf)
   }
 
+  test("ngramJaccard at a finite maxDf: the shared count of the pruned postings " +
+      "over the full set sizes, a lower bound on the full-set Jaccard") {
+    import graft.operators.Lsh
+    // the tunedMaxDf spec's corpus plus doc 200: doc 100 with one more
+    // word, so the pair (100, 200) shares both boilerplate shingles and
+    // shingles of its own
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
+    val boilerplate = "all rights reserved license header text "
+    def unique(i: Long) = boilerplate + s"unique$i content$i words$i here$i now$i more$i"
+    val d = (Seq((1L, base), (2L, base + " tail"), (200L, unique(100L) + " extra")) ++
+      (100L until 160L).map(i => (i, unique(i)))).toDF("doc_id", "text")
+    val cap = Lsh.tunedMaxDf(Dedup.ngramDocFreqTopK(d, "text", n = 3, k = 25))
+    val threshold = 0.2
+    val got = Dedup.ngramJaccardPairs(d, "doc_id", "text", threshold, maxDf = cap)
+    val sh = d.select(col("doc_id"),
+      graft.functions.MinHashSig.shingles_native(col("text")).as("sh"))
+    val hot = sh.select(explode(col("sh")).as("g")).groupBy("g").count()
+      .filter(col("count") > cap).collect().map(_.getString(0)).toSeq
+    assert(hot.size == 4, s"cap=$cap must prune exactly the boilerplate: $hot")
+    // every pair: the full-set Jaccard, and the declared finite-maxDf value
+    // (shared shingles outside the hot set over the full set sizes)
+    val all = sh.toDF("doc_a", "sh_a").crossJoin(sh.toDF("doc_b", "sh_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .withColumn("__n", (size(col("sh_a")) + size(col("sh_b"))).cast("double"))
+      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
+      .withColumn("__c", size(array_except(array_intersect(col("sh_a"), col("sh_b")),
+        typedLit(hot))).cast("double"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("__i") / (col("__n") - col("__i"))).as("full"),
+        (col("__c") / (col("__n") - col("__c"))).as("jaccard"))
+    val declared = all.filter(col("jaccard") > 0 && col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
+    assert(got.exceptAll(declared).isEmpty && declared.exceptAll(got).isEmpty)
+    val pair = all.collect().map(r =>
+      (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getDouble(3))).toMap
+    val g = got.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // a lower bound: exact without hot shingles, strictly below with them
+    assert(g.forall { case (p, j) => j <= pair(p)._1 }, g)
+    assert(g((1L, 2L)) == pair((1L, 2L))._1)
+    assert(g((100L, 200L)) < pair((100L, 200L))._1)
+    // pairs sharing only hot shingles are left out, although their
+    // full-set Jaccard (4/16 = 0.25 among the boilerplate docs) passes
+    val hotOnly = pair.toSeq.collect { case (p, (full, 0.0)) if full >= threshold => p }
+    assert(hotOnly.size >= 60 * 59 / 2 && hotOnly.forall(p => !g.contains(p)))
+    // at maxDf = Int.MaxValue the operator is the full-set Jaccard
+    val exact = Dedup.ngramJaccardPairs(d, "doc_id", "text", threshold, maxDf = Int.MaxValue)
+    val full = all.filter(col("full") >= threshold).select("doc_a", "doc_b", "full")
+    assert(exact.exceptAll(full).isEmpty && full.exceptAll(exact).isEmpty)
+  }
+
   test("tunedMaxDf: a knee above Int.MaxValue documents clamps, never wraps") {
     import graft.operators.Lsh
     // 3e9 as an Int wraps to -1294967296, which would prune every gram
@@ -718,5 +768,75 @@ class DedupSpec extends AnyFunSuite {
     // full Sort+Exchange of the gram table
     val plan = top.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"no heap top-k:\n$plan")
+  }
+
+  /** The near-duplicate pairs of [[plantedDocs]], as a dedup pipeline
+    * feeds them to connected components. */
+  private lazy val plantedPairs =
+    Dedup.minhashLshPairsWithStats(plantedDocs, "doc_id", "text")._1
+
+  /** The ids of the local-checkpoint RDDs a frame reads. */
+  private def checkpointIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+
+  /** The path 1-2-…-8: at `maxIter = 1` min-label gives up and star
+    * contraction finishes. */
+  private def chain8 =
+    (1L to 8L).sliding(2).map(s => (s.head, s(1))).toSeq.toDF("doc_a", "doc_b")
+
+  /** Runs distributed CC and returns the `cc:` jobs it started, the ids of
+    * the RDDs it left pinned and its result. */
+  private def ccTraced(pairs: org.apache.spark.sql.DataFrame, maxIter: Int) = {
+    var pinned = Set.empty[Int]
+    var cc: org.apache.spark.sql.DataFrame = null
+    val jobs = JobCapture(spark.sparkContext) {
+      pinned = Pinned(spark.sparkContext) {
+        cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = maxIter,
+          driverEdgeLimit = 0)
+      }
+    }.filter(j => j.description != null && j.description.startsWith("cc:"))
+    (jobs, pinned, cc)
+  }
+
+  test("distributed CC leaves only its result pinned, on min-label and on the " +
+      "star fallback") {
+    val (mlJobs, mlPinned, ml) = ccTraced(plantedPairs, 10)
+    val (starJobs, starPinned, star) = ccTraced(chain8, 1)
+    assert(!mlJobs.exists(_.description.startsWith("cc:star/")), mlJobs)
+    assert(starJobs.exists(_.description.startsWith("cc:star/")), starJobs)
+    // every superseded round is released; the last one holds the result
+    assert(mlPinned.size == 1 && mlPinned == checkpointIds(ml), mlPinned)
+    assert(starPinned.size == 1 && starPinned == checkpointIds(star), starPinned)
+    assert(star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 8L).map(_ -> 1L).toMap)
+  }
+
+  test("minhashLshPairsWithStats leaves only its verified pairs pinned") {
+    var pairs: org.apache.spark.sql.DataFrame = null
+    val pinned = Pinned(spark.sparkContext) {
+      pairs = Dedup.minhashLshPairsWithStats(plantedDocs, "doc_id", "text")._1
+    }
+    // the candidate checkpoint is released once `verified` is pinned
+    assert(pinned.size == 1 && pinned == checkpointIds(pairs), pinned)
+    assert(pairs.count() >= 10)
+  }
+
+  test("distributed CC: the stop signal rides each round's checkpoint job") {
+    val minLabel = ccTraced(plantedPairs, 10)._1
+    val star = ccTraced(chain8, 1)._1
+    // 18 and 67 cc: jobs when each min-label round ran a count() of its
+    // changed labels and each star round a signature aggregate after its
+    // checkpoint (measured on a copy of that code; 9 and 54 now)
+    assert(minLabel.size < 18, minLabel)
+    assert(star.size < 67, star)
+    // The eager checkpoint is each step's last job (the stage jobs of its
+    // adaptive plan run before it): no count or signature job follows it.
+    for (jobs <- Seq(minLabel, star)) {
+      val stepEnds = jobs.zip(jobs.drop(1).map(_.description) :+ null)
+        .collect { case (j, next) if j.description != next => j }
+      assert(stepEnds.forall(_.callSite.startsWith("localCheckpoint at")), jobs)
+    }
   }
 }
