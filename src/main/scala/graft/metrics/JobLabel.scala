@@ -3,7 +3,7 @@ package graft.metrics
 import org.apache.spark.sql.SparkSession
 
 /** Names the Spark jobs an operator starts, so the event log and the UI
-  * attribute them to the operator (`qf:fresh_write`, `suite:<names>/domains`)
+  * attribute them to the operator (`qf:write`, `suite:<names>/domains`)
   * instead of to an anonymous call site. */
 object JobLabel {
   /** Runs `f` with Spark job description `label`, then restores the

@@ -33,16 +33,17 @@ import graft.metrics.JobLabel
   *
   * The bucket is the unit of commit and resume but not of files: like
   * Iceberg's data-file entries, the manifest names the files that hold
-  * each bucket. A FRESH run is ONE Spark job: the pipeline output keeps
-  * its `bucket` column, is sorted by it within each partition and written
-  * as one plain parquet write (one file per write task), per-bucket
-  * lineage riding the same job as ONE tally aggregate in one
-  * `Observation`; then the written files are listed and one snapshot is
-  * committed in which every bucket refers to them. A RESUME (some buckets
-  * already committed) processes only the missing buckets, one job per
-  * bucket, each into its own directory, committing one snapshot each — so
-  * a crash mid-resume loses at most the in-flight bucket and a re-run is
-  * idempotent. `readCommitted` reads only the files HEAD lists for
+  * each bucket. Every run takes ONE write path: the pipeline runs over the
+  * buckets HEAD has not committed (the whole input when none is; else a
+  * filter on the bucket, which keeps whole conversations), keeps its
+  * `bucket` column, is sorted by it within each partition and written as
+  * one plain parquet write (a file per write task that has rows; Spark's
+  * task 0 always opens one), with per-bucket lineage riding the same job
+  * as ONE tally aggregate in one `Observation`; then the written files are
+  * listed and one snapshot commits every processed bucket with them. The
+  * unit of loss is one run's write, fresh or resume: a crash before its
+  * commit loses that write and nothing committed before it, and a re-run
+  * redoes exactly the missing buckets. `readCommitted` reads only the files HEAD lists for
   * committed buckets, so a write that crashed before its commit is never
   * read and a re-run bucket never counts twice; a run deletes such
   * orphan directories before it writes. The manifest records the bucket
@@ -52,8 +53,9 @@ import graft.metrics.JobLabel
   * Version-1 checkpoints (a `partitionBy("bucket")` write into
   * `data/bucket=<b>/`, manifests without a `version` field) still read
   * back and resume: a committed bucket without a file set is read from
-  * its `bucket=<b>` directory. Every run's jobs carry the Spark job
-  * description `qf:fresh_write` or `qf:bucket_<b>`.
+  * its `bucket=<b>` directory, and the missing buckets go into one
+  * `data/snapshot=<n>/`. Every run's jobs carry the Spark job description
+  * `qf:write`.
   */
 object Checkpoint {
 
@@ -114,7 +116,7 @@ object Checkpoint {
   }
 
   /** Atomically commit a new snapshot = full lineage and files as of now. */
-  private def commitSnapshot(outDir: String, m: Manifest): Int = {
+  private def commitSnapshot(outDir: String, m: Manifest): Unit = {
     val dir = manifestDir(outDir)
     Files.createDirectories(dir)
     val next = nextSnapshot(outDir)
@@ -135,7 +137,6 @@ object Checkpoint {
     Files.writeString(tmp, next.toString)
     Files.move(tmp, dir.resolve("HEAD"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    next
   }
 
   private def listDir(p: Path): List[Path] =
@@ -174,13 +175,15 @@ object Checkpoint {
   private def bucketCol(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
 
   /** Run the quality-filter pipeline over `transcripts`, checkpointed by
-    * conv_id hash bucket. `failAfterBuckets` injects a crash for tests: it
-    * forces the per-bucket path (the one-pass path has no per-bucket
-    * boundary to crash on), and after that many commits the next bucket
-    * is written and the run fails before committing it, leaving an
-    * orphan write. */
+    * conv_id hash bucket: the buckets HEAD has not committed are written
+    * by one parquet write, whose jobs carry the label `qf:write`, and
+    * committed in one snapshot; with every bucket committed the run is a
+    * no-op that starts no job.
+    * `failBeforeCommit` injects a crash for tests: the run writes, then
+    * fails before its commit, leaving an orphan write. */
   def runResumable(transcripts: DataFrame, outDir: String, buckets: Int = 8,
-      inputPath: String = "", failAfterBuckets: Int = Int.MaxValue): RunReport = {
+      inputPath: String = "", failBeforeCommit: Boolean = false): RunReport = {
+    require(buckets > 0, s"buckets must be positive, got buckets=$buckets")
     val head = readManifest(outDir)
     head.bucketCount.foreach { c =>
       require(c == buckets,
@@ -188,10 +191,28 @@ object Checkpoint {
           s"bucket_count=$c — rerun with buckets=$c or start a fresh outDir")
     }
     dropOrphans(outDir, head)
-    if (head.lineage.isEmpty && failAfterBuckets == Int.MaxValue)
-      runFresh(transcripts, outDir, buckets, inputPath)
-    else
-      runBucketLoop(transcripts, outDir, buckets, inputPath, failAfterBuckets, head)
+    val missing = (0 until buckets).filterNot(head.lineage.contains)
+    val skipped = head.lineage.keys.toSeq.sorted
+    if (missing.isEmpty) RunReport(Nil, skipped, Nil)
+    else {
+      val t0 = System.nanoTime()
+      val in = if (head.lineage.isEmpty) transcripts
+        else transcripts.filter(bucketCol(buckets).isin(missing: _*))
+      val out = QualityFilter(in).withColumn("bucket", bucketCol(buckets))
+      val obs = new Observation("qf_write")
+      val files = JobLabel(transcripts.sparkSession, "qf:write") {
+        writeFiles(out.observe(obs, tally(buckets)).sortWithinPartitions("bucket"), outDir)
+      }
+      if (failBeforeCommit)
+        throw new RuntimeException("injected failure after the write, before its commit")
+      val wall = (System.nanoTime() - t0) / 1e9
+      val now = System.currentTimeMillis()
+      val written = missing.map(b => bucketLineage(obs, buckets, b, wall, inputPath, now))
+      commitSnapshot(outDir, Manifest(Some(buckets),
+        head.lineage ++ written.map(l => l.bucket -> l),
+        head.files ++ missing.map(_ -> files)))
+      RunReport(missing, skipped, written)
+    }
   }
 
   /** Per-bucket lineage counts as ONE aggregate over (bucket, keep,
@@ -227,54 +248,6 @@ object Checkpoint {
       inputPath: String, at: Long): BucketLineage = {
     val t = obs.get("tally").asInstanceOf[collection.Seq[Long]]
     BucketLineage(b, t(b), t(buckets + b), t(2 * buckets + b), wallSecs, inputPath, at)
-  }
-
-  /** Fresh run: ONE job — bucket, sort within partitions by bucket, one
-    * plain write (one file per task), per-bucket lineage from one tally
-    * aggregate in a single Observation (no second pass, no per-bucket
-    * re-scan of the input). */
-  private def runFresh(transcripts: DataFrame, outDir: String, buckets: Int,
-      inputPath: String): RunReport = {
-    val t0 = System.nanoTime()
-    val out = QualityFilter(transcripts)
-      .withColumn("bucket", bucketCol(buckets))
-    val obs = new Observation("fresh_run")
-    val files = JobLabel(transcripts.sparkSession, "qf:fresh_write") {
-      writeFiles(out.observe(obs, tally(buckets)).sortWithinPartitions("bucket"), outDir)
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    val now = System.currentTimeMillis()
-    val lineage = (0 until buckets).map(b =>
-      b -> bucketLineage(obs, buckets, b, wall, inputPath, now)).toMap
-    commitSnapshot(outDir, Manifest(Some(buckets), lineage, lineage.map(_._1 -> files)))
-    RunReport((0 until buckets), Nil, lineage.values.toSeq.sortBy(_.bucket))
-  }
-
-  /** Resume path: one job per missing bucket, each written with its
-    * `bucket` column into its own directory, one snapshot per commit. */
-  private def runBucketLoop(transcripts: DataFrame, outDir: String,
-      buckets: Int, inputPath: String, failAfterBuckets: Int,
-      committed: Manifest): RunReport = {
-    val todo = (0 until buckets).filterNot(committed.lineage.contains)
-    val done = scala.collection.mutable.ArrayBuffer.empty[BucketLineage]
-    var head = committed.copy(bucketCount = Some(buckets))
-    todo.foreach { b =>
-      val t0 = System.nanoTime()
-      val slice = transcripts.filter(bucketCol(buckets) === b)
-      val obs = new Observation(s"bucket_$b")
-      val out = QualityFilter(slice).withColumn("bucket", lit(b)).observe(obs, tally(buckets))
-      val files = JobLabel(transcripts.sparkSession, s"qf:bucket_$b") {
-        writeFiles(out, outDir)
-      }
-      if (done.size >= failAfterBuckets)
-        throw new RuntimeException(s"injected failure after writing bucket $b, before its commit")
-      val l = bucketLineage(obs, buckets, b, (System.nanoTime() - t0) / 1e9, inputPath,
-        System.currentTimeMillis())
-      head = head.copy(lineage = head.lineage + (b -> l), files = head.files + (b -> files))
-      commitSnapshot(outDir, head)
-      done += l
-    }
-    RunReport(done.map(_.bucket).toSeq, committed.lineage.keys.toSeq.sorted, done.toSeq)
   }
 
   /** Read back the committed output as one DataFrame: only the files HEAD

@@ -4,27 +4,58 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, when}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.Meter
 import graft.transcripts.{Checkpoint, QualityFilter, Transcripts, Turn}
 
-class CheckpointSpec extends AnyFunSuite {
+class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
-  def freshDir(): String =
-    Files.createTempDirectory("graft_ckpt").toString
+  /** Every directory the suite creates lives under one root, deleted after. */
+  private val root = Files.createTempDirectory("graft_ckpt")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteDirectory(root.toFile) finally super.afterAll()
+
+  def freshDir(): String = Files.createTempDirectory(root, "run").toString
 
   lazy val transcripts = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
 
+  def bucketOf(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
+
+  /** A version-2 checkpoint in `dir` in which exactly the buckets `< k` are
+    * committed: a fresh run over their rows, then HEAD's manifest rewritten
+    * to list only them (the state a run that committed those buckets and
+    * crashed before committing the rest leaves behind). */
+  def partialCheckpoint(input: DataFrame, dir: String, buckets: Int, k: Int): Unit = {
+    Checkpoint.runResumable(input.filter(bucketOf(buckets) < k), dir,
+      buckets = buckets, inputPath = "sf0.001")
+    val manifests = Paths.get(dir, "_manifests")
+    val manifest = manifests.resolve(
+      s"manifest-${Files.readString(manifests.resolve("HEAD")).trim}.json")
+    val mapper = new ObjectMapper()
+    val json = mapper.readTree(Files.readString(manifest)).asInstanceOf[ObjectNode]
+    val committed = json.get("buckets").elements().asScala
+      .filter(_.get("bucket").asInt < k).toSeq
+    json.putArray("buckets").addAll(committed.asJava)
+    Files.writeString(manifest, mapper.writeValueAsString(json))
+    assert(Checkpoint.committedBuckets(dir).keySet == (0 until k).toSet)
+  }
+
   test("crash mid-run, resume completes, result equals single-shot") {
     val dir = freshDir()
-    // crash after 3 of 8 buckets
+    // 3 of 8 buckets committed, then a run that crashes before its commit
+    partialCheckpoint(transcripts, dir, 8, 3)
     intercept[RuntimeException] {
       Checkpoint.runResumable(transcripts, dir, buckets = 8,
-        inputPath = "sf0.001", failAfterBuckets = 3)
+        inputPath = "sf0.001", failBeforeCommit = true)
     }
     val afterCrash = Checkpoint.committedBuckets(dir)
     assert(afterCrash.size == 3)
@@ -94,9 +125,10 @@ class CheckpointSpec extends AnyFunSuite {
     }
 
     val resumedDir = freshDir()
+    partialCheckpoint(input, resumedDir, buckets, 5)
     intercept[RuntimeException] {
       Checkpoint.runResumable(input, resumedDir, buckets = buckets,
-        inputPath = "sf0.001", failAfterBuckets = 5)
+        inputPath = "sf0.001", failBeforeCommit = true)
     }
     Checkpoint.runResumable(input, resumedDir, buckets = buckets, inputPath = "sf0.001")
     val resumed = Checkpoint.committedBuckets(resumedDir)
@@ -112,15 +144,28 @@ class CheckpointSpec extends AnyFunSuite {
       Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x")
     }
     assert(ex.getMessage.contains("bucket_count=4"))
+    // a non-positive bucket count is rejected before any job runs
+    val jobs = JobCapture(spark.sparkContext) {
+      intercept[IllegalArgumentException] {
+        Checkpoint.runResumable(transcripts, freshDir(), buckets = 0, inputPath = "x")
+      }
+    }
+    assert(jobs.isEmpty, jobs)
   }
 
   test("completed run re-runs as a no-op; lineage metrics are consistent") {
     val dir = freshDir()
     val r1 = Checkpoint.runResumable(transcripts, dir, buckets = 4, inputPath = "sf0.001")
     assert(r1.processed == Seq(0, 1, 2, 3))
-    val r2 = Checkpoint.runResumable(transcripts, dir, buckets = 4, inputPath = "sf0.001")
-    assert(r2.processed.isEmpty)
-    assert(r2.skipped == Seq(0, 1, 2, 3))
+    val head = Files.readString(Paths.get(dir, "_manifests", "HEAD"))
+    val jobs = JobCapture(spark.sparkContext) {
+      val r2 = Checkpoint.runResumable(transcripts, dir, buckets = 4, inputPath = "sf0.001")
+      assert(r2.processed.isEmpty)
+      assert(r2.skipped == Seq(0, 1, 2, 3))
+    }
+    assert(jobs.isEmpty, s"a no-op re-run started jobs: $jobs")
+    assert(Files.readString(Paths.get(dir, "_manifests", "HEAD")) == head,
+      "a no-op re-run committed a snapshot")
     val lineage = Checkpoint.committedBuckets(dir)
     assert(lineage.values.map(_.rowsIn).sum == transcripts.count())
     val kept = QualityFilter(transcripts).filter("keep").count()
@@ -132,6 +177,9 @@ class CheckpointSpec extends AnyFunSuite {
     Files.walk(Paths.get(dir, "data")).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
 
+  def dataDirs(dir: String): Set[String] =
+    Files.list(Paths.get(dir, "data")).iterator().asScala.map(_.getFileName.toString).toSet
+
   /** Same rows, as multisets, over the columns the pipeline writes. */
   def assertSameRows(a: DataFrame, b: DataFrame, clue: String): Unit = {
     val cols = Seq("conv_id", "turn_idx", "keep", "pii_found", "scrubbed_text")
@@ -139,8 +187,6 @@ class CheckpointSpec extends AnyFunSuite {
     assert(a.select(cols.map(col): _*).exceptAll(b.select(cols.map(col): _*)).isEmpty, clue)
     assert(b.select(cols.map(col): _*).exceptAll(a.select(cols.map(col): _*)).isEmpty, clue)
   }
-
-  def bucketOf(buckets: Int) = pmod(hash(col("conv_id")), lit(buckets))
 
   test("fresh run at 64 buckets writes fewer parquet files than buckets; " +
       "the manifest is version 2") {
@@ -162,13 +208,15 @@ class CheckpointSpec extends AnyFunSuite {
     val buckets = 8
     val clean = freshDir()
     Checkpoint.runResumable(transcripts, clean, buckets = buckets, inputPath = "sf0.001")
-    // crash after writing the first non-empty bucket b > 0, before its commit
+    // buckets < b committed, b the first non-empty bucket > 0; then a run
+    // writes the rest and crashes before its commit
     val b = transcripts.select(bucketOf(buckets)).distinct().as[Int].collect()
       .filter(_ > 0).min
     val dir = freshDir()
+    partialCheckpoint(transcripts, dir, buckets, b)
     intercept[RuntimeException] {
       Checkpoint.runResumable(transcripts, dir, buckets = buckets,
-        inputPath = "sf0.001", failAfterBuckets = b)
+        inputPath = "sf0.001", failBeforeCommit = true)
     }
     assert(Checkpoint.committedBuckets(dir).keySet == (0 until b).toSet)
     val written = spark.read.parquet(s"$dir/data")
@@ -234,6 +282,36 @@ class CheckpointSpec extends AnyFunSuite {
     assert(lineage(0).inputPath == path && lineage(4).inputPath == "sf0.001")
   }
 
+  test("resuming 59 of 64 buckets is one write: at most 3 jobs, all qf:write, " +
+      "one snapshot directory, no empty file but write task 0's") {
+    // a resume by one job per missing bucket (the loop this path replaced)
+    // started 118 jobs here and wrote 59 snapshot directories holding 59
+    // files, 46 of them with 0 rows
+    val buckets = 64
+    val dir = freshDir()
+    partialCheckpoint(transcripts, dir, buckets, 5)
+    val before = dataDirs(dir)
+    transcripts.count() // lazy setup outside the window
+    val jobs = JobCapture(spark.sparkContext) {
+      val r = Checkpoint.runResumable(transcripts, dir, buckets = buckets,
+        inputPath = "sf0.001")
+      assert(r.processed == (5 until buckets) && r.skipped == (0 until 5))
+    }
+    assert(jobs.size <= 3, s"${jobs.size} jobs: $jobs")
+    assert(jobs.forall(_.description == "qf:write"), jobs)
+    val added = dataDirs(dir) -- before
+    assert(added.size == 1 && added.head.startsWith("snapshot="), added)
+    val files = parquetFiles(dir).filter(_.getParent.getFileName.toString == added.head)
+    val writeTasks = jobs.last.tasks // the write is the last job to start
+    assert(files.nonEmpty && files.size <= writeTasks,
+      s"${files.size} files from $writeTasks write tasks")
+    val empty = files.map(_.getFileName.toString)
+      .filter(f => spark.read.parquet(s"$dir/data/${added.head}/$f").count() == 0)
+    assert(empty.forall(_.startsWith("part-00000-")), s"empty files: $empty")
+    assertSameRows(Checkpoint.readCommitted(spark, dir), QualityFilter(transcripts),
+      "resumed")
+  }
+
   test("every job a run starts carries a qf: description; the caller's " +
       "description is restored") {
     val sc = spark.sparkContext
@@ -243,15 +321,15 @@ class CheckpointSpec extends AnyFunSuite {
       val descs = JobCapture(sc) {
         Checkpoint.runResumable(transcripts, freshDir(), buckets = 8, inputPath = "x")
         val dir = freshDir()
+        partialCheckpoint(transcripts, dir, 8, 2)
         intercept[RuntimeException] {
           Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x",
-            failAfterBuckets = 2)
+            failBeforeCommit = true)
         }
         assert(sc.getLocalProperty("spark.job.description") == "caller")
         Checkpoint.runResumable(transcripts, dir, buckets = 8, inputPath = "x")
       }.map(_.description)
-      assert(descs.contains("qf:fresh_write"), descs)
-      assert((0 until 8).forall(b => descs.contains(s"qf:bucket_$b")), descs)
+      assert(descs.contains("qf:write"), descs)
       assert(descs.forall(d => d != null && d.startsWith("qf:")), descs)
       assert(sc.getLocalProperty("spark.job.description") == "caller")
     } finally sc.setJobDescription(null)

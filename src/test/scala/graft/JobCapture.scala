@@ -7,11 +7,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.{GraftSparkShim, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** A job's `spark.job.description` and `spark.jobGroup.id` (null if unset)
-  * and its call site: the name of its last stage, e.g. `count at X.scala:9`
-  * for a job an action runs on the caller's thread. The stage jobs of an
-  * adaptive plan are submitted from a pool thread and carry its call site. */
-final case class CapturedJob(description: String, group: String, callSite: String)
+/** A job's `spark.job.description` and `spark.jobGroup.id` (null if unset),
+  * its call site: the name of its last stage, e.g. `count at X.scala:9`
+  * for a job an action runs on the caller's thread (the stage jobs of an
+  * adaptive plan are submitted from a pool thread and carry its call
+  * site), and the number of tasks of that last stage. */
+final case class CapturedJob(description: String, group: String, callSite: String,
+    tasks: Int)
 
 /** Records the properties of every job that starts on a context while `f`
   * runs. The listener bus is drained before the listener attaches and
@@ -23,8 +25,9 @@ object JobCapture {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        val last = e.stageInfos.maxByOption(_.stageId)
         jobs.add(CapturedJob(prop("spark.job.description"), prop("spark.jobGroup.id"),
-          e.stageInfos.maxByOption(_.stageId).map(_.name).orNull))
+          last.map(_.name).orNull, last.fold(0)(_.numTasks)))
       }
     }
     GraftSparkShim.drainListeners(sc)
