@@ -19,47 +19,53 @@ final case class Suite(name: String, expectations: Seq[Expectation])
   * Physical strategy (SURVEY.md §4): where the reference resolves each metric
   * with its own backend round-trip (sparkdf_execution_engine.py:843-915 fuses
   * only AGGREGATE_FN partials), we fuse the ENTIRE suite per compute domain
-  * and collect every domain with ONE Spark action:
+  * into single-row branches, resolved in WAVES like the reference's
+  * iterative resolve (validation_graph.py:214-322): ONE action collects the
+  * union of a wave's branches (AQE submits their shuffle stages together,
+  * so the DAG scheduler overlaps them), and each branch's decoder records
+  * EVRs and returns its branches of the next wave:
   *
-  *   1. optional tiny pre-agg job per domain for z-score mean/stddev
-  *      dependencies;
-  *   2. per domain, ONE projection evaluating every window-free map
-  *      expectation's unexpected/missing boolean followed by ONE `df.agg`
+  *   1. `zscore`: per domain with z-score expectations, ONE aggregate of
+  *      their mean/stddev dependencies; its decoder returns (2) for it;
+  *   2. `domains`: per domain, ONE projection evaluating every window-free
+  *      map expectation's unexpected/missing boolean followed by ONE `df.agg`
   *      that bundles row_count, per-expectation unexpected/missing counts
   *      and all aggregate expectations' aggregates (identical aggregates
-  *      deduped);
-  *   3. one branch per WINDOW-shaped map expectation (unique / compound-
-  *      unique / monotonic): its window would otherwise drag the whole fused
-  *      projection through its shuffle — or a single-partition sort for
-  *      unpartitioned monotonic checks — so each gets its own aggregate,
-  *      like the reference's per-metric jobs (map_condition_auxilliary_
-  *      methods.py:600-625);
-  *   4. the single-row results of (2) and (3), over every domain, are the
-  *      branches of ONE union collected by ONE action; AQE submits the
-  *      branches' shuffle stages together, so the DAG scheduler overlaps
-  *      them. Capped unexpected-value samples (graft.functions.
-  *      CollectLimited) follow in a deferred pass, only for expectations
-  *      whose counts came back non-zero;
-  *   5. one job each, one after another, for VALUE-type expectations
+  *      deduped); plus one branch per WINDOW-shaped map expectation (unique
+  *      / compound-unique / monotonic), whose window would otherwise drag
+  *      the fused projection through its shuffle (the reference's
+  *      per-metric jobs, map_condition_auxilliary_methods.py:600-625);
+  *   3. `samples`: capped unexpected-value samples (graft.functions.
+  *      CollectLimited), only for expectations whose counts came back
+  *      non-zero;
+  *   4. one job each, one after another, for VALUE-type expectations
   *      (median, quantiles, distinct sets, KL) and SQL passthroughs.
   *
-  * So a suite of N row-rules costs one action instead of ~N. Transient job
-  * failures are retried up to MaxAttempts times (validation_graph.py:48,
-  * 263-271). Every job carries the description `suite:<names>/<part>`.
-  */
+  * So a suite's map/agg work costs at most three actions, however many
+  * domains it has. Transient job failures are retried up to MaxAttempts
+  * times (validation_graph.py:48, 263-271). Every job carries the
+  * description `suite:<names>/<parts>`, a wave's distinct parts joined by
+  * `+` (`domains`, `samples`, `zscore+domains`), or `.../value:<type>`. */
 final class SuiteRunner(
     resultFormat: ResultFormatSpec = ResultFormatSpec.default,
     idColumns: Seq[String] = Nil,
     batchViewName: String = "batch") {
 
   import ResultFormat.{MaxResultRecords, BooleanOnly, Basic, Summary, Complete}
-  import SuiteRunner.{Branch, withRetry}
+  import SuiteRunner.{Branch, branch, failing, withRetry}
 
   /** Index columns: the result_format parameter wins over the constructor. */
   private val indexColumns: Seq[String] =
     if (resultFormat.unexpectedIndexColumnNames.nonEmpty)
       resultFormat.unexpectedIndexColumnNames
     else idColumns
+  /** What the unexpected-row samples collect, and how many of each. */
+  private val collectValues =
+    resultFormat.rank >= Basic.rank && !resultFormat.excludeUnexpectedValues
+  private val collectIndexes = indexColumns.nonEmpty && resultFormat.rank >= Summary.rank
+  private val sampleCap =
+    if (resultFormat.rank >= Complete.rank) MaxResultRecords
+    else resultFormat.partialUnexpectedCount
 
   def run(df: DataFrame, suite: Suite): SuiteResult =
     runAll(df, Seq(suite)).head
@@ -100,23 +106,24 @@ final class SuiteRunner(
     }
 
     // -- map+agg expectations: every compute domain (row_condition) compiles
-    // into branches of one plan, collected by ONE action ----------------------
+    // into branches; ONE union action collects each wave of branches, and
+    // each decoder returns its branches of the next wave -----------------------
     val fuseable = exps.zipWithIndex.collect {
       case (e: MapExpectation, i) => (e: Expectation, i)
       case (e: AggExpectation, i) => (e: Expectation, i)
     }
-    val branches = fuseable.groupBy(_._1.rowCondition).toSeq.flatMap {
+    var wave = fuseable.groupBy(_._1.rowCondition).toSeq.flatMap {
       case (cond, group) =>
         // an unparseable row_condition (bad SQL, unresolved $param) fails
         // only ITS domain group: filter(String) is analysed eagerly
         Try(cond.map(df.filter).getOrElse(df)) match {
-          case Success(domainDf) => domainBranches(domainDf, group, record, tag)
+          case Success(domainDf) => domainBranches(domainDf, group, record)
           case Failure(ex) =>
             group.foreach { case (_, i) => record(i, Failure(ex)) }
             Nil
         }
     }
-    runBranches(branches, record, tag)
+    while (wave.nonEmpty) wave = runBranches(wave, tag)
 
     // -- VALUE and query expectations: arbitrary multi-action code, one after
     // another; identical expectations (case-class equality covers type,
@@ -185,11 +192,11 @@ final class SuiteRunner(
     } finally df.sparkSession.catalog.dropTempView(view)
   }
 
-  /** Pre-resolve z-score dependencies, then compile one compute domain into
-    * its branches: the fused projection+aggregate, and one per window-shaped
-    * condition. */
+  /** Compiles one compute domain into its first-wave branches: the z-score
+    * moments aggregate, whose decoder returns the count branches, or else
+    * those: the fused projection+aggregate, one per window-shaped condition. */
   private def domainBranches(domainDf: DataFrame, group: Seq[(Expectation, Int)],
-      record: (Int, Try[Evr]) => Unit, tag: String): Seq[Branch] = {
+      record: (Int, Try[Evr]) => Unit): Seq[Branch] = {
 
     // Per-expectation failure isolation (validation_graph.py:48,263-271 /
     // validator.py:782-805): an expectation referencing a missing column —
@@ -253,19 +260,59 @@ final class SuiteRunner(
     // keyed by (column, exactMoments): the same column may be probed with
     // both the Welford and the bit-reproducible sum-of-squares form
     val zKeys = zExps.map(z => (z._1.column, z._1.exactMoments)).distinct
-    val zStats: Map[(String, Boolean), Try[(Double, Double)]] =
-      if (zKeys.isEmpty) Map.empty
-      else Try(JobLabel(domainDf.sparkSession, s"$tag/zscore")(withRetry {
-        val aggsZ = zKeys.zipWithIndex.flatMap { case ((c, exact), k) =>
-          if (exact) Seq(Moments.meanExact(col(c)).as(s"__zm_$k"),
-            Moments.stddevExact(col(c)).as(s"__zs_$k"))
-          else Seq(avg(col(c)).as(s"__zm_$k"),
-            stddev_samp(col(c)).as(s"__zs_$k"))
-        }
-        domainDf.agg(aggsZ.head, aggsZ.tail: _*).head()
-      })) match {
-        case Failure(ex) => zKeys.map(kk => kk -> Failure[(Double, Double)](ex)).toMap
-        case Success(r) => zKeys.zipWithIndex.map { case (kk @ (c, _), k) =>
+    def zKey(z: ExpectColumnValueZScoresToBeLessThan) = (z.column, z.exactMoments)
+
+    // the domain's count branches, once its z-score stats are known
+    def countBranches(zStats: Map[(String, Boolean), Try[(Double, Double)]]): Seq[Branch] = {
+      val zFailed = zExps.collect { case (z, i) if zStats(zKey(z)).isFailure =>
+        record(i, Failure(zStats(zKey(z)).failed.get)); i
+      }.toSet
+
+      def unexpectedCond(e: MapExpectation): Column = e match {
+        case z: ExpectColumnValueZScoresToBeLessThan =>
+          val (m, s) = zStats(zKey(z)).get
+          col(z.column).isNotNull && !z.expectedWith(col(z.column), m, s)
+        case other => other.unexpectedCondition
+      }
+
+      // Window-shaped conditions get branches of their own; everything else
+      // fuses.
+      val live = mapExps.filterNot { case (_, i) => zFailed(i) }
+      val (windowExps, plainExps) = live.partition(_._1.usesWindow)
+      val fused =
+        if (plainExps.isEmpty && aggExps.isEmpty) Nil
+        else branch("domains", failing(record, (plainExps ++ aggExps).map(_._2)))(
+          mapAggBranch(domainDf, plainExps, aggExps, unexpectedCond, record))
+      fused ++ windowExps.flatMap { case (e, i) =>
+        branch("domains", failing(record, Seq(i)))(e match {
+          // uniqueness = a group count, not a window: groupBy gets map-side
+          // combine and shuffles only (distinct key, count) — the full-row
+          // window shuffle is needed only when per-row INDEXES are requested
+          case (_: ExpectColumnValuesToBeUnique |
+                _: ExpectCompoundColumnsToBeUnique) if !collectIndexes =>
+            uniqueBranch(domainDf, e, i, record)
+          case _ =>
+            if (e.usesGlobalWindow)
+              SuiteRunner.log.warn(s"${e.expectationType}: unpartitioned " +
+                "window — evaluating on a single partition (reference " +
+                "semantics; pass partitionBy for a shuffle-parallel check)")
+            mapAggBranch(domainDf, Seq((e, i)), Nil, unexpectedCond, record)
+        })
+      }
+    }
+
+    // a failed moments action fails every z-score key; the count branches
+    // still follow, so the domain's other expectations are unaffected
+    if (zKeys.isEmpty) countBranches(Map.empty)
+    else branch("zscore", ex => countBranches(zKeys.map(_ -> Failure(ex)).toMap)) {
+      val aggsZ = zKeys.zipWithIndex.flatMap { case ((c, exact), k) =>
+        if (exact) Seq(Moments.meanExact(col(c)).as(s"__zm_$k"),
+          Moments.stddevExact(col(c)).as(s"__zs_$k"))
+        else Seq(avg(col(c)).as(s"__zm_$k"),
+          stddev_samp(col(c)).as(s"__zs_$k"))
+      }
+      (domainDf.agg(aggsZ.head, aggsZ.tail: _*), r => countBranches(
+        zKeys.zipWithIndex.map { case (kk @ (c, _), k) =>
           kk -> Try {
             val m = r.getAs[Any](s"__zm_$k")
             val s = r.getAs[Any](s"__zs_$k")
@@ -275,92 +322,41 @@ final class SuiteRunner(
             require(sd != 0.0 && !sd.isNaN, s"stddev of '$c' is zero or NaN")
             (m.asInstanceOf[Number].doubleValue(), sd)
           }
-        }.toMap
-      }
-    def zKey(z: ExpectColumnValueZScoresToBeLessThan) = (z.column, z.exactMoments)
-    val zFailed = zExps.filter { case (z, _) => zStats(zKey(z)).isFailure }
-    zFailed.foreach { case (z, i) =>
-      record(i, Failure(zStats(zKey(z)).failed.get))
-    }
-    val zFailedIdx = zFailed.map(_._2).toSet
-
-    def unexpectedCond(e: MapExpectation): Column = e match {
-      case z: ExpectColumnValueZScoresToBeLessThan =>
-        val (m, s) = zStats(zKey(z)).get
-        col(z.column).isNotNull && !z.expectedWith(col(z.column), m, s)
-      case other => other.unexpectedCondition
-    }
-
-    // Window-shaped conditions get branches of their own; everything else
-    // fuses.
-    val live = mapExps.filterNot { case (_, i) => zFailedIdx.contains(i) }
-    val (windowExps, plainExps) = live.partition(_._1.usesWindow)
-    val collectIndexes =
-      indexColumns.nonEmpty && resultFormat.rank >= Summary.rank
-
-    // a construction error fails only the branch's own expectations
-    def branch(members: Seq[Int])(build: => (DataFrame, Row => Unit)): Option[Branch] =
-      Try(build) match {
-        case Success((frame, decode)) => Some(Branch(frame, members, decode))
-        case Failure(ex) => members.foreach(record(_, Failure(ex))); None
-      }
-    val fused =
-      if (plainExps.isEmpty && aggExps.isEmpty) None
-      else branch((plainExps ++ aggExps).map(_._2))(
-        mapAggBranch(domainDf, plainExps, aggExps, unexpectedCond, record, tag))
-    fused.toSeq ++ windowExps.flatMap { case (e, i) =>
-      branch(Seq(i))(e match {
-        // uniqueness = a group count, not a window: groupBy gets map-side
-        // combine and shuffles only (distinct key, count) — the full-row
-        // window shuffle is needed only when per-row INDEXES are requested
-        case (_: ExpectColumnValuesToBeUnique |
-              _: ExpectCompoundColumnsToBeUnique) if !collectIndexes =>
-          uniqueBranch(domainDf, e, i, record)
-        case _ =>
-          if (e.usesGlobalWindow)
-            SuiteRunner.log.warn(s"${e.expectationType}: unpartitioned " +
-              "window — evaluating on a single partition (reference " +
-              "semantics; pass partitionBy for a shuffle-parallel check)")
-          mapAggBranch(domainDf, Seq((e, i)), Nil, unexpectedCond, record, tag)
-      })
+        }.toMap))
     }
   }
 
-  /** Collects every branch with ONE action: branch k's columns are renamed
-    * `__b<k>_<name>` and its rows tagged `__branch` = k, the branches are
-    * combined by `unionByName` (each row leaves the others' columns null),
-    * and the tag routes each row back to its branch's decoder.
-    * AQE submits the branches' shuffle stages together, so the DAG
-    * scheduler overlaps them. When the combined action fails, the branches
-    * re-run one at a time, so a runtime error (a pattern that throws at
-    * evaluation) fails only its own branch's expectations. */
-  private def runBranches(branches: Seq[Branch],
-      record: (Int, Try[Evr]) => Unit, tag: String): Unit = {
-    if (branches.isEmpty) return
+  /** Collects one wave of branches with ONE action: branch k's columns are
+    * renamed `__b<k>_<name>` and its rows tagged `__branch` = k, the branches
+    * are combined by `unionByName` (each row leaves the others' columns
+    * null), and the tag routes each row back to its branch's decoder, which
+    * returns its branches of the next wave. AQE submits the branches'
+    * shuffle stages together, so the DAG scheduler overlaps them. When the
+    * combined action fails, the branches re-run one at a time, so a runtime
+    * error (a pattern that throws at evaluation) fails only its own branch's
+    * expectations. The action is labelled `<tag>/<parts>`, the distinct
+    * parts of its branches joined by `+`. */
+  private def runBranches(branches: Seq[Branch], tag: String): Seq[Branch] = {
     // a fresh Dataset per attempt: a failed adaptive plan is not re-run
-    def collect(df: DataFrame): Array[Row] =
-      JobLabel(df.sparkSession, s"$tag/domains")(withRetry(df.select("*").collect()))
-    def fail(b: Branch, ex: Throwable): Unit = b.members.foreach(record(_, Failure(ex)))
+    def collect(bs: Seq[Branch], df: DataFrame): Array[Row] =
+      JobLabel(df.sparkSession, s"$tag/${bs.map(_.part).distinct.mkString("+")}")(
+        withRetry(df.select("*").collect()))
     Try {
       val union = branches.zipWithIndex.map { case (b, k) =>
         b.frame.select(lit(k).as("__branch") +:
           b.frame.columns.map(c => col(c).as(s"__b${k}_$c")).toSeq: _*)
       }.reduce(_.unionByName(_, allowMissingColumns = true))
-      collect(union).map { r =>
+      collect(branches, union).map { r =>
         val k = r.getInt(0)
         val frame = branches(k).frame
         k -> (new GenericRowWithSchema(
           frame.columns.map(c => r.get(r.fieldIndex(s"__b${k}_$c"))), frame.schema): Row)
       }.toMap
     } match {
-      case Success(rows) => branches.zipWithIndex.foreach { case (b, k) => b.decode(rows(k)) }
-      case Failure(ex) if branches.size == 1 => fail(branches.head, ex)
-      case Failure(_) => branches.foreach { b =>
-        Try(collect(b.frame).head) match {
-          case Success(row) => b.decode(row)
-          case Failure(ex) => fail(b, ex)
-        }
-      }
+      case Success(rows) =>
+        branches.zipWithIndex.flatMap { case (b, k) => b.decode(Success(rows(k))) }
+      case Failure(ex) if branches.size == 1 => branches.head.decode(Failure(ex))
+      case Failure(_) => branches.flatMap(b => b.decode(Try(collect(Seq(b), b.frame).head)))
     }
   }
 
@@ -371,12 +367,7 @@ final class SuiteRunner(
     * rebuilt with row multiplicity (value repeated count times) to match
     * the reference's per-row partial_unexpected_list. */
   private def uniqueBranch(domainDf: DataFrame, e: MapExpectation,
-      idx: Int, record: (Int, Try[Evr]) => Unit): (DataFrame, Row => Unit) = {
-    val collectValues =
-      resultFormat.rank >= Basic.rank && !resultFormat.excludeUnexpectedValues
-    val cap =
-      if (resultFormat.rank >= Complete.rank) MaxResultRecords
-      else resultFormat.partialUnexpectedCount
+      idx: Int, record: (Int, Try[Evr]) => Unit): (DataFrame, Row => Seq[Branch]) = {
     val keyCols = e.domainColumns.map(col)
     val g = domainDf.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
     val missing = e.missingCondition
@@ -388,11 +379,11 @@ final class SuiteRunner(
     if (collectValues) {
       // value + its count collected in lockstep (same row order within
       // one aggregation buffer), expanded to row multiplicity below
-      aggCols += collect_limited(when(dup, e.unexpectedValue), cap).as("__uv")
-      aggCols += collect_limited(when(dup, col("__cnt").cast(StringType)), cap)
+      aggCols += collect_limited(when(dup, e.unexpectedValue), sampleCap).as("__uv")
+      aggCols += collect_limited(when(dup, col("__cnt").cast(StringType)), sampleCap)
         .as("__un")
     }
-    (g.agg(aggCols.head, aggCols.tail.toSeq: _*), row => record(idx, Try {
+    (g.agg(aggCols.head, aggCols.tail.toSeq: _*), row => { record(idx, Try {
       val n = Option(row.getAs[Any]("__n")).fold(0L)(_.asInstanceOf[Long])
       val mc = Option(row.getAs[Any]("__mc")).fold(0L)(_.asInstanceOf[Long])
       val uc = Option(row.getAs[Any]("__uc")).fold(0L)(_.asInstanceOf[Long])
@@ -404,19 +395,19 @@ final class SuiteRunner(
           vs.zip(cs).iterator
             // cap BEFORE toInt: a >2^31-row duplicate group must not NFE
             .flatMap { case (v, c) =>
-              Iterator.fill(math.min(c.toLong, cap.toLong).toInt)(v)
+              Iterator.fill(math.min(c.toLong, sampleCap.toLong).toInt)(v)
             }
-            .take(cap).toSeq
+            .take(sampleCap).toSeq
         }
       buildMapEvr(e, n, mc, uc, vals, Nil)
-    }))
+    }); Nil })
   }
 
   /** One projection + one SUMS-ONLY aggregate over `domainDf` for the given
     * map and aggregate expectations — plain count/sum-when columns, so the
     * whole fused pass is a codegen'd HashAggregate (no ObjectHashAggregate
     * anywhere in the steady state). Unexpected-value/index SAMPLES are
-    * deferred to [[sampleRow]], which runs only for the expectations whose
+    * deferred to [[sampleFrame]], which runs only for the expectations whose
     * unexpected count came back non-zero — an all-green suite costs exactly
     * one whole-stage-codegen scan. Exposed package-private so plan tests
     * can assert the fused frame's physical plan. */
@@ -475,13 +466,9 @@ final class SuiteRunner(
     * second scan — on a nondeterministic source (unstable sampling, a view
     * over mutating data) the two can disagree; the counts are
     * authoritative. */
-  private def sampleRow(domainDf: DataFrame,
+  private def sampleFrame(domainDf: DataFrame,
       toSample: Seq[MapExpectation],
-      unexpectedCond: MapExpectation => Column,
-      collectValues: Boolean, collectIndexes: Boolean): Row = {
-    val cap =
-      if (resultFormat.rank >= Complete.rank) MaxResultRecords
-      else resultFormat.partialUnexpectedCount
+      unexpectedCond: MapExpectation => Column): DataFrame = {
     val projCols = mutable.ArrayBuffer.empty[Column]
     toSample.zipWithIndex.foreach { case (e, j) =>
       projCols += unexpectedCond(e).as(s"__u$j")
@@ -501,52 +488,31 @@ final class SuiteRunner(
     val aggCols = mutable.ArrayBuffer.empty[Column]
     toSample.indices.foreach { j =>
       if (collectValues)
-        aggCols += collect_limited(when(col(s"__u$j"), col(s"__v$j")), cap).as(s"__uv$j")
+        aggCols += collect_limited(when(col(s"__u$j"), col(s"__v$j")), sampleCap).as(s"__uv$j")
       if (collectIndexes)
-        aggCols += collect_limited(when(col(s"__u$j"), col(s"__ix$j")), cap).as(s"__uix$j")
+        aggCols += collect_limited(when(col(s"__u$j"), col(s"__ix$j")), sampleCap).as(s"__uix$j")
     }
-    withRetry(proj.agg(aggCols.head, aggCols.tail.toSeq: _*).head())
+    proj.agg(aggCols.head, aggCols.tail.toSeq: _*)
   }
 
-  /** The fused aggregate as a branch; its decoder runs the deferred sample
-    * pass when a count comes back non-zero. */
+  /** The fused aggregate as a branch. Its decoder records every EVR that
+    * needs no sample and returns one `samples` branch for the expectations
+    * whose count came back non-zero; a failed sample fails only those. */
   private def mapAggBranch(domainDf: DataFrame,
       mapExps: Seq[(MapExpectation, Int)],
       aggExps: Seq[(AggExpectation, Int)],
       unexpectedCond: MapExpectation => Column,
-      record: (Int, Try[Evr]) => Unit, tag: String): (DataFrame, Row => Unit) = {
-    val collectValues =
-      resultFormat.rank >= Basic.rank && !resultFormat.excludeUnexpectedValues
-    val collectIndexes = indexColumns.nonEmpty && resultFormat.rank >= Summary.rank
+      record: (Int, Try[Evr]) => Unit): (DataFrame, Row => Seq[Branch]) = {
     val (fused, resolveAlias) = fusedFrame(domainDf, mapExps, aggExps, unexpectedCond)
     (fused, row => {
       val n = row.getAs[Long]("__n")
+      def evr(k: Int, vals: Seq[String], ixs: Seq[String]): Try[Evr] = Try(
+        buildMapEvr(mapExps(k)._1, n, row.getAs[Long](s"__mc$k"),
+          row.getAs[Long](s"__uc$k"), vals, ixs))
       // deferred samples: only for expectations with unexpected rows
-      val toSample: Seq[Int] =
-        if (!collectValues && !collectIndexes) Nil
-        else mapExps.indices.filter(k => row.getAs[Long](s"__uc$k") > 0L)
-      val samplePos: Map[Int, Int] = toSample.zipWithIndex.toMap
-      lazy val sampleT: Try[Row] = Try(JobLabel(domainDf.sparkSession,
-        s"$tag/samples")(sampleRow(domainDf, toSample.map(k => mapExps(k)._1),
-          unexpectedCond, collectValues, collectIndexes)))
-      mapExps.zipWithIndex.foreach { case ((e, i), k) =>
-        record(i, Try {
-          val uc = row.getAs[Long](s"__uc$k")
-          val mc = row.getAs[Long](s"__mc$k")
-          val (vals, ixs) = samplePos.get(k) match {
-            case None => (Nil, Nil)
-            case Some(j) =>
-              val s = sampleT.get // a sample failure fails only samplers
-              (if (collectValues)
-                s.getAs[scala.collection.Seq[String]](s"__uv$j").toSeq
-                  .map(v => if (v == SuiteRunner.NullSentinel) null else v)
-               else Nil,
-               if (collectIndexes)
-                s.getAs[scala.collection.Seq[String]](s"__uix$j").toSeq else Nil)
-          }
-          buildMapEvr(e, n, mc, uc, vals, ixs)
-        })
-      }
+      val (toSample, done) = mapExps.indices.partition(k =>
+        (collectValues || collectIndexes) && row.getAs[Long](s"__uc$k") > 0L)
+      done.foreach(k => record(mapExps(k)._2, evr(k, Nil, Nil)))
       aggExps.foreach { case (e, i) =>
         record(i, Try {
           val resolved = e.aggs.map { case (name, _) =>
@@ -569,6 +535,18 @@ final class SuiteRunner(
             Map("observed_value" -> obs) ++ extra)
         })
       }
+      if (toSample.isEmpty) Nil
+      else branch("samples", failing(record, toSample.map(mapExps(_)._2)))(
+        (sampleFrame(domainDf, toSample.map(mapExps(_)._1), unexpectedCond), s => {
+          def list(on: Boolean, c: String): Seq[String] =
+            if (on) s.getAs[scala.collection.Seq[String]](c).toSeq else Nil
+          toSample.zipWithIndex.foreach { case (k, j) =>
+            record(mapExps(k)._2, evr(k, list(collectValues, s"__uv$j")
+              .map(v => if (v == SuiteRunner.NullSentinel) null else v),
+              list(collectIndexes, s"__uix$j")))
+          }
+          Nil
+        }))
     })
   }
 
@@ -654,11 +632,23 @@ object SuiteRunner {
   private[core] val NullSentinel = "\u0000\u0000graft:null\u0000\u0000"
   private[core] val log = org.slf4j.LoggerFactory.getLogger(classOf[SuiteRunner])
 
-  /** One single-row frame of a suite's combined plan, the expectation
-    * indexes it decides, and the decoder that records their EVRs from its
-    * row. */
-  private final case class Branch(frame: DataFrame, members: Seq[Int],
-      decode: Row => Unit)
+  /** One single-row frame of a suite's combined plan, the part of the run
+    * it belongs to (`zscore`, `domains`, `samples`), and the decoder that
+    * records EVRs from its row, or from its action's failure, and returns
+    * the branches of the next wave. */
+  private final case class Branch(part: String, frame: DataFrame,
+      decode: Try[Row] => Seq[Branch])
+
+  /** A branch whose construction error and failed action both go to
+    * `fail`, which returns the branches that still follow. */
+  private def branch(part: String, fail: Throwable => Seq[Branch])(
+      build: => (DataFrame, Row => Seq[Branch])): Seq[Branch] =
+    Try(build).fold(fail, { case (frame, decode) =>
+      Seq(Branch(part, frame, _.fold(fail, decode))) })
+
+  /** The failure function of a branch whose members all fail with it. */
+  private def failing(record: (Int, Try[Evr]) => Unit, members: Seq[Int])(
+      ex: Throwable): Seq[Branch] = { members.foreach(record(_, Failure(ex))); Nil }
 }
 
 object Graft {

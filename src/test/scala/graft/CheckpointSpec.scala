@@ -6,25 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, sum, when}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.Meter
 import graft.transcripts.{Checkpoint, QualityFilter, Transcripts, Turn}
 
-class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CheckpointSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
-  /** Every directory the suite creates lives under one root, deleted after. */
-  private val root = Files.createTempDirectory("graft_ckpt")
-
-  override def afterAll(): Unit =
-    try FileUtils.deleteDirectory(root.toFile) finally super.afterAll()
-
-  def freshDir(): String = Files.createTempDirectory(root, "run").toString
+  def freshDir(): String = tempDir("run")
 
   lazy val transcripts = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 
-class DataDocsSpec extends AnyFunSuite {
+class DataDocsSpec extends AnyFunSuite with TempDirs {
 
   private def sr = SuiteResult.of("docs_suite <x>", Seq(
     Evr("expect_column_values_to_not_be_null", Map("column" -> "a"),
@@ -20,7 +20,7 @@ class DataDocsSpec extends AnyFunSuite {
       exception = Some("IllegalArgumentException: <bad & broken>"))))
 
   test("site renders index + result page with escaped content") {
-    val dir = Files.createTempDirectory("graft_docs").toString
+    val dir = tempDir("docs")
     val idx = DataDocs.writeSite(dir, Seq(sr), "run-1")
     val index = Files.readString(idx)
     assert(index.contains("FAILED") && index.contains("docs_suite &lt;x&gt;"))
@@ -38,7 +38,7 @@ class DataDocsSpec extends AnyFunSuite {
   }
 
   test("checkpoint action drops a site per checkpoint") {
-    val dir = Files.createTempDirectory("graft_docs_cp").toString
+    val dir = tempDir("docs_cp")
     DataDocsAction(dir).run("nightly", sr)
     assert(Files.exists(java.nio.file.Paths.get(dir, "nightly", "index.html")))
   }

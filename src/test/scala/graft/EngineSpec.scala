@@ -22,7 +22,7 @@ object TestSpark {
 /** Engine semantics ported from the reference's golden corpus shapes
   * (FIXTURES.md §2): null handling (§1.3), mostly math, vacuous truth,
   * result-format fields, caps, window conditions, pair ignore_row_if. */
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -464,6 +464,77 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("a suite run is one union action per wave: z-score moments, counts, samples") {
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        execs.add(fn)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        execs.add(fn)
+    }
+    val d = (1 to 2000).map(i =>
+      (i.toLong, i % 7, s"v${i % 13}", if (i % 11 == 0) null else s"w$i"))
+      .toDF("id", "grp", "cat", "maybe")
+    // every not-null domain has null rows, so samples follow the counts
+    val stress = Suite("stress", Seq(
+      ExpectColumnValuesToNotBeNull("maybe", rowCondition = Some("grp = 0")),
+      ExpectColumnValuesToNotBeNull("maybe", rowCondition = Some("grp = 1")),
+      ExpectColumnValuesToNotBeNull("maybe"),
+      ExpectColumnValuesToBeBetween("id", Some(1), Some(2000)),
+      ExpectColumnValuesToMatchRegex("cat", "^v"),
+      ExpectColumnValuesToBeUnique("id"),
+      ExpectColumnValuesToBeUnique("cat"),
+      ExpectColumnProportionOfUniqueValuesToBeBetween("cat", Some(0.0), Some(0.01)),
+      ExpectColumnUniqueValueCountToBeBetween("cat", Some(13), Some(13)),
+      ExpectColumnValuesToNotBeNull("no_such_column")))
+    // z-score rules on three domains (each flags the tails of a uniform id)
+    // and a failing not-null rule on a fourth
+    val zscore = Suite("zscore", Seq(
+      ExpectColumnValueZScoresToBeLessThan("id", 1.5, rowCondition = Some("grp = 0")),
+      ExpectColumnValueZScoresToBeLessThan("id", 1.5, rowCondition = Some("grp = 1")),
+      ExpectColumnValueZScoresToBeLessThan("id", 1.5),
+      ExpectColumnValuesToNotBeNull("maybe", rowCondition = Some("grp = 2"))))
+    val sc = spark.sparkContext
+    // the executions of one run, and the parts named by its jobs' labels
+    def waves(s: Suite): (Int, Set[Set[String]]) = {
+      GraftSparkShim.drainListeners(sc)
+      execs.clear()
+      val jobs = JobCapture(sc) {
+        val sr = Graft.validate(d, s)
+        assert(sr.results.count(_.exception.isDefined) <= 1, sr.results)
+        assert(sr.results.forall(e => e.success || e.exception.isDefined ||
+          e.result("partial_unexpected_list").asInstanceOf[Seq[_]].nonEmpty), sr.results)
+      }.map(_.description)
+      assert(jobs.forall(j => j != null && j.startsWith(s"suite:${s.name}/")), jobs)
+      import scala.jdk.CollectionConverters._
+      (execs.asScala.count(_ != "command"),
+        jobs.map(_.stripPrefix(s"suite:${s.name}/").split('+').toSet).toSet)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(waves(stress) == ((2, Set(Set("domains"), Set("samples")))))
+      assert(waves(zscore) == ((3,
+        Set(Set("zscore", "domains"), Set("domains", "samples"), Set("samples")))))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a failed z-score moments action fails only the z-score rules") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf((_: Long) => (throw new RuntimeException("injected moments failure")): Double)
+    // not a local relation, whose projection the optimizer would evaluate
+    // eagerly; x in 1..10: five unexpected rows, so the plain rule samples
+    val d = spark.range(1, 11).toDF("x").withColumn("bad", boom(col("x")))
+    val plain = ExpectColumnValuesToBeBetween("x", Some(1), Some(5))
+    val alone = Graft.validate(d, Suite("t", Seq(plain))).results.head
+    val r = Graft.validate(d, Suite("t", Seq(
+      ExpectColumnValueZScoresToBeLessThan("bad", 3.0), plain))).results
+    assert(!r(0).success && r(0).exception.exists(_.contains("injected")), r(0))
+    assert(r(1) == alone)
+    assert(alone.result.get("unexpected_count").contains(5L), alone)
+  }
+
   test("a runtime error in the combined action fails only its own branch") {
     // fused, uniqueness and window branches; '{' is a reserved pattern
     // character, so the fused branch throws while it evaluates
@@ -600,7 +671,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("checkpoint run fans results out to actions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_run").toString
+    val dir = tempDir("ckpt_run")
     val logged = collection.mutable.ArrayBuffer.empty[String]
     val r = SuiteCheckpoint.run("nightly",
       Seq(

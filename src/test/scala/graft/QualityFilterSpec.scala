@@ -8,7 +8,7 @@ import graft.transcripts.{Checkpoint, QualityFilter, Transcripts, Turn}
 
 /** Hand-labeled keep/drop + scrub cases for the quality-filter pipeline
   * (FIXTURES.md §3). */
-class QualityFilterSpec extends AnyFunSuite {
+class QualityFilterSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -300,9 +300,7 @@ class QualityFilterSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      Checkpoint.runResumable(t,
-        java.nio.file.Files.createTempDirectory("graft_qf_plan").toString,
-        buckets = 64)
+      Checkpoint.runResumable(t, tempDir("qf_plan"), buckets = 64)
       org.apache.spark.GraftSparkShim.drainListeners(spark.sparkContext)
       assert(metrics.synchronized(metrics.toList) == List(1),
         "fresh-run write: one CollectMetrics with one metric")
@@ -313,7 +311,7 @@ class QualityFilterSpec extends AnyFunSuite {
       "conv_id form ONE conversation with unique turn_idx") {
     // lpad(…, 12, '0') keeps the first 12 characters, so both ids render
     // 'conv-100000000000'; numbering per user_id would repeat turn_idx 0..2
-    val dir = java.nio.file.Files.createTempDirectory("graft_conv_key").toString
+    val dir = tempDir("conv_key")
     Seq(1000000000000L, 1000000000001L).zipWithIndex.flatMap { case (u, i) =>
       (0 until 3).map(k => (100L * i + k, ts(10L * k + i), u, "view"))
     }.toDF("event_id", "ts", "user_id", "event_type")

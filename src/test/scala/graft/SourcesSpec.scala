@@ -9,12 +9,12 @@ import org.apache.spark.sql.types._
 import graft.core._
 import graft.sources.BatchReader
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   lazy val base: String = {
-    val dir = Files.createTempDirectory("graft_src").toString
+    val dir = tempDir("src")
     val df = Seq((1, "a", 1.5), (2, "b", 2.5), (3, "c", 3.5)).toDF("id", "s", "v")
     df.coalesce(1).write.option("header", "true").csv(s"$dir/t_csv")
     df.coalesce(1).write.option("header", "true").option("sep", "\t").csv(s"$dir/t_tsv")
@@ -55,7 +55,7 @@ class SourcesSpec extends AnyFunSuite {
     val sr = Graft.validate(df, Suite("sink_test", Seq(
       ExpectColumnValuesToBeBetween("x", Some(1), Some(5)),
       ExpectColumnMeanToBeBetween("x", Some(5.0), Some(6.0)))))
-    val out = Files.createTempDirectory("graft_sink").toString + "/result.json"
+    val out = tempDir("sink") + "/result.json"
     BatchReader.writeSuiteResultJson(sr, out)
     val txt = Files.readString(java.nio.file.Paths.get(out))
     assert(txt.contains(""""suite_name":"sink_test""""))

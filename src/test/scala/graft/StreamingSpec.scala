@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
@@ -11,13 +9,13 @@ import graft.core.{ExpectColumnValuesToBeInSet, ExpectColumnValuesToNotBeNull, M
 import graft.streaming.StreamingValidate
 import graft.transcripts.{QualityFilter, Transcripts}
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** Transcripts written to disk so a file stream can replay them. */
   lazy val stagingDir: String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("stream")
     Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
       .repartition(4).write.mode("overwrite").parquet(dir)
     dir
@@ -66,7 +64,7 @@ class StreamingSpec extends AnyFunSuite {
     // Retried once: file-source listing under heavy host load has shown
     // rare batch-boundary flakiness unrelated to the operator.
     def attempt(round: Int): Map[(String, Int), Boolean] = {
-      val dir = Files.createTempDirectory(s"graft_stream_seq$round").toString
+      val dir = tempDir(s"stream_seq$round")
       val name = s"rs$round"
       batch.filter(col("turn_idx") < 4).write.mode("append").parquet(dir)
       val stream = spark.readStream.schema(batch.schema).parquet(dir)
@@ -112,7 +110,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("categorical drift monitor: matching window clean, drifted window flags") {
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("drift")
     // day 1 matches the expected 50/30/20 partition exactly; day 2 is all
     // out-of-partition values (pooled tail bucket)
     val rows =

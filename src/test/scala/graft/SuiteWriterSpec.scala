@@ -6,7 +6,7 @@ import graft.core._
 
 /** Round-trip: Suite → GE JSON document (SuiteWriter) → SuiteJson reader →
   * the SAME case classes, for every JSON-expressible expectation type. */
-class SuiteWriterSpec extends AnyFunSuite {
+class SuiteWriterSpec extends AnyFunSuite with TempDirs {
 
   private val battery = Suite("roundtrip_suite", Seq(
     ExpectColumnValuesToBeNull("a"),
@@ -182,8 +182,7 @@ class SuiteWriterSpec extends AnyFunSuite {
   }
 
   test("write/read through the filesystem") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_suites")
-    val p = dir.resolve("s.json").toString
+    val p = s"${tempDir("suites")}/s.json"
     SuiteWriter.write(battery, p)
     val back = SuiteJson.fromJson(java.nio.file.Files.readString(
       java.nio.file.Paths.get(p)))
