@@ -60,10 +60,8 @@ object DedupScalingBench {
 
   private def pass(docs: DataFrame, stage: ScalingBench.Stage): Map[String, Long] = {
     // stage 1: banded-LSH candidate generation + exact Jaccard verification
-    val pairsDf = stage("pairs") {
-      val p = Dedup.minhashLshPairs(docs, "doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
-      p.count(); p
-    }
+    // the pairs come back pinned (a local checkpoint), so no persist here
+    val pairsDf = stage("pairs")(Dedup.minhashLshPairs(docs, "doc_id", "text"))
     val nPairs = pairsDf.count()
     // stage 2: connected components over the verified pair list, with the
     // default size-gated CC; stage 2b: the fully distributed path
@@ -86,7 +84,7 @@ object DedupScalingBench {
         .filter(col("__cc_cluster").isNull || col("__cc_cluster") === col("doc_id"))
         .count()
     }
-    pairsDf.unpersist(); ccDf.unpersist()
+    ccDf.unpersist()
     Map("pairs" -> nPairs, "clusters" -> nClusters, "survivors" -> nSurv)
   }
 

@@ -1,6 +1,8 @@
 package graft
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Json
 /** Correctness dump: each selected SparkEntry.queries result → parquet,
   * plus oracle_sql.json holding the oracles of those queries, for the
   * DuckDB compare in tools/check.py. */
@@ -29,30 +31,15 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not leave a PREVIOUS run's parquet behind —
         // the checker would silently validate stale results as green
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // oracles for the SELECTED queries only: the checker fails every oracle
-    // without output, so a query that crashed above cannot pass by absence
-    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // without output, so a query that crashed above cannot pass by absence.
+    // Json escapes every control char, so tools/check.py's json.load reads
+    // any SQL text.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(
+      SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }))
     spark.stop()
   }
 }

@@ -1,9 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.RegexGuard
 
@@ -1004,7 +1005,13 @@ final case class ExpectColumnDistinctValuesToEqualSet(column: String, valueSet: 
 
 /** Shared KL arithmetic (expect_column_kl_divergence_to_be_less_than.py:
   * 557-860). `entropy` replicates scipy.stats.entropy(pk, qk): both vectors
-  * are normalized to sum 1, then Σ p·ln(p/q); any p>0 with q=0 → +∞. */
+  * are normalized to sum 1, then Σ p·ln(p/q); any p>0 with q=0 → +∞.
+  *
+  * Also the one definition of each aggregate the distribution checks
+  * share, batch and stream alike: [[cappedCounts]] (categorical KL,
+  * chi-square, bootstrapped KS, Cramér's φ), [[binCounts]] (continuous and
+  * auto KL, `StreamingValidate.continuousDriftStream`) and
+  * [[expectedWeights]] (continuous KL and its stream twin). */
 object KlMath {
   /** Driver-side cap for the categorical value histogram (fail-loud above;
     * the reference's pandas path has the same implicit driver-memory
@@ -1081,30 +1088,60 @@ object KlMath {
     }
   }
 
-  /** One-pass histogram aggregate (np.histogram semantics: last bin
-    * right-closed; ±∞ edges compare like any IEEE double) feeding
-    * [[continuousCombine]]. */
-  def continuousResult(df: DataFrame, column: String, binEdges: Seq[Double],
-      binWeights: Seq[Double], tailWeights: Option[(Double, Double)],
-      tailWeightHoldout: Double, internalWeightHoldout: Double)
-      : (Double, Map[String, Any]) = {
-    val c = col(column)
-    val binCols = binWeights.indices.map { i =>
+  /** The capped value_counts behind every categorical check: `frame`
+    * grouped by `keys` with the group size as `n`, in no particular order.
+    * More than `MaxCategories` groups fail loudly with the caller's
+    * `tooMany` message instead of OOMing the driver with an uncapped
+    * collect. */
+  def cappedCounts(frame: DataFrame, keys: Column*)(tooMany: => String)
+      : Array[Row] = {
+    val rows = frame.groupBy(keys: _*).agg(count(lit(1)).as("n"))
+      .limit(MaxCategories + 1).collect()
+    require(rows.length <= MaxCategories, tooMany)
+    rows
+  }
+
+  /** np.histogram counts of `c` over `binEdges` as aggregate Columns:
+    * `<prefix>b<i>` per bin (half-open, the last one right-closed; ±∞
+    * edges compare like any IEEE double), then `<prefix>below`,
+    * `<prefix>above` and the non-null count `<prefix>nn`. */
+  def binCounts(c: Column, binEdges: Seq[Double], prefix: String)
+      : Seq[Column] = {
+    val last = binEdges.size - 2
+    (0 to last).map { i =>
       val inBin =
-        if (i == binWeights.size - 1) c >= binEdges(i) && c <= binEdges(i + 1)
+        if (i == last) c >= binEdges(i) && c <= binEdges(i + 1)
         else c >= binEdges(i) && c < binEdges(i + 1)
-      sum(when(c.isNotNull && inBin, 1L).otherwise(0L)).as(s"b$i")
-    }
-    val aggs = binCols ++ Seq(
-      sum(when(c.isNotNull && c < binEdges.head, 1L).otherwise(0L)).as("below"),
-      sum(when(c.isNotNull && c > binEdges.last, 1L).otherwise(0L)).as("above"),
-      count(c).as("nn"))
+      sum(when(c.isNotNull && inBin, 1L).otherwise(0L)).as(s"${prefix}b$i")
+    } ++ Seq(
+      sum(when(c.isNotNull && c < binEdges.head, 1L).otherwise(0L))
+        .as(s"${prefix}below"),
+      sum(when(c.isNotNull && c > binEdges.last, 1L).otherwise(0L))
+        .as(s"${prefix}above"),
+      count(c).as(s"${prefix}nn"))
+  }
+
+  /** One aggregate of [[binCounts]] over `df`, each count as a fraction of
+    * the non-null count: (per-bin weights, below, above). */
+  def binFractions(df: DataFrame, column: String, binEdges: Seq[Double])
+      : (Seq[Double], Double, Double) = {
+    val aggs = binCounts(col(column), binEdges, "")
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     val nn = row.getAs[Long]("nn").toDouble
-    val obsW = binWeights.indices.map(i => row.getAs[Long](s"b$i") / nn)
-    continuousCombine(binEdges, binWeights, tailWeights, tailWeightHoldout,
-      internalWeightHoldout, obsW,
+    ((0 until binEdges.size - 1).map(i => row.getAs[Long](s"b$i") / nn),
       row.getAs[Long]("below") / nn, row.getAs[Long]("above") / nn)
+  }
+
+  /** Expected bin weights scaled for both holdouts, the internal holdout
+    * spread over the zero-weight bins (kl_divergence.py:706-723). */
+  def expectedWeights(binWeights: Seq[Double], tailWeightHoldout: Double,
+      internalWeightHoldout: Double): Seq[Double] = {
+    val scaled = binWeights.map(_ *
+      (1 - tailWeightHoldout - internalWeightHoldout))
+    val zeroCount = scaled.count(_ == 0.0)
+    if (internalWeightHoldout > 0 && zeroCount > 0)
+      scaled.map(w => if (w == 0.0) internalWeightHoldout / zeroCount else w)
+    else scaled
   }
 
   /** The reference's four endpoint cases (kl_divergence.py:724-860):
@@ -1115,15 +1152,8 @@ object KlMath {
       tailWeights: Option[(Double, Double)], tailWeightHoldout: Double,
       internalWeightHoldout: Double, obsW: Seq[Double],
       below: Double, above: Double): (Double, Map[String, Any]) = {
-    // expected weights scaled for holdouts; internal holdout spread over
-    // zero-weight bins (kl_divergence.py:706-723)
-    val scaled = binWeights.map(_ *
-      (1 - tailWeightHoldout - internalWeightHoldout))
-    val zeroCount = scaled.count(_ == 0.0)
-    val expW =
-      if (internalWeightHoldout > 0 && zeroCount > 0)
-        scaled.map(w => if (w == 0.0) internalWeightHoldout / zeroCount else w)
-      else scaled
+    val expW = expectedWeights(binWeights, tailWeightHoldout,
+      internalWeightHoldout)
     val leftInf = binEdges.head.isNegInfinity
     val rightInf = binEdges.last.isPosInfinity
     val (expBins, combExp, expTail, expMain, combObs, obsTail, obsMain) =
@@ -1189,11 +1219,8 @@ final case class ExpectColumnKlDivergenceToBeLessThan(column: String,
     // categorical KL is driver-side arithmetic over the value histogram by
     // nature (as in the reference) — but a high-cardinality column must
     // fail LOUDLY instead of OOMing the driver with an uncapped collect
-    val rows = df.filter(col(column).isNotNull).groupBy(col(column))
-      .agg(count(lit(1)).as("n"))
-      .limit(KlMath.MaxCategories + 1).collect()
-    require(rows.length <= KlMath.MaxCategories,
-      s"categorical KL: column '$column' has more than " +
+    val rows = KlMath.cappedCounts(df.filter(col(column).isNotNull),
+      col(column))(s"categorical KL: column '$column' has more than " +
         s"${KlMath.MaxCategories} distinct values — use the continuous " +
         "(binned) form for high-cardinality columns")
     val counts = rows.map(r => keyOf(r.get(0)) -> r.getLong(1)).toMap
@@ -1289,8 +1316,9 @@ final case class ExpectColumnKlDivergenceContinuousToBeLessThan(column: String,
       throw new IllegalArgumentException(
         "There can be no tail weights for partitions with one or both endpoints at infinity")
 
-    val (kl, details) = KlMath.continuousResult(df, column, binEdges,
-      binWeights, tailWeights, tailWeightHoldout, internalWeightHoldout)
+    val (obsW, below, above) = KlMath.binFractions(df, column, binEdges)
+    val (kl, details) = KlMath.continuousCombine(binEdges, binWeights,
+      tailWeights, tailWeightHoldout, internalWeightHoldout, obsW, below, above)
     KlMath.evr(expectationType, kwargs, kl, threshold, details)
   }
 }
@@ -1300,17 +1328,15 @@ final case class ExpectColumnKlDivergenceContinuousToBeLessThan(column: String,
   * min/max), `ntile`/`quantile`/`percentile` (edges at i/n quantiles), and
   * `auto` (max of Sturges and Freedman-Diaconis bin counts, then uniform).
   * Quantiles use Spark's EXACT `percentile` (linear interpolation —
-  * identical to DuckDB quantile_cont) rather than approxQuantile so edges
-  * are deterministic and oracle-checkable; swap in approxQuantile via
-  * `relativeError` for 100-TB columns where exactness isn't required. */
+  * identical to DuckDB quantile_cont), not a Greenwald-Khanna sketch, so
+  * edges are deterministic and oracle-checkable. */
 object ColumnPartition {
   def compute(df: DataFrame, column: String, bins: String = "uniform",
-      nBins: Int = 10, relativeError: Option[Double] = None): Seq[Double] =
+      nBins: Int = 10): Seq[Double] =
     bins match {
       case "uniform" => uniform(df, column, nBins)
-      case "ntile" | "quantile" | "percentile" =>
-        quantile(df, column, nBins, relativeError)
-      case "auto" => auto(df, column, relativeError)
+      case "ntile" | "quantile" | "percentile" => quantile(df, column, nBins)
+      case "auto" => auto(df, column)
       case other => throw new IllegalArgumentException(
         s"Invalid parameter for bins argument: $other")
     }
@@ -1326,22 +1352,12 @@ object ColumnPartition {
   private def edges(lo: Double, hi: Double, n: Int): Seq[Double] =
     (0 to n).map(i => lo + (hi - lo) * i / n)
 
-  /** Edges at quantiles 0, 1/n, …, 1 (exact unless relativeError given). */
-  def quantile(df: DataFrame, column: String, nBins: Int = 10,
-      relativeError: Option[Double] = None): Seq[Double] = {
+  /** Edges at the exact quantiles 0, 1/n, …, 1. */
+  def quantile(df: DataFrame, column: String, nBins: Int = 10): Seq[Double] = {
     val qs = (0 to nBins).map(_.toDouble / nBins)
-    quantilesOf(df, column, qs, relativeError)
-  }
-
-  private def quantilesOf(df: DataFrame, column: String, qs: Seq[Double],
-      relativeError: Option[Double]): Seq[Double] = relativeError match {
-    case Some(err) =>
-      df.stat.approxQuantile(column, qs.toArray, err).toSeq
-    case None =>
-      val r = df.filter(col(column).isNotNull)
-        .agg(percentile(col(column).cast(DoubleType),
-          typedLit(qs)).as("q")).head()
-      r.getAs[scala.collection.Seq[Double]]("q").toSeq
+    df.filter(col(column).isNotNull)
+      .agg(percentile(col(column).cast(DoubleType), typedLit(qs)).as("q"))
+      .head().getAs[scala.collection.Seq[Double]]("q").toSeq
   }
 
   /** numpy histogram_bin_edges("auto") port (column_partition.py:169-215):
@@ -1351,22 +1367,15 @@ object ColumnPartition {
     * ⌈log2(n+1)⌉ is computed as bitLength(n) — EXACT integer arithmetic
     * (identical to DuckDB's length(bin(n))), where ceil over a libm log
     * could flip by one when n+1 sits within an ulp of a power of two.
-    * The exact path is ONE aggregate (quantiles + count fused). */
-  def auto(df: DataFrame, column: String,
-      relativeError: Option[Double] = None): Seq[Double] = {
-    val (nonnull, qs) = relativeError match {
-      case Some(err) =>
-        (df.filter(col(column).isNotNull).count(),
-          df.stat.approxQuantile(column, Array(0.0, 0.25, 0.75, 1.0), err).toSeq)
-      case None =>
-        val r = df.filter(col(column).isNotNull)
-          .agg(count(lit(1)).as("n"),
-            percentile(col(column).cast(DoubleType),
-              typedLit(Seq(0.0, 0.25, 0.75, 1.0))).as("q")).head()
-        (r.getAs[Long]("n"), r.getAs[scala.collection.Seq[Double]]("q").toSeq)
-    }
+    * Quantiles and count come from ONE aggregate. */
+  def auto(df: DataFrame, column: String): Seq[Double] = {
+    val r = df.filter(col(column).isNotNull)
+      .agg(count(lit(1)).as("n"),
+        percentile(col(column).cast(DoubleType),
+          typedLit(Seq(0.0, 0.25, 0.75, 1.0))).as("q")).head()
+    val nonnull = r.getAs[Long]("n")
     require(nonnull > 0, s"column.partition: no non-null values in $column")
-    val Seq(lo, q25, q75, hi) = qs
+    val Seq(lo, q25, q75, hi) = r.getAs[scala.collection.Seq[Double]]("q").toSeq
     val sturgesBins = 64 - java.lang.Long.numberOfLeadingZeros(nonnull) // bitLength
     val iqr = q75 - q25
     val nBins =
@@ -1409,29 +1418,13 @@ final case class ExpectColumnKlDivergenceAutoToBeLessThan(column: String,
     if (tailWeightHoldout != 0) throw new IllegalArgumentException(
       "tail_weight_holdout must be 0 when using tail_weights in partition object")
     val edges = ColumnPartition.compute(df, column, bins, nBins)
-    val c = col(column)
-    val n = edges.size - 1
     // ONE histogram aggregate serves as both the partition weights and the
     // observed counts (the reference's auto path compares the batch against
     // a partition built from itself — no second bucketize pass needed)
-    val binCols = (0 until n).map { i =>
-      val inBin =
-        if (i == n - 1) c >= edges(i) && c <= edges(i + 1)
-        else c >= edges(i) && c < edges(i + 1)
-      sum(when(c.isNotNull && inBin, 1L).otherwise(0L)).as(s"b$i")
-    }
-    val aggs = binCols ++ Seq(
-      sum(when(c.isNotNull && c < edges.head, 1L).otherwise(0L)).as("below"),
-      sum(when(c.isNotNull && c > edges.last, 1L).otherwise(0L)).as("above"),
-      count(c).as("nn"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val nonnull = row.getAs[Long]("nn").toDouble
-    val weights = (0 until n).map(i => row.getAs[Long](s"b$i") / nonnull)
+    val (weights, below, above) = KlMath.binFractions(df, column, edges)
     val tw = (1 - weights.sum) / 2
     val (kl, details) = KlMath.continuousCombine(edges, weights,
-      Some((tw, tw)), 0.0, internalWeightHoldout, obsW = weights,
-      below = row.getAs[Long]("below") / nonnull,
-      above = row.getAs[Long]("above") / nonnull)
+      Some((tw, tw)), 0.0, internalWeightHoldout, obsW = weights, below, above)
     KlMath.evr(expectationType, kwargs, kl, threshold, details)
   }
 }
@@ -1464,11 +1457,8 @@ final case class ExpectColumnChisquareTestPValueToBeGreaterThan(
   val expectationType = "expect_column_chisquare_test_p_value_to_be_greater_than"
   def kwargs = Map("column" -> column, "p" -> p)
   def run(df: DataFrame): Evr = {
-    val rows = df.filter(col(column).isNotNull).groupBy(col(column))
-      .agg(count(lit(1)).as("n"))
-      .limit(KlMath.MaxCategories + 1).collect()
-    require(rows.length <= KlMath.MaxCategories,
-      s"chi-square test: column '$column' has more than " +
+    val rows = KlMath.cappedCounts(df.filter(col(column).isNotNull),
+      col(column))(s"chi-square test: column '$column' has more than " +
         s"${KlMath.MaxCategories} distinct values")
     val counts = rows.map(r => KlMath.keyOf(r.get(0)) -> r.getLong(1)).toMap
     val n = counts.valuesIterator.sum
@@ -1649,17 +1639,12 @@ final case class ExpectColumnBootstrappedKsTestPValueToBeGreaterThan(
 
   def run(df: DataFrame): Evr = {
     if (exact) return runExact(df)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(col(column).cast("double").as("v"))
-      .filter($"v".isNotNull && !isnan($"v"))
-      .groupBy($"v").agg(count(lit(1)).as("n"))
-      .orderBy($"v")
-      .limit(KlMath.MaxCategories + 1)
-      .as[(Double, Long)].collect()
-    require(rows.length <= KlMath.MaxCategories,
+    val v = col(column).cast("double")
+    val rows = KlMath.cappedCounts(df.filter(v.isNotNull && !isnan(v)), v)(
       s"bootstrapped KS: column '$column' has more than " +
         s"${KlMath.MaxCategories} distinct values — bucketize first")
+      .map(r => (r.getDouble(0), r.getLong(1)))
+      .sortBy(_._1)(Ordering.Double.TotalOrdering)
     if (rows.isEmpty)
       return Evr(expectationType, kwargs, success = false,
         Map("observed_value" -> null))
@@ -1816,12 +1801,12 @@ final case class ExpectColumnPairCramersPhiValueToBeLessThan(
               }
             }
           case Some(k) =>
-            val uniq = df.select(base.cast(StringType).as("u"))
-              .filter(col("u").isNotNull).distinct()
-              .orderBy("u").limit(KlMath.MaxCategories + 1)
-              .collect().map(_.getString(0))
-            require(uniq.length <= KlMath.MaxCategories,
+            val u = base.cast(StringType)
+            // sorted like Spark's orderBy: UTF-8 bytes, not UTF-16 units
+            val uniq = KlMath.cappedCounts(df.filter(u.isNotNull), u)(
               s"cramers phi: column '$c' has too many distinct values to bin")
+              .map(r => UTF8String.fromString(r.getString(0))).sorted
+              .map(_.toString)
             // contiguous split of the sorted uniques into k groups
             // (np.array_split sizing: first (len % k) groups get one extra)
             val base_ = uniq.length / k; val extra = uniq.length % k
@@ -1848,11 +1833,9 @@ final case class ExpectColumnPairCramersPhiValueToBeLessThan(
   def run(df: DataFrame): Evr = {
     val ka = binned(df, columnA, binsA, nBinsA)
     val kb = binned(df, columnB, binsB, nBinsB)
-    val cells = df.select(ka.as("a"), kb.as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull) // out-of-bin drops
-      .groupBy("a", "b").agg(count(lit(1)).as("n"))
-      .limit(KlMath.MaxCategories + 1).collect()
-    require(cells.length <= KlMath.MaxCategories,
+    val cells = KlMath.cappedCounts(df.select(ka.as("a"), kb.as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull), // out-of-bin drops
+      col("a"), col("b"))(
       "cramers phi: contingency table exceeds the category cap — bin first")
     if (cells.isEmpty)
       return Evr(expectationType, kwargs, success = false,

@@ -18,11 +18,9 @@ object Evaluation {
     * zero counts, not the NULLs a bare sum-over-nothing returns. */
   def binaryConfusion(df: DataFrame, labelCol: Column,
       predCol: Column): DataFrame = {
-    val counts = df.agg(
-      coalesce(sum(when(labelCol && predCol, 1L).otherwise(0L)), lit(0L)).as("tp"),
-      coalesce(sum(when(!labelCol && predCol, 1L).otherwise(0L)), lit(0L)).as("fp"),
-      coalesce(sum(when(labelCol && !predCol, 1L).otherwise(0L)), lit(0L)).as("fn"),
-      coalesce(sum(when(!labelCol && !predCol, 1L).otherwise(0L)), lit(0L)).as("tn"))
+    val sums = confusionSums(labelCol, predCol)
+      .map { case (name, s) => coalesce(s, lit(0L)).as(name) }
+    val counts = df.agg(sums.head, sums.tail: _*)
     // degenerate matrices (no predicted / no actual positives) → NULL
     // metric, not an ANSI DIVIDE_BY_ZERO that kills the job
     def ratio(num: Column, denom: Column): Column =
@@ -33,6 +31,14 @@ object Evaluation {
       ratio(col("tp"), col("tp") + col("fn")).as("recall"),
       ratio(col("tp") * 2, col("tp") * 2 + col("fp") + col("fn")).as("f1"))
   }
+
+  /** The confusion counts tp, fp, fn, tn as (name, sum-when aggregate)
+    * pairs, shared by [[binaryConfusion]] and the windowed
+    * `StreamingValidate.confusionDriftStream`. */
+  def confusionSums(labelCol: Column, predCol: Column): Seq[(String, Column)] =
+    Seq("tp" -> (labelCol && predCol), "fp" -> (!labelCol && predCol),
+      "fn" -> (labelCol && !predCol), "tn" -> (!labelCol && !predCol))
+      .map { case (name, hit) => name -> sum(when(hit, 1L).otherwise(0L)) }
 
   /** Per-query recall of an approximate neighbor list against the exact
     * one: |approx ∩ exact| / |exact|. The quality dial every ANN

@@ -123,18 +123,19 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 4, bits: Int = 8,
       maxBucket: Int = Lsh.DefaultMaxBucket): (DataFrame, LshStats) = {
-    // single band-kernel evaluation under the default cap (see
-    // Lsh.withCappedBuckets): cache for census + join, checkpoint ids
-    val (cand, stats) = Lsh.withCappedBuckets(
-      bandTable(corpus, idCol, vecCol, bands, bits), maxBucket, "lshTopK") { cb =>
-      val qb = bandTable(queries, idCol, vecCol, bands, bits)
-        .toDF("query_id", "band_idx", "band_key")
-      cb.select(col("doc").as("neighbor_id"), col("band_idx"), col("band_key"))
-        .join(broadcast(qb), Seq("band_idx", "band_key"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates("query_id", "neighbor_id")
-    }
+    // capBuckets, as in embeddingNearDupPairsWithStats: the cheap
+    // sign-band kernel is re-evaluated by the census instead of cached,
+    // so the operator stays one lazy plan and pins nothing
+    val (cb, stats) = Lsh.capBuckets(
+      bandTable(corpus, idCol, vecCol, bands, bits), maxBucket, "lshTopK")
+    val qb = bandTable(queries, idCol, vecCol, bands, bits)
+      .toDF("query_id", "band_idx", "band_key")
+    val cand = cb.select(col("doc").as("neighbor_id"), col("band_idx"),
+        col("band_key"))
+      .join(broadcast(qb), Seq("band_idx", "band_key"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select("query_id", "neighbor_id")
+      .dropDuplicates("query_id", "neighbor_id")
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       l2norm(col(vecCol)).as("__cn"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),

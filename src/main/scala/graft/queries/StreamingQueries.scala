@@ -49,13 +49,8 @@ object StreamingQueries {
     * query terminates, so the replay parquet can be deleted eagerly
     * (repeated Verify/bench invocations must not accumulate temp copies
     * of the transcript table). */
-  private def dropStaged(staged: String): Unit = {
-    val root = java.nio.file.Paths.get(staged)
-    val all = java.nio.file.Files.walk(root)
-    try all.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    finally all.close()
-  }
+  private def dropStaged(staged: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q60_stream_validate" -> ((s, dir) => {

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.MapExpectation
+import graft.core.{KlMath, MapExpectation}
+import graft.operators.Evaluation
 import graft.transcripts.QualityFilter
 
 /** Structured-Streaming validation. The reference is strictly batch
@@ -22,23 +23,38 @@ import graft.transcripts.QualityFilter
   * Every other quality-filter column is stateless, so a stream takes it
   * from the batch kernel unchanged: `QualityFilter.withScoresFused(stream)`
   * (StreamingSpec pins it row for row against the batch pipeline).
+  *
+  * The drift monitors share their aggregates with the batch checks: the
+  * confusion sums with `Evaluation.binaryConfusion`, the bin counts and
+  * holdout-scaled expected weights with the continuous KL expectation
+  * (`KlMath`). Every operator starts from one event-time prefix,
+  * [[watermarked]], and every windowed one from [[windowedAgg]].
   */
 object StreamingValidate {
 
-  /** Windowed suite metrics for map expectations over a stream. */
-  def validateStream(stream: DataFrame, exps: Seq[(String, MapExpectation)],
-      tsCol: String, watermarkDelay: String, windowDur: String): DataFrame = {
-    val aggs = exps.flatMap { case (name, e) =>
-      Seq(
-        sum(when(e.unexpectedCondition, 1L).otherwise(0L)).as(s"${name}_unexpected"),
-        sum(when(e.missingCondition, 1L).otherwise(0L)).as(s"${name}_missing"))
-    }
-    stream
-      .withColumn(tsCol, col(tsCol).cast("timestamp")) // NTZ parquet → event time
+  /** The event-time prefix of every operator here: `tsCol` cast to a
+    * timestamp (parquet reads it back as TIMESTAMP_NTZ) and watermarked. */
+  private def watermarked(stream: DataFrame, tsCol: String,
+      watermarkDelay: String): DataFrame =
+    stream.withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, watermarkDelay)
+
+  /** One watermarked tumbling-window aggregate: `window`, `element_count`,
+    * then `aggs`. */
+  private def windowedAgg(stream: DataFrame, tsCol: String,
+      watermarkDelay: String, windowDur: String)(aggs: Seq[Column]): DataFrame =
+    watermarked(stream, tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDur))
       .agg(count(lit(1)).as("element_count"), aggs: _*)
-  }
+
+  /** Windowed suite metrics for map expectations over a stream. */
+  def validateStream(stream: DataFrame, exps: Seq[(String, MapExpectation)],
+      tsCol: String, watermarkDelay: String, windowDur: String): DataFrame =
+    windowedAgg(stream, tsCol, watermarkDelay, windowDur)(exps.flatMap {
+      case (name, e) => Seq(
+        sum(when(e.unexpectedCondition, 1L).otherwise(0L)).as(s"${name}_unexpected"),
+        sum(when(e.missingCondition, 1L).otherwise(0L)).as(s"${name}_missing"))
+    })
 
   final case class TurnKey(conv_id: String, turn_idx: Int, role: String)
   final case class RoleState(lastIdx: Int, lastRole: String)
@@ -80,19 +96,15 @@ object StreamingValidate {
     * "is my cheap filter still agreeing with the full one as the stream
     * drifts?". Stateless columns only, ONE watermarked sum-when
     * aggregate; exact long counts, so downstream ratios are
-    * bit-deterministic (see Evaluation.binaryConfusion for the batch
-    * twin). */
-  def confusionDriftStream(stream: DataFrame, labelCol: org.apache.spark.sql.Column,
-      predCol: org.apache.spark.sql.Column, tsCol: String,
+    * bit-deterministic. The sums are Evaluation.binaryConfusion's, which
+    * coalesces them to 0 for an empty input; a window always holds a
+    * row, so its sums stay bare (and keep their nullable schema). */
+  def confusionDriftStream(stream: DataFrame, labelCol: Column,
+      predCol: Column, tsCol: String,
       watermarkDelay: String, windowDur: String): DataFrame =
-    stream.withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(count(lit(1)).as("element_count"),
-        sum(when(labelCol && predCol, 1L).otherwise(0L)).as("tp"),
-        sum(when(!labelCol && predCol, 1L).otherwise(0L)).as("fp"),
-        sum(when(labelCol && !predCol, 1L).otherwise(0L)).as("fn"),
-        sum(when(!labelCol && !predCol, 1L).otherwise(0L)).as("tn"))
+    windowedAgg(stream, tsCol, watermarkDelay, windowDur)(
+      Evaluation.confusionSums(labelCol, predCol)
+        .map { case (name, s) => s.as(name) })
 
   /** Streaming distribution-drift monitor: per-event-time-window
     * categorical KL divergence of the stream's value histogram against an
@@ -122,12 +134,8 @@ object StreamingValidate {
     val counts = values.zipWithIndex.map { case (v, i) =>
       sum(when(c === lit(v), 1L).otherwise(0L)).as(s"__n$i")
     }
-    val windowed = stream
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(count(lit(1)).as("element_count"),
-        (counts :+ count(c).as("__nn")): _*)
+    val windowed = windowedAgg(stream, tsCol, watermarkDelay, windowDur)(
+      counts :+ count(c).as("__nn"))
     // scipy-entropy arithmetic as columns: p from the window's counts, q
     // from the holdout-scaled expected weights (coefficients precomputed
     // in Scala so both engines see identical IEEE doubles)
@@ -152,7 +160,7 @@ object StreamingValidate {
 
   /** scipy-entropy term as a Column: p·ln(p/q), with q=0 driving +∞ on any
     * observed mass (shared by the two drift monitors). */
-  private def klTerm(p: org.apache.spark.sql.Column, q: Double) =
+  private def klTerm(p: Column, q: Double) =
     if (q == 0.0)
       when(p > 0.0, lit(Double.PositiveInfinity)).otherwise(lit(0.0))
     else when(p > 0.0, p * log(p / lit(q))).otherwise(lit(0.0))
@@ -172,33 +180,12 @@ object StreamingValidate {
     require(binEdges.size == binWeights.size + 1 &&
       binEdges.sliding(2).forall(p => p(1) > p.head),
       "bins must be |weights|+1 strictly increasing edges")
-    val c = col(valueCol)
-    val binCols = binWeights.indices.map { i =>
-      val inBin =
-        if (i == binWeights.size - 1) c >= binEdges(i) && c <= binEdges(i + 1)
-        else c >= binEdges(i) && c < binEdges(i + 1)
-      sum(when(c.isNotNull && inBin, 1L).otherwise(0L)).as(s"__b$i")
-    }
-    val windowed = stream
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(count(lit(1)).as("element_count"),
-        (binCols ++ Seq(
-          sum(when(c.isNotNull && c < binEdges.head, 1L).otherwise(0L))
-            .as("__below"),
-          sum(when(c.isNotNull && c > binEdges.last, 1L).otherwise(0L))
-            .as("__above"),
-          count(c).as("__nn"))): _*)
-    // expected weights: holdout-scaled + internal fill, precomputed in
-    // Scala so both engines see identical IEEE doubles
-    val scaled = binWeights.map(_ *
-      (1 - tailWeightHoldout - internalWeightHoldout))
-    val zeroCount = scaled.count(_ == 0.0)
-    val expW =
-      if (internalWeightHoldout > 0 && zeroCount > 0)
-        scaled.map(w => if (w == 0.0) internalWeightHoldout / zeroCount else w)
-      else scaled
+    val windowed = windowedAgg(stream, tsCol, watermarkDelay, windowDur)(
+      KlMath.binCounts(col(valueCol), binEdges, "__"))
+    // expected weights precomputed in Scala, so both engines see identical
+    // IEEE doubles
+    val expW = KlMath.expectedWeights(binWeights, tailWeightHoldout,
+      internalWeightHoldout)
     val nn = col("__nn").cast("double")
     val terms =
       klTerm(col("__below").cast("double") / nn, tailWeightHoldout / 2) +:
@@ -223,11 +210,9 @@ object StreamingValidate {
     * digest per distinct doc inside the watermark horizon. */
   def exactDedupStream(stream: DataFrame, textCol: String, tsCol: String,
       watermarkDelay: String): DataFrame =
-    stream
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
+    watermarked(stream, tsCol, watermarkDelay)
       .withColumn("__text_hash",
         md5(graft.operators.Dedup.normText(col(textCol))))
-      .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("__text_hash")
       .drop("__text_hash")
 }

@@ -164,4 +164,29 @@ class DistributionalSpec extends AnyFunSuite {
     assert(evr.result("observed_value") == null)
     assert(e.kwargs("exact") == true) // resolution mode recorded in kwargs
   }
+
+  test("every capped categorical check fails loudly above MaxCategories") {
+    import spark.implicits._
+    val n = KlMath.MaxCategories
+    val df = (0 to n).map(i => (i.toString, i.toDouble, i % 3))
+      .toDF("s", "x", "g")
+    val cases = Seq(
+      ExpectColumnKlDivergenceToBeLessThan("s", Seq("0"), Seq(1.0), 0.1) ->
+        s"categorical KL: column 's' has more than $n distinct values",
+      ExpectColumnChisquareTestPValueToBeGreaterThan("s", Seq("0"), Seq(1.0)) ->
+        s"chi-square test: column 's' has more than $n distinct values",
+      ExpectColumnBootstrappedKsTestPValueToBeGreaterThan(
+        "x", Seq(0.0, n.toDouble), Seq(1.0)) ->
+        s"bootstrapped KS: column 'x' has more than $n distinct values",
+      ExpectColumnPairCramersPhiValueToBeLessThan("s", "g") ->
+        "cramers phi: contingency table exceeds the category cap",
+      ExpectColumnPairCramersPhiValueToBeLessThan("s", "g", nBinsA = Some(4)) ->
+        "cramers phi: column 's' has too many distinct values to bin")
+    val evrs = Graft.validate(df, Suite("cap", cases.map(_._1))).results
+    assert(evrs.size == cases.size)
+    for ((evr, (_, msg)) <- evrs.zip(cases)) {
+      assert(!evr.success)
+      assert(evr.exception.exists(_.contains(msg)), evr.exception)
+    }
+  }
 }
